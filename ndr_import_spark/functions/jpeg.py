@@ -22,10 +22,12 @@ images:
   bit-for-bit.  Used for fixtures, roundtrip tests and JPEG-in →
   JPEG-out resizing.
 
-Design notes: the bit-serial Huffman loop is pure Python (per-image, runs
-inside Arrow-batched `mapInPandas` tasks — never per-pixel Python); the
-per-pixel math (dequantise, IDCT, upsample, colour convert) is vectorised
-numpy over all blocks of a component at once.  The IDCT is the exact
+Design notes: the Huffman loop is pure Python (per-image, runs inside
+Arrow-batched `mapInPandas` tasks — never per-pixel Python) and
+table-driven: a word-wise bit buffer and a 9-bit lookahead table per DHT
+table (`_HuffTable`) decode most symbols in one step; the per-pixel math
+(dequantise, IDCT, upsample, colour convert) is vectorised numpy over
+all blocks of a component at once.  The IDCT is the exact
 orthonormal DCT-III matrix product — no fast-but-approximate integer
 kernel — so decode is deterministic across platforms.
 
@@ -60,6 +62,8 @@ ZIGZAG = np.array([
     58, 59, 52, 45, 38, 31, 39, 46,
     53, 60, 61, 54, 47, 55, 62, 63,
 ], dtype=np.int64)
+_ZIGZAG_LIST = ZIGZAG.tolist()
+_ZERO_BLOCK = [0] * 64
 
 # Annex K.1 / K.2 example quantisation tables (zigzag order)
 K_LUMA_QUANT = np.array([
@@ -160,20 +164,43 @@ def _dct_matrix() -> np.ndarray:
 _DCT_T = _dct_matrix()
 
 
-def _build_decode_table(bits: list[int], huffval: list[int]) -> dict:
-    """Canonical Huffman decode map: {code_length: {code: symbol}}
-    (T.81 Annex C code assignment)."""
-    table: dict[int, dict[int, int]] = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        table[length] = {}
-        for _ in range(bits[length - 1]):
-            table[length][code] = huffval[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
+_LOOKAHEAD = 9  # bits peeked per Huffman decode
+
+
+class _HuffTable:
+    """One DHT table prepared for decoding.
+
+    `look` maps every 9-bit window of the stream to ``symbol << 4 |
+    length`` of the code it starts with, for codes of up to 9 bits
+    (libjpeg's lookahead table, jdhuff.c); a 0 entry means the window
+    begins a longer code (or no code at all) and sends the decoder to
+    `codes`, the canonical {code_length: {code: symbol}} map (T.81
+    Annex C code assignment), walked from length 10 upward."""
+
+    __slots__ = ("look", "codes")
+
+    def __init__(self, bits: list[int], huffval: list[int]) -> None:
+        codes: dict[int, dict[int, int]] = {}
+        code = 0
+        k = 0
+        for length in range(1, 17):
+            codes[length] = {}
+            for _ in range(bits[length - 1]):
+                codes[length][code] = huffval[k]
+                code += 1
+                k += 1
+            code <<= 1
+        self.codes = codes
+        look = [0] * (1 << _LOOKAHEAD)
+        # longest first, so that where a corrupt table makes one code the
+        # prefix of another the shorter one wins, as in the bit walk
+        for length in range(_LOOKAHEAD, 0, -1):
+            span = 1 << (_LOOKAHEAD - length)
+            for code, sym in codes[length].items():
+                if code < (1 << length):  # overfull tables assign more
+                    base = code * span
+                    look[base:base + span] = [sym << 4 | length] * span
+        self.look = look
 
 
 def _build_encode_table(bits: list[int], huffval: list[int]) -> dict:
@@ -191,57 +218,97 @@ def _build_encode_table(bits: list[int], huffval: list[int]) -> dict:
 
 
 class _BitReader:
-    """MSB-first bit reader over the entropy-coded segment, unstuffing
-    FF00 on the fly and stopping (with alignment) at restart markers."""
+    """MSB-first bit reader over one scan's entropy-coded segment.
 
-    __slots__ = ("data", "pos", "buf", "cnt")
+    The buffer `buf` holds `cnt` unread bits and is topped up 4 bytes at
+    a time where they hold no 0xFF, else a byte at a time, unstuffing
+    FF00 on the way, so a caller takes up to 16 bits in one step.  At a
+    marker the reader supplies 1-bits without moving past it:
+    spec-conformant streams only pad with 1-bits before a marker.  Past
+    the end of the data (or after a final 0xFF) it supplies 0-bits and
+    counts them in `pad`; consuming any of them is the underrun, which
+    `check` raises — callers check after every MCU and before raising any
+    other error (`fail`), so a short stream raises the underrun error
+    exactly when a bit-at-a-time reader would.  `virt` counts the bytes
+    supplied at a marker or past the end, which `restart` must not step
+    back over.
+
+    The sequential scan loop keeps `buf` and `cnt` in locals and hands
+    them back (`br.buf, br.cnt = buf, cnt`) before calling a method."""
+
+    __slots__ = ("data", "pos", "buf", "cnt", "pad", "virt", "eof")
 
     def __init__(self, data: bytes, pos: int) -> None:
         self.data = data
         self.pos = pos
         self.buf = 0
         self.cnt = 0
+        self.pad = 0
+        self.virt = 0
+        self.eof = "entropy-coded data underrun"
 
-    def _fill(self) -> None:
+    def fill(self, buf: int, cnt: int, need: int) -> tuple[int, int]:
+        """(buf, cnt) topped up to at least `need` bits."""
         d = self.data
-        if self.pos >= len(d):
-            raise JpegError("entropy-coded data underrun")
-        b = d[self.pos]
-        self.pos += 1
-        if b == 0xFF:
-            if self.pos >= len(d):
-                raise JpegError("truncated after 0xFF in entropy data")
-            nxt = d[self.pos]
-            if nxt == 0x00:
-                self.pos += 1  # stuffed byte
+        n = len(d)
+        pos = self.pos
+        while cnt < need:
+            word = d[pos:pos + 4]
+            if len(word) == 4 and 0xFF not in word:  # no stuffing, no marker
+                pos += 4
+                buf = buf << 32 | int.from_bytes(word, "big")
+                cnt += 32
+                continue
+            b = d[pos] if pos < n else None
+            if b is not None and b != 0xFF:
+                pos += 1
+                buf = buf << 8 | b
+            elif b is None or pos + 1 >= n:
+                if b is not None:
+                    self.eof = "truncated after 0xFF in entropy data"
+                buf <<= 8
+                self.pad += 8
+                self.virt += 1
+            elif d[pos + 1] == 0x00:
+                pos += 2  # stuffed byte
+                buf = buf << 8 | 0xFF
             else:
-                # a real marker inside coded data: spec-conformant streams
-                # only pad with 1-bits before a marker, so treat any bits
-                # read past this point as padding
-                self.pos -= 1
-                self.buf = (self.buf << 8) | 0xFF
-                self.cnt += 8
-                return
-        self.buf = (self.buf << 8) | b
-        self.cnt += 8
+                buf = buf << 8 | 0xFF  # a marker: 1-bits, stay before it
+                self.virt += 1
+            cnt += 8
+        self.pos = pos
+        return buf & ((1 << cnt) - 1), cnt
+
+    def check(self) -> None:
+        if self.cnt < self.pad:
+            raise JpegError(self.eof)
+
+    def fail(self, msg: str):
+        self.check()
+        raise JpegError(msg)
+
+    def read_bits(self, n: int) -> int:
+        if self.cnt < n:
+            self.buf, self.cnt = self.fill(self.buf, self.cnt, max(n, 16))
+        self.cnt -= n
+        return (self.buf >> self.cnt) & ((1 << n) - 1)
 
     def read_bit(self) -> int:
-        if self.cnt == 0:
-            self._fill()
+        if not self.cnt:
+            self.buf, self.cnt = self.fill(self.buf, self.cnt, 16)
         self.cnt -= 1
         return (self.buf >> self.cnt) & 1
 
-    def read_bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
-
     def restart(self) -> None:
         """Byte-align and consume an RSTn marker."""
-        self.buf = 0
-        self.cnt = 0
+        # step back over whole bytes loaded but not read: the marker
+        # search starts right after the last byte a bit was read from
         d = self.data
+        back = self.cnt >> 3
+        back -= min(back, self.virt)
+        for _ in range(back):
+            self.pos -= 2 if d[self.pos - 2:self.pos] == b"\xff\x00" else 1
+        self.buf = self.cnt = self.pad = self.virt = 0
         # skip pad bytes up to the marker
         while self.pos + 1 < len(d) and d[self.pos] != 0xFF:
             self.pos += 1
@@ -254,14 +321,32 @@ class _BitReader:
         self.pos += 2
 
 
-def _huff_decode(br: _BitReader, table: dict) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | br.read_bit()
-        sym = table[length].get(code)
+def _huff_decode(br: _BitReader, table: _HuffTable) -> int:
+    """Next Huffman symbol: one lookahead-table step for codes of up to
+    9 bits, else the walk over lengths 10..16 (the scan loop in
+    `_decode_scan` inlines the table step)."""
+    if br.cnt < 16:
+        br.buf, br.cnt = br.fill(br.buf, br.cnt, 16)
+    e = table.look[(br.buf >> (br.cnt - _LOOKAHEAD)) & ((1 << _LOOKAHEAD) - 1)]
+    if e:
+        br.cnt -= e & 15
+        return e >> 4
+    return _huff_decode_long(br, table)
+
+
+def _huff_decode_long(br: _BitReader, table: _HuffTable) -> int:
+    """Codes longer than the lookahead window, read on from its 9 bits
+    (the buffer holds at least 16 bits on entry)."""
+    br.cnt -= _LOOKAHEAD
+    code = (br.buf >> br.cnt) & ((1 << _LOOKAHEAD) - 1)
+    codes = table.codes
+    for length in range(_LOOKAHEAD + 1, 17):
+        br.cnt -= 1
+        code = code << 1 | (br.buf >> br.cnt) & 1
+        sym = codes[length].get(code)
         if sym is not None:
             return sym
-    raise JpegError("invalid Huffman code")
+    br.fail("invalid Huffman code")
 
 
 def _extend(v: int, t: int) -> int:
@@ -283,10 +368,12 @@ def decode_jpeg(data: bytes) -> tuple[int, int, int, bytes]:
         return _decode_markers(data)
     except JpegError:
         raise
-    except (IndexError, ValueError, struct.error) as exc:
+    except (IndexError, ValueError, OverflowError, struct.error) as exc:
         # truncated segment payloads surface as IndexError/struct.error
         # from slicing or as numpy shape ValueErrors (e.g. a DQT cut mid
-        # table) — all must honour the "garbage raises JpegError" contract
+        # table); a corrupt DHT can hold magnitude categories far above
+        # 11 bits, whose coefficients overflow the numpy planes — all must
+        # honour the "garbage raises JpegError" contract
         raise JpegError(f"truncated or corrupt JPEG stream: {exc}") from exc
 
 
@@ -344,7 +431,7 @@ def _decode_markers(data: bytes) -> tuple[int, int, int, bytes]:
                 cnt = sum(bits)
                 huffval = list(seg[i + 17 : i + 17 + cnt])
                 i += 17 + cnt
-                tbl = _build_decode_table(bits, huffval)
+                tbl = _HuffTable(bits, huffval)
                 (dc_tables if tc == 0 else ac_tables)[th] = tbl
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0 / SOF1 / SOF2
             precision = seg[0]
@@ -421,10 +508,12 @@ def _decode_scan(data, pos, frame, scan, qt, dc_tables, ac_tables, dri):
         # interpreting that as interleaved 2x2-block MCUs desynchronises
         # the Huffman stream on a conformant file)
         comps[0]["h"] = comps[0]["v"] = 1
+    if not all(1 <= c["h"] <= 4 and 1 <= c["v"] <= 4 for c in comps):
+        # T.81 B.2.2: H, V in 1..4 for every component (a 0 would divide
+        # by zero when the planes are upsampled)
+        raise JpegError("invalid sampling factors")
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
-    if hmax < 1 or vmax < 1 or hmax > 4 or vmax > 4:
-        raise JpegError("invalid sampling factors")
     mcux = -(-w // (8 * hmax))
     mcuy = -(-h // (8 * vmax))
     for c in comps:
@@ -432,8 +521,6 @@ def _decode_scan(data, pos, frame, scan, qt, dc_tables, ac_tables, dri):
             raise JpegError("scan does not cover every frame component")
         c["bw"] = mcux * c["h"]  # blocks per row in this component
         c["bh"] = mcuy * c["v"]
-        c["coef"] = np.zeros((c["bh"] * c["bw"], 8, 8), dtype=np.float64)
-        c["pred"] = 0
         td, ta = scan[c["id"]]
         if td not in dc_tables or ta not in ac_tables:
             raise JpegError("scan references undefined Huffman table")
@@ -441,41 +528,88 @@ def _decode_scan(data, pos, frame, scan, qt, dc_tables, ac_tables, dri):
             raise JpegError("component references undefined quant table")
         c["dc"] = dc_tables[td]
         c["ac"] = ac_tables[ta]
+    # natural-order coefficients, 64 per block, appended to a flat list
+    # per component in decode (MCU) order as the blocks arrive — so
+    # storage grows with the data actually decoded; one array is made
+    # after the scan.  `units` lists the data units of one MCU.
+    coefs = [[] for _ in comps]
+    units = [
+        (ci, coefs[ci], c["dc"].look, c["dc"], c["ac"].look, c["ac"])
+        for ci, c in enumerate(comps)
+        for _ in range(c["v"] * c["h"])
+    ]
+    preds = [0] * len(comps)
     br = _BitReader(data, pos)
-    zz = ZIGZAG  # local for the hot loop
-    total_mcus = mcux * mcuy
-    for m in range(total_mcus):
+    fill = br.fill
+    buf = cnt = 0
+    zz = _ZIGZAG_LIST
+    shift = _LOOKAHEAD
+    mask = (1 << _LOOKAHEAD) - 1
+    for m in range(mcux * mcuy):
         if dri and m > 0 and m % dri == 0:
+            br.buf, br.cnt = buf, cnt
             br.restart()
-            for c in comps:
-                c["pred"] = 0
-        my, mx = divmod(m, mcux)
-        for c in comps:
-            dctab, actab = c["dc"], c["ac"]
-            for by in range(c["v"]):
-                for bx in range(c["h"]):
-                    block = np.zeros(64, dtype=np.float64)
-                    t = _huff_decode(br, dctab)
-                    diff = _extend(br.read_bits(t), t) if t else 0
-                    c["pred"] += diff
-                    block[0] = c["pred"]
-                    k = 1
-                    while k < 64:
-                        rs = _huff_decode(br, actab)
-                        r, s = rs >> 4, rs & 15
-                        if s == 0:
-                            if r == 15:
-                                k += 16
-                                continue
-                            break  # EOB
-                        k += r
-                        if k > 63:
-                            raise JpegError("AC coefficient index out of range")
-                        block[zz[k]] = _extend(br.read_bits(s), s)
-                        k += 1
-                    bi = (my * c["v"] + by) * c["bw"] + (mx * c["h"] + bx)
-                    c["coef"][bi] = block.reshape(8, 8)
-
+            buf = cnt = 0
+            preds = [0] * len(comps)
+        for ci, coef, dclook, dctab, aclook, actab in units:
+            base = len(coef)
+            coef += _ZERO_BLOCK
+            # DC: the table step of _huff_decode, inlined
+            if cnt < 16:
+                buf, cnt = fill(buf, cnt, 16)
+            e = dclook[(buf >> (cnt - shift)) & mask]
+            if e:
+                cnt -= e & 15
+                t = e >> 4
+            else:
+                br.buf, br.cnt = buf, cnt
+                t = _huff_decode_long(br, dctab)
+                buf, cnt = br.buf, br.cnt
+            if t:
+                if cnt < t:
+                    buf, cnt = fill(buf, cnt, t)
+                cnt -= t
+                v = (buf >> cnt) & ((1 << t) - 1)
+                preds[ci] += v - (1 << t) + 1 if v < (1 << (t - 1)) else v
+            coef[base] = preds[ci]
+            k = 1
+            while k < 64:
+                if cnt < 16:
+                    buf, cnt = fill(buf, cnt, 16)
+                e = aclook[(buf >> (cnt - shift)) & mask]
+                if e:
+                    cnt -= e & 15
+                    rs = e >> 4
+                else:
+                    br.buf, br.cnt = buf, cnt
+                    rs = _huff_decode_long(br, actab)
+                    buf, cnt = br.buf, br.cnt
+                s = rs & 15
+                if s == 0:
+                    if rs == 0xF0:  # ZRL
+                        k += 16
+                        continue
+                    break  # EOB
+                k += rs >> 4
+                if k > 63:
+                    br.buf, br.cnt = buf, cnt
+                    br.fail("AC coefficient index out of range")
+                if cnt < s:
+                    buf, cnt = fill(buf, cnt, s)
+                cnt -= s
+                v = (buf >> cnt) & ((1 << s) - 1)
+                coef[base + zz[k]] = v - (1 << s) + 1 if v < (1 << (s - 1)) else v
+                k += 1
+        if cnt < br.pad:
+            raise JpegError(br.eof)
+    for c, coef in zip(comps, coefs):
+        # MCU order -> raster order of the component's blocks
+        c["coef"] = (
+            np.array(coef, dtype=np.float64)
+            .reshape(mcuy, mcux, c["v"], c["h"], 64)
+            .transpose(0, 2, 1, 3, 4)
+            .reshape(-1, 64)
+        )
     frame["hmax"], frame["vmax"] = hmax, vmax
     return _assemble(frame, qt)
 
@@ -540,10 +674,12 @@ def _init_progressive_frame(frame) -> None:
         # same T.81 A.2.2 rule as the sequential path: a single-component
         # frame is decoded non-interleaved with 1x1 effective sampling
         comps[0]["h"] = comps[0]["v"] = 1
+    if not all(1 <= c["h"] <= 4 and 1 <= c["v"] <= 4 for c in comps):
+        # T.81 B.2.2: H, V in 1..4 for every component (a 0 would divide
+        # by zero when the planes are upsampled)
+        raise JpegError("invalid sampling factors")
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
-    if hmax < 1 or vmax < 1 or hmax > 4 or vmax > 4:
-        raise JpegError("invalid sampling factors")
     mcux = -(-w // (8 * hmax))
     mcuy = -(-h // (8 * vmax))
     for c in comps:
@@ -638,6 +774,7 @@ def _prog_dc_scan(br, frame, scomps, scan, dc_tables, dri, ah, al):
             c = scomps[0]
             my, mx = divmod(m, c["nbw"])
             _prog_dc_unit(br, c, my * c["bw"] + mx, ah, al)
+        br.check()
 
 
 def _prog_dc_unit(br, c, bi, ah, al):
@@ -688,13 +825,14 @@ def _prog_ac_scan(br, c, scan, ac_tables, dri, ss, se, ah, al):
                     break
                 k += r
                 if k > se:
-                    raise JpegError("AC coefficient index out of range")
+                    br.fail("AC coefficient index out of range")
                 coef[bi, zz[k]] = _extend(br.read_bits(s), s) << al
                 k += 1
         else:
             eobrun = _prog_ac_refine_block(
                 br, actab, coef, bi, zz, ss, se, al, eobrun
             )
+        br.check()
 
 
 def _prog_ac_refine_block(br, actab, coef, bi, zz, ss, se, al, eobrun):
@@ -719,7 +857,7 @@ def _prog_ac_refine_block(br, actab, coef, bi, zz, ss, se, al, eobrun):
                 newval = 0  # ZRL: skip 16 zero-history positions
             else:
                 if s != 1:
-                    raise JpegError("invalid magnitude in AC refinement scan")
+                    br.fail("invalid magnitude in AC refinement scan")
                 newval = p1 if br.read_bit() else m1
             while k <= se:
                 ci = zz[k]

@@ -74,20 +74,40 @@ def is_webp(data: bytes) -> bool:
 
 
 class _BitReader:
-    """LSB-first bit reader (VP8L convention)."""
+    """LSB-first bit reader (VP8L convention) that works on whole words.
+
+    `buf` holds `cnt` unread bits, the next one lowest; a refill appends
+    4 bytes, and `read(n)` takes n bits in one step.  Past the end of the
+    data a refill supplies 0-bits; taking any of them is the truncation,
+    which `read` raises at once.  The hot loops (`_decode_pixels` and the
+    code-length loop of `_read_prefix_code`) decode prefix codes with
+    the reader in locals and hand the state back when they end; they
+    check for the truncation at their refills, before raising any other
+    error, and at the end (`check`)."""
+
+    __slots__ = ("data", "pos", "buf", "cnt", "nbits")
 
     def __init__(self, data: bytes) -> None:
         self.data = data
-        self.pos = 0  # bit position
+        self.pos = 0  # next byte to load
+        self.buf = 0
+        self.cnt = 0
+        self.nbits = 8 * len(data)
+
+    def check(self) -> None:
+        if 8 * self.pos - self.cnt > self.nbits:
+            raise WebpError("VP8L stream truncated")
 
     def read(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            byte_i, bit_i = divmod(self.pos, 8)
-            if byte_i >= len(self.data):
-                raise WebpError("VP8L stream truncated")
-            v |= ((self.data[byte_i] >> bit_i) & 1) << i
-            self.pos += 1
+        while self.cnt < n:
+            self.buf |= int.from_bytes(
+                self.data[self.pos:self.pos + 4], "little") << self.cnt
+            self.pos += 4
+            self.cnt += 32
+        v = self.buf & ((1 << n) - 1)
+        self.buf >>= n
+        self.cnt -= n
+        self.check()
         return v
 
 
@@ -136,49 +156,88 @@ def _canonical_codes(lengths: list[int]) -> dict[int, tuple[int, int]]:
     return codes
 
 
+# REV8[b] is the byte b with its bit order reversed
+_REV8 = [int(f"{b:08b}"[::-1], 2) for b in range(256)]
+
+_ROOT_BITS = 8  # bits that index the root of a prefix-code table
+
+
 class _PrefixCode:
-    """Decoder for one canonical prefix code (bit-by-bit tree walk,
-    code bits MSB-first)."""
+    """Table decoder for one canonical prefix code.
+
+    Codes are sent most-significant bit first inside the LSB-first
+    stream, so a table indexed by the next stream bits lists every code
+    bit-reversed.  The table has two levels (libwebp's layout): the root
+    is indexed by the next `bits` = min(longest code, 8) bits and holds
+    ``symbol << 4 | length`` for each code of up to `bits` bits, repeated
+    over the windows it starts; where longer codes share a root prefix it
+    holds ``~i`` for second-level table `subs[i]`, indexed by the bits
+    after the root ones and sized by the longest code below that prefix.
+    The tables thus grow with the number of codes, not with 2^(longest
+    code), so building them costs less than they save even on 32x32
+    images.  A one-symbol code has a one-entry root table and takes 0
+    bits.
+
+    The hot loops decode inline: ``e = root[buf & mask]``, then
+    ``e = entry(e, buf)`` if ``e < 0``; the code takes ``e & 15`` bits
+    and its symbol is ``e >> 4``."""
+
+    __slots__ = ("root", "mask", "bits", "subs")
 
     def __init__(self, lengths: list[int]) -> None:
         nz = [(ln, sym) for sym, ln in enumerate(lengths) if ln > 0]
         if len(nz) == 1:
-            self.single: int | None = nz[0][1]
-            self.table: dict[tuple[int, int], int] = {}
+            self._build([(nz[0][1], 0, 0)])
             return
-        self.single = None
-        self.table = {
-            (code, ln): sym
-            for sym, (code, ln) in _canonical_codes(lengths).items()
-        }
-        if not self.table:
+        codes = _canonical_codes(lengths)
+        if not codes:
             raise WebpError("empty prefix code")
         # completeness check: Kraft sum must be exactly 1
-        if sum(1 << (15 - ln) for (_c, ln) in self.table) != (1 << 15):
+        if sum(1 << (15 - ln) for (_c, ln) in codes.values()) != (1 << 15):
             raise WebpError("prefix code lengths not complete")
+        self._build([(sym, code, ln) for sym, (code, ln) in codes.items()])
 
     @classmethod
     def simple(cls, symbols: list[int]) -> "_PrefixCode":
         pc = cls.__new__(cls)
         if len(symbols) == 1:
-            pc.single = symbols[0]
-            pc.table = {}
+            pc._build([(symbols[0], 0, 0)])
         else:
-            pc.single = None
-            pc.table = {(0, 1): symbols[0], (1, 1): symbols[1]}
+            pc._build([(symbols[0], 0, 1), (symbols[1], 1, 1)])
         return pc
 
-    def read(self, br: _BitReader) -> int:
-        if self.single is not None:
-            return self.single
-        code, ln = 0, 0
-        while ln <= 15:
-            code = (code << 1) | br.read(1)
-            ln += 1
-            sym = self.table.get((code, ln))
-            if sym is not None:
-                return sym
-        raise WebpError("invalid prefix code in stream")
+    def _build(self, codes: list[tuple[int, int, int]]) -> None:
+        """Tables from (symbol, code, length) triples of a complete
+        prefix code."""
+        bits = min(max(ln for _s, _c, ln in codes), _ROOT_BITS)
+        root = [0] * (1 << bits)
+        longer: dict[int, list[tuple[int, int, int]]] = {}
+        for sym, code, ln in codes:
+            rev = (_REV8[code & 0xFF] << 8 | _REV8[code >> 8]) >> (16 - ln)
+            if ln <= bits:
+                root[rev::1 << ln] = [sym << 4 | ln] * (1 << (bits - ln))
+            else:
+                longer.setdefault(rev & ((1 << bits) - 1), []).append(
+                    (sym, rev >> bits, ln))
+        subs = []
+        for prefix, tail in longer.items():
+            sub_bits = max(ln for _s, _r, ln in tail) - bits
+            sub = [0] * (1 << sub_bits)
+            for sym, rest, ln in tail:
+                step = 1 << (ln - bits)
+                sub[rest::step] = [sym << 4 | ln] * ((1 << sub_bits) // step)
+            root[prefix] = ~len(subs)
+            subs.append((sub, sub_bits))
+        self.root = root
+        self.mask = (1 << bits) - 1
+        self.bits = bits
+        self.subs = subs
+
+    def entry(self, e: int, buf: int) -> int:
+        """The second-level entry for root entry `e` < 0, where `buf`
+        holds the next stream bits."""
+        sub, sub_bits = self.subs[~e]
+        return sub[(buf >> self.bits) & ((1 << sub_bits) - 1)]
 
 
 def _read_prefix_code(br: _BitReader, alphabet_size: int) -> _PrefixCode:
@@ -206,24 +265,44 @@ def _read_prefix_code(br: _BitReader, alphabet_size: int) -> _PrefixCode:
     lengths = [0] * alphabet_size
     prev_len = 8
     i = 0
+    # the reader in locals, as in `_decode_pixels`: a code-length code is
+    # at most 7 bits (one root-table step) and its repeat count 7 more
+    root, mask = clc.root, clc.mask
+    data = br.data
+    pos, buf, cnt = br.pos, br.buf, br.cnt
     while i < alphabet_size and max_symbol > 0:
         max_symbol -= 1
-        s = clc.read(br)
+        if cnt < 14:
+            buf |= int.from_bytes(data[pos:pos + 4], "little") << cnt
+            pos += 4
+            cnt += 32
+        e = root[buf & mask]
+        buf >>= e & 15
+        cnt -= e & 15
+        s = e >> 4
         if s < 16:
             lengths[i] = s
             i += 1
             if s:
                 prev_len = s
         elif s == 16:
-            rep = 3 + br.read(2)
+            rep = 3 + (buf & 3)
+            buf >>= 2
+            cnt -= 2
             for _ in range(rep):
                 if i < alphabet_size:
                     lengths[i] = prev_len
                     i += 1
         elif s == 17:
-            i += 3 + br.read(3)
+            i += 3 + (buf & 7)
+            buf >>= 3
+            cnt -= 3
         else:  # 18: long zero run
-            i += 11 + br.read(7)
+            i += 11 + (buf & 127)
+            buf >>= 7
+            cnt -= 7
+    br.pos, br.buf, br.cnt = pos, buf, cnt
+    br.check()
     if i > alphabet_size:
         raise WebpError("code lengths overflow alphabet")
     return _PrefixCode(lengths)
@@ -231,18 +310,11 @@ def _read_prefix_code(br: _BitReader, alphabet_size: int) -> _PrefixCode:
 
 # --------------------------------------------- LZ77 prefix value coding
 
-def _lz77_value(br: _BitReader, code: int) -> int:
-    """length/distance prefix coding (spec §5.2.2): small codes are
-    direct, larger split into (offset << extra) + extra bits."""
-    if code < 4:
-        return code + 1
-    extra = (code - 2) >> 1
-    offset = (2 + (code & 1)) << extra
-    return offset + br.read(extra) + 1
-
-
 def _lz77_code(value: int) -> tuple[int, int, int]:
-    """inverse of _lz77_value: value -> (code, extra_bits_value, n_extra)."""
+    """length/distance prefix coding (spec §5.2.2), value -> (code,
+    extra_bits_value, n_extra): small values are direct codes, larger
+    ones split into (offset << extra) + extra bits — the inverse of the
+    decoding in `_decode_pixels`."""
     if value <= 4:
         return value - 1, 0, 0
     v = value - 1
@@ -346,7 +418,6 @@ def _decode_image_stream(
     if cache_bits > 11:
         raise WebpError("colour cache too large")
     cache_size = (1 << cache_bits) if cache_bits else 0
-    cache = [0] * cache_size
 
     meta = None
     meta_bits = 0
@@ -359,51 +430,136 @@ def _decode_image_stream(
         n_groups = max(((p >> 8) & 0xFFFF) for p in meta) + 1
 
     groups = [_read_code_group(br, cache_size) for _ in range(n_groups)]
+    out = _decode_pixels(br, xsize, h, groups, meta, meta_bits, cache_bits)
+    return out, transforms, xsize
 
+
+def _decode_pixels(br, xsize, h, groups, meta, meta_bits, cache_bits):
+    """The entropy-coded pixels of one image stream, as ARGB ints.
+
+    The reader's state lives in locals here: `buf` holds `cnt` unread
+    bits, topped up to at least 60 before each pixel — enough for the
+    four codes of a literal or for a backward reference (length code and
+    extra bits, distance code and extra bits) — so the body never
+    refills.  Each code is decoded by its root table, and by
+    `_PrefixCode.entry` only for codes longer than the root."""
     n = xsize * h
+    cache_size = (1 << cache_bits) if cache_bits else 0
+    cache = [0] * cache_size
+    cache_shift = 32 - cache_bits
+    meta_w = (xsize + (1 << meta_bits) - 1) >> meta_bits
+    # per group: (root table, root mask, code) for each of the 5 codes
+    tables = [
+        tuple(x for pc in g for x in (pc.root, pc.mask, pc))
+        for g in groups
+    ]
+    data = br.data
+    nbits = br.nbits
+    pos, buf, cnt = br.pos, br.buf, br.cnt
     out: list[int] = []
-    while len(out) < n:
+    append = out.append
+    (g_root, g_mask, g_pc, r_root, r_mask, r_pc, b_root, b_mask, b_pc,
+     a_root, a_mask, a_pc, d_root, d_mask, d_pc) = tables[0]
+    npx = 0
+    while npx < n:
         if meta is not None:
-            x = len(out) % xsize
-            y = len(out) // xsize
-            mp = meta[
-                (y >> meta_bits)
-                * ((xsize + (1 << meta_bits) - 1) >> meta_bits)
-                + (x >> meta_bits)
-            ]
-            g = groups[(mp >> 8) & 0xFFFF]
-        else:
-            g = groups[0]
-        s = g[0].read(br)
+            y, x = divmod(npx, xsize)
+            (g_root, g_mask, g_pc, r_root, r_mask, r_pc, b_root, b_mask,
+             b_pc, a_root, a_mask, a_pc, d_root, d_mask, d_pc) = tables[
+                (meta[(y >> meta_bits) * meta_w + (x >> meta_bits)] >> 8)
+                & 0xFFFF]
+        if cnt < 60:
+            # past the end of the data the refill supplies 0-bits: stop
+            # once one of them was taken
+            if 8 * pos - cnt > nbits:
+                raise WebpError("VP8L stream truncated")
+            buf |= int.from_bytes(data[pos:pos + 8], "little") << cnt
+            pos += 8
+            cnt += 64
+        e = g_root[buf & g_mask]
+        if e < 0:
+            e = g_pc.entry(e, buf)
+        buf >>= e & 15
+        cnt -= e & 15
+        s = e >> 4
         if s < 256:  # literal
-            red = g[1].read(br)
-            blue = g[2].read(br)
-            alpha = g[3].read(br)
-            px = (alpha << 24) | (red << 16) | (s << 8) | blue
-            out.append(px)
-        elif s < 256 + 24:  # LZ77 backward reference
-            length = _lz77_value(br, s - 256)
-            dist_code = _lz77_value(br, g[4].read(br))
+            e = r_root[buf & r_mask]
+            if e < 0:
+                e = r_pc.entry(e, buf)
+            buf >>= e & 15
+            cnt -= e & 15
+            px = e >> 4 << 16 | s << 8
+            e = b_root[buf & b_mask]
+            if e < 0:
+                e = b_pc.entry(e, buf)
+            buf >>= e & 15
+            cnt -= e & 15
+            px |= e >> 4
+            e = a_root[buf & a_mask]
+            if e < 0:
+                e = a_pc.entry(e, buf)
+            buf >>= e & 15
+            cnt -= e & 15
+            px |= e >> 4 << 24
+            append(px)
+            npx += 1
+            if cache_size:
+                cache[(_CACHE_MULT * px & 0xFFFFFFFF) >> cache_shift] = px
+            continue
+        if s < 256 + 24:  # LZ77 backward reference (spec 5.2.2)
+            code = s - 256
+            if code < 4:
+                length = code + 1
+            else:
+                extra = (code - 2) >> 1
+                length = ((2 + (code & 1)) << extra) + 1 + (
+                    buf & ((1 << extra) - 1))
+                buf >>= extra
+                cnt -= extra
+            e = d_root[buf & d_mask]
+            if e < 0:
+                e = d_pc.entry(e, buf)
+            buf >>= e & 15
+            cnt -= e & 15
+            code = e >> 4
+            if code < 4:
+                dist_code = code + 1
+            else:
+                extra = (code - 2) >> 1
+                dist_code = ((2 + (code & 1)) << extra) + 1 + (
+                    buf & ((1 << extra) - 1))
+                buf >>= extra
+                cnt -= extra
             dist = _plane_distance(dist_code, xsize)
-            if dist > len(out):
-                raise WebpError("LZ77 distance before image start")
+            if dist > npx:
+                _fail(br, pos, cnt, "LZ77 distance before image start")
+            if npx + length > n:
+                _fail(br, pos, cnt, "LZ77 copy past image end")
             for _ in range(length):
-                if len(out) >= n:
-                    raise WebpError("LZ77 copy past image end")
-                out.append(out[len(out) - dist])
+                px = out[npx - dist]
+                append(px)
+                npx += 1
+                if cache_size:
+                    cache[(_CACHE_MULT * px & 0xFFFFFFFF) >> cache_shift] = px
         else:  # colour cache
             idx = s - 256 - 24
             if idx >= cache_size:
-                raise WebpError("cache index out of range")
-            out.append(cache[idx])
-        if cache_size:
-            # every emitted pixel enters the cache, including copies
-            start = len(out) - (
-                1 if s < 256 or s >= 256 + 24 else length
-            )
-            for px in out[start:]:
-                cache[(_CACHE_MULT * px & 0xFFFFFFFF) >> (32 - cache_bits)] = px
-    return out, transforms, xsize
+                _fail(br, pos, cnt, "cache index out of range")
+            px = cache[idx]
+            append(px)
+            npx += 1
+            cache[(_CACHE_MULT * px & 0xFFFFFFFF) >> cache_shift] = px
+    br.pos, br.buf, br.cnt = pos, buf, cnt
+    br.check()
+    return out
+
+
+def _fail(br, pos, cnt, msg):
+    """Raise `msg` from the pixel loop — or the truncation, when the
+    loop already read past the end of the data."""
+    if 8 * pos - cnt > br.nbits:
+        msg = "VP8L stream truncated"
+    raise WebpError(msg)
 
 
 # ------------------------------------------------- inverse transforms
@@ -614,12 +770,13 @@ def decode_vp8l(stream: bytes) -> tuple[int, int, int, bytes]:
             _inv_color_transform(px, cur_w, h, p1, p2)
     if cur_w != w:
         raise WebpError("width mismatch after transforms")
-    out = bytearray(w * h * 4)
-    for i, p in enumerate(px):
-        out[4 * i] = p >> 16 & 0xFF
-        out[4 * i + 1] = p >> 8 & 0xFF
-        out[4 * i + 2] = p & 0xFF
-        out[4 * i + 3] = p >> 24 & 0xFF
+    # ARGB ints -> little-endian B, G, R, A bytes -> R, G, B, A
+    bgra = struct.pack(f"<{len(px)}I", *px)
+    out = bytearray(len(bgra))
+    out[0::4] = bgra[2::4]
+    out[1::4] = bgra[1::4]
+    out[2::4] = bgra[0::4]
+    out[3::4] = bgra[3::4]
     return w, h, 4, bytes(out)
 
 
@@ -1148,6 +1305,13 @@ def _load_libwebp():
                 ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
                 ctypes.c_float, ctypes.POINTER(ctypes.c_void_p),
             ]
+            lib.WebPEncodeRGBA.restype = ctypes.c_size_t
+            lib.WebPEncodeRGBA.argtypes = lib.WebPEncodeRGB.argtypes
+            lib.WebPEncodeLosslessRGBA.restype = ctypes.c_size_t
+            lib.WebPEncodeLosslessRGBA.argtypes = [
+                ctypes.c_char_p, ctypes.c_int, ctypes.c_int, ctypes.c_int,
+                ctypes.POINTER(ctypes.c_void_p),
+            ]
             lib.WebPFree.argtypes = [ctypes.c_void_p]
             lib.WebPInitDecoderConfigInternal.restype = ctypes.c_int
             lib.WebPInitDecoderConfigInternal.argtypes = [
@@ -1184,6 +1348,33 @@ def libwebp_encode_rgb(rgb: bytes, width: int, height: int,
                           ctypes.c_float(quality), ctypes.byref(out))
     if not n:
         raise WebpError("WebPEncodeRGB failed")
+    data = ctypes.string_at(out.value, n)
+    lib.WebPFree(out)
+    return data
+
+
+def libwebp_encode_rgba(rgba: bytes, width: int, height: int,
+                        lossless: bool = True,
+                        quality: float = 75.0) -> bytes:
+    """Encode RGBA32 with the SYSTEM libwebp: lossless VP8L by default
+    (the reference encoder's transforms, colour cache and meta prefix
+    codes, which the literal-only `encode_webp` never emits), or lossy
+    VP8 plus an ALPH chunk. Raises WebpError when libwebp.so.7 is
+    absent."""
+    import ctypes
+
+    lib = _load_libwebp()
+    if not lib:
+        raise WebpError("libwebp.so.7 not available")
+    out = ctypes.c_void_p()
+    if lossless:
+        n = lib.WebPEncodeLosslessRGBA(rgba, width, height, width * 4,
+                                       ctypes.byref(out))
+    else:
+        n = lib.WebPEncodeRGBA(rgba, width, height, width * 4,
+                               ctypes.c_float(quality), ctypes.byref(out))
+    if not n:
+        raise WebpError("libwebp RGBA encode failed")
     data = ctypes.string_at(out.value, n)
     lib.WebPFree(out)
     return data

@@ -1067,7 +1067,11 @@ def split_leakage_report(
     endpoints canonicalise with least/greatest so (train, test) and
     (test, train) fold together. A clean split shows only same-split
     rows; any cross-split row is leakage, with max_jaccard sizing the
-    worst offender."""
+    worst offender.
+
+    Runs Spark jobs while the DataFrame is built: it goes through
+    `dedup.minhash_lsh_pairs`, whose partition-count probe executes every
+    shuffle stage upstream of the input under AQE."""
     from ndr_import_spark.operators.dedup import minhash_lsh_pairs
 
     if weights is None:

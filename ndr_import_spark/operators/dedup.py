@@ -93,7 +93,12 @@ def _shingle_base(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     is the pipeline's CPU hot spot, and a small parquet file (one split)
     would otherwise pin it to a single task. The shuffle moves only the
     two projected columns, once; on a real corpus (splits ≥ cores) it is
-    skipped entirely."""
+    skipped entirely.
+
+    Runs Spark jobs while the DataFrame is built:
+    `proj.rdd.getNumPartitions()` has to plan the input, and under AQE
+    planning executes every shuffle stage upstream of it, each as its own
+    job."""
     proj = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     if proj.rdd.getNumPartitions() < parallelism:
@@ -507,7 +512,11 @@ def minhash_lsh_star_edges(
     cap is needed — the blowup the cap guards against cannot happen.
 
     Returns (id_a, id_b, jaccard) with id_a = the bucket anchor
-    (min id), id_a < id_b."""
+    (min id), id_a < id_b.
+
+    Runs Spark jobs while the DataFrame is built: it goes through
+    `_shingle_base`, whose partition-count probe executes every shuffle
+    stage upstream of the input under AQE."""
     base = _shingle_base(df, text_col, id_col)
     scope = _CacheScope()
     hashed = scope.persist(
@@ -525,9 +534,11 @@ def minhash_lsh_star_edges(
     # showed the two 868 KiB / 19170-record twins in training_mix.
     # min-over-partition attaches each bucket's anchor row-for-row
     # identically (the inner join kept every row: every banded row's
-    # bucket has a min), and the unordered window needs no sort beyond
-    # the exchange the aggregate already paid. Per-bucket state is
-    # bounded by bucket size, same as the aggregate's groups.
+    # bucket has a min). The window is not free: WindowExec adds a
+    # per-partition sort on (band, key) that the hash aggregate did not
+    # need, but one exchange and a local sort still cost less than the
+    # two exchanges it replaces. Per-bucket state is bounded by bucket
+    # size, same as the aggregate's groups.
     wb = Window.partitionBy("band", "key")
     edges = (
         banded.withColumn("_center", F.min("_id").over(wb))
@@ -557,6 +568,10 @@ def minhash_lsh_pairs(
     candidates (and the verify join) small on template-heavy corpora.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b.
+
+    Runs Spark jobs while the DataFrame is built: it goes through
+    `_shingle_base`, whose partition-count probe executes every shuffle
+    stage upstream of the input under AQE.
     """
     base = _shingle_base(df, text_col, id_col)
     return _banded_jaccard_pairs(
@@ -768,7 +783,11 @@ def ngram_jaccard_pairs(
     corpora (length-band or single-hash blocking degenerates there: common
     shingles dominate the min and buckets go quadratic). k=8/bands=2 gives
     p = 1-(1-s^4)^2 candidate recall with tiny buckets; exact Jaccard then
-    verifies on the per-doc n-gram hash sets joined back by id."""
+    verifies on the per-doc n-gram hash sets joined back by id.
+
+    Runs Spark jobs while the DataFrame is built: it goes through
+    `_shingle_base`, whose partition-count probe executes every shuffle
+    stage upstream of the input under AQE."""
     base = _shingle_base(df, text_col, id_col)
     # normalize_text output is single-spaced, so the only possible empty
     # token is the whole-array [""] of empty text — a `when` guard
@@ -1147,6 +1166,11 @@ def incremental_neardup_pairs(
 
     Returns (new_id, old_id, jaccard) — jaccard over hashed shingle sets,
     verified exactly, threshold-filtered like the batch pair finder.
+
+    Runs Spark jobs while the DataFrame is built:
+    `tagged.rdd.getNumPartitions()` has to plan the input, and under AQE
+    planning executes every shuffle stage upstream of it, each as its own
+    job.
     """
     tagged = existing.select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_text"), F.lit(0).alias("_new")
@@ -1253,7 +1277,11 @@ def write_neardup_index(
     `incremental_neardup_pairs`' claim concrete — an ingest pipeline
     writes this once per snapshot, and every later batch (or stream)
     probes it WITHOUT re-reading the old corpus text. Pays one shingle
-    pass at write; no persist needed (each frame is consumed once)."""
+    pass at write; no persist needed (each frame is consumed once).
+
+    Runs Spark jobs while the DataFrame is built: it goes through
+    `_shingle_base`, whose partition-count probe executes every shuffle
+    stage upstream of the input under AQE."""
     hashed = _hashed_sig_frame(
         _char_shingle_rows(_shingle_base(df, text_col, id_col), shingle_n),
         k,
@@ -1304,7 +1332,11 @@ def probe_neardup_index(
     identical semantics to `incremental_neardup_pairs(old, new)` but the
     old side comes entirely from the index parquet — old text is never
     touched. The band join reads only the band partitions the probe
-    keys hit; the verify join reads the narrow (_id, _hs) sets."""
+    keys hit; the verify join reads the narrow (_id, _hs) sets.
+
+    Runs Spark jobs while the DataFrame is built: it goes through
+    `_shingle_base`, whose partition-count probe executes every shuffle
+    stage upstream of the input under AQE."""
     spark = new.sparkSession
     _check_index_params(spark, index_path, k, bands, shingle_n)
     old_banded = spark.read.parquet(f"{index_path}/bands")
@@ -1355,7 +1387,11 @@ def lsh_quality_report(
     recall = |truth ∩ candidates| / |truth| (1.0 when no truth pairs);
     precision = |truth ∩ candidates| / |candidates| — candidates ∩ truth
     equals candidates-above-threshold because truth contains every pair
-    at or above it."""
+    at or above it.
+
+    Runs Spark jobs while the DataFrame is built: it goes through
+    `_shingle_base`, whose partition-count probe executes every shuffle
+    stage upstream of the input under AQE."""
     sample = df.filter(F.col(id_col) < sample_max_id)
     base = _shingle_base(sample, text_col, id_col)
     scope = _CacheScope()

@@ -304,7 +304,11 @@ def gopher_stats_frame(
     pipeline (operators/dedup.py), linear in corpus size; nothing is
     quadratic and nothing collects. Character share uses the gram's
     string length (words + single joining spaces), identical on the
-    DuckDB side."""
+    DuckDB side.
+
+    Runs Spark jobs while the DataFrame is built: it goes through
+    `spread_rows`, whose partition-count probe executes every shuffle stage
+    upstream of the input under AQE."""
     t = F.col(text_col)
     wds = tokens(t)
     # spread the scan ahead of tokenisation + the gram explode (the
@@ -508,7 +512,12 @@ def spread_rows(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     local[32] tuning: it moves each projected row exactly once, and
     only when the input layout under-parallelises the cluster (guide
     §2.5 'input skew: one huge unsplittable file... repartition
-    immediately after the read')."""
+    immediately after the read').
+
+    Runs Spark jobs while the DataFrame is built:
+    `df.rdd.getNumPartitions()` has to plan the input, and under AQE
+    planning executes every shuffle stage upstream of it, each as its own
+    job."""
     if parallelism is None:
         parallelism = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= parallelism:

@@ -16,13 +16,30 @@ stages are cheap.
 
 from __future__ import annotations
 
+import calendar
 import json
 import os
+import re
 import sys
 import time
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_REST_TS = re.compile(r"(\d{4}-\d\d-\d\dT\d\d:\d\d:\d\d)(?:\.(\d+))?")
+
+
+def rest_time(ts: str) -> float:
+    """Epoch seconds of a Spark REST timestamp such as
+    "2015-02-03T16:42:59.720GMT". The time is GMT, so it is converted
+    without the local time zone (and its DST jumps); the fraction of a
+    second may be absent or of any length."""
+    m = _REST_TS.match(ts)
+    if m is None:
+        raise ValueError(f"not a Spark REST timestamp: {ts!r}")
+    seconds = calendar.timegm(time.strptime(m.group(1), "%Y-%m-%dT%H:%M:%S"))
+    frac = m.group(2)
+    return seconds + (int(frac) / 10 ** len(frac) if frac else 0.0)
 
 
 def main() -> int:
@@ -129,15 +146,11 @@ def main() -> int:
             # count, not stage wall, dominates the composed pipelines —
             # attribute each job round to its first stage's call site so
             # the sequential-latency floor has names on it.
-            def _t(ts: str) -> float:
-                return time.mktime(
-                    time.strptime(ts[:19], "%Y-%m-%dT%H:%M:%S")
-                ) + int(ts[20:23]) / 1000.0
-
             print(f"{'job':>5} {'dur_s':>7} {'stages':>6} {'skip':>4}  first-stage name")
             for j in sorted(jobs, key=lambda j: j["jobId"]):
                 dur = (
-                    _t(j["completionTime"]) - _t(j["submissionTime"])
+                    rest_time(j["completionTime"])
+                    - rest_time(j["submissionTime"])
                     if j.get("completionTime")
                     else float("nan")
                 )
