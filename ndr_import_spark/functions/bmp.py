@@ -10,15 +10,13 @@ denominator every viewer accepts.
 
 The reference repo (`lib/ndr_import`) has no image handling; this extends
 the same net-new multimodal surface as functions/png.py / jpeg.py / gif.py
-and shares their `(width, height, channels, rgb_bytes)` contract and
-`grid_features` featuriser.
+and shares their `(width, height, channels, rgb_bytes)` contract, which
+`png.grid_features` featurises.
 """
 
 from __future__ import annotations
 
 import struct
-
-from .png import grid_features
 
 
 class BmpError(ValueError):
@@ -137,9 +135,3 @@ def encode_bmp(width: int, height: int, rgb: bytes) -> bytes:
         bgr[2::3] = row[0::3]
         rows.append(bytes(bgr) + pad)
     return head + info + b"".join(rows)
-
-
-def bmp_image_decoder(data: bytes) -> tuple[int, int, list[float]]:
-    """`set_image_decoder`-shaped decoder over real BMP bytes."""
-    w, h, ch, px = decode_bmp(data)
-    return w, h, grid_features(w, h, ch, px)

@@ -372,14 +372,6 @@ def encode_gif_animation(
     return bytes(out)
 
 
-def gif_image_decoder(data: bytes) -> tuple[int, int, list[float]]:
-    """`set_image_decoder`-shaped decoder over real GIF bytes."""
-    from ndr_import_spark.functions.png import grid_features
-
-    w, h, ch, px = decode_gif(data)
-    return w, h, grid_features(w, h, ch, px)
-
-
 def gif_video_decoder(
     data: bytes, frame_stride: int = 1
 ) -> tuple[int, int, int, int, list[float]]:

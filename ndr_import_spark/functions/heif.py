@@ -17,9 +17,9 @@ codec whose clean-room decode is out of scope (the VP8 keyframe
 decoder, functions/vp8.py, is ~1000 lines for a far simpler codec).
 The posture here is the library's injected-decoder contract: when the
 system libheif is present (this container ships libheif 1.15 with
-aom/dav1d/x265/de265), `decode_heif` / `heif_image_decoder` use it via
+aom/dav1d/x265/de265), `decode_heif` uses it via
 ctypes — opaque handles and plain getters only, no struct layouts
-except the by-value heif_error; when absent they raise
+except the by-value heif_error; when absent it raises
 NotImplementedError with a clear message, exactly like the other
 multimodal env gates.
 
@@ -42,7 +42,6 @@ from ndr_import_spark.sources.mediameta import _walk_boxes
 __all__ = [
     "HeifError",
     "decode_heif",
-    "heif_image_decoder",
     "heif_metadata",
     "is_heif",
     "scrub_heif_exif",
@@ -464,14 +463,6 @@ def decode_heif(data: bytes) -> tuple[int, int, int, bytes]:
             lib.heif_image_handle_release(handle)
     finally:
         lib.heif_context_free(ctx)
-
-
-def heif_image_decoder(data: bytes) -> tuple[int, int, list[float]]:
-    """`set_image_decoder`-shaped decoder over AVIF/HEIC bytes."""
-    from ndr_import_spark.functions.png import grid_features
-
-    w, h, ch, px = decode_heif(data)
-    return w, h, grid_features(w, h, ch, px)
 
 
 def libheif_encode_rgb(rgb: bytes, width: int, height: int,

@@ -1353,12 +1353,3 @@ def encode_jpeg_progressive(
         run_scan(_prog_encode_ac_refine, c, 1, 63, 0, ac_enc)
     out += b"\xff\xd9"  # EOI
     return bytes(out)
-
-
-def jpeg_image_decoder(data: bytes) -> tuple[int, int, list[float]]:
-    """`set_image_decoder`-shaped decoder over real JPEG bytes (grid
-    features, same contract as png.png_image_decoder)."""
-    from ndr_import_spark.functions.png import grid_features
-
-    w, h, ch, px = decode_jpeg(data)
-    return w, h, grid_features(w, h, ch, px)

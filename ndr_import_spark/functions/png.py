@@ -156,50 +156,24 @@ def grid_features(
 ) -> list[float]:
     """Mean grey intensity over a grid×grid cell partition of the image —
     a deterministic 16-dim feature vector in [0, 1]. Vectorised with
-    numpy when available (the per-pixel Python loop dominates decode time
-    on real photos); the fallback loop computes bit-identical values."""
-    try:
-        import numpy as np
-    except ImportError:
-        np = None
-    if np is not None:
-        arr = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width, channels)
-        if channels >= 3:
-            grey = arr[:, :, :3].sum(axis=2, dtype=np.float64) / 3.0
-        else:
-            grey = arr[:, :, 0].astype(np.float64)
-        gy = np.minimum(np.arange(height) * grid // height, grid - 1)
-        gx = np.minimum(np.arange(width) * grid // width, grid - 1)
-        cell = (gy[:, None] * grid + gx[None, :]).ravel()
-        sums_v = np.bincount(cell, weights=grey.ravel(), minlength=grid * grid)
-        counts_v = np.bincount(cell, minlength=grid * grid)
-        return [
-            round(float(s) / int(c) / 255.0, 6) if c else 0.0
-            for s, c in zip(sums_v, counts_v)
-        ]
-    sums = [0.0] * (grid * grid)
-    counts = [0] * (grid * grid)
-    stride = width * channels
-    for y in range(height):
-        gy = min(y * grid // height, grid - 1)
-        base = y * stride
-        for x in range(width):
-            gx = min(x * grid // width, grid - 1)
-            o = base + x * channels
-            if channels >= 3:
-                v = (pixels[o] + pixels[o + 1] + pixels[o + 2]) / 3.0
-            else:
-                v = float(pixels[o])
-            cell = gy * grid + gx
-            sums[cell] += v
-            counts[cell] += 1
-    return [round(s / c / 255.0, 6) if c else 0.0 for s, c in zip(sums, counts)]
+    numpy: a per-pixel Python loop would dominate decode time on real
+    photos."""
+    import numpy as np
 
-
-def png_image_decoder(data: bytes) -> tuple[int, int, list[float]]:
-    """`set_image_decoder`-shaped decoder over real PNG bytes."""
-    w, h, ch, px = decode_png(data)
-    return w, h, grid_features(w, h, ch, px)
+    arr = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width, channels)
+    if channels >= 3:
+        grey = arr[:, :, :3].sum(axis=2, dtype=np.float64) / 3.0
+    else:
+        grey = arr[:, :, 0].astype(np.float64)
+    gy = np.minimum(np.arange(height) * grid // height, grid - 1)
+    gx = np.minimum(np.arange(width) * grid // width, grid - 1)
+    cell = (gy[:, None] * grid + gx[None, :]).ravel()
+    sums_v = np.bincount(cell, weights=grey.ravel(), minlength=grid * grid)
+    counts_v = np.bincount(cell, minlength=grid * grid)
+    return [
+        round(float(s) / int(c) / 255.0, 6) if c else 0.0
+        for s, c in zip(sums_v, counts_v)
+    ]
 
 
 def resize_rgb(

@@ -11,15 +11,13 @@ single strip.
 
 The reference repo (`lib/ndr_import`) has no image handling; this extends
 the same net-new multimodal surface as functions/png.py / bmp.py and
-shares their `(width, height, channels, bytes)` contract and
-`grid_features` featuriser.
+shares their `(width, height, channels, bytes)` contract, which
+`png.grid_features` featurises.
 """
 
 from __future__ import annotations
 
 import struct
-
-from .png import grid_features
 
 
 class TiffError(ValueError):
@@ -214,9 +212,3 @@ def encode_tiff(width: int, height: int, rgb: bytes) -> bytes:
         + struct.pack("<HHH", 8, 8, 8)
         + ifd
     )
-
-
-def tiff_image_decoder(data: bytes) -> tuple[int, int, list[float]]:
-    """`set_image_decoder`-shaped decoder over real TIFF bytes."""
-    w, h, ch, px = decode_tiff(data)
-    return w, h, grid_features(w, h, ch, px)

@@ -1275,14 +1275,6 @@ def composite_webp_frames(data: bytes):
             rect[:] = 0
 
 
-def webp_image_decoder(data: bytes) -> tuple[int, int, list[float]]:
-    """`set_image_decoder`-shaped decoder over real WebP bytes."""
-    from ndr_import_spark.functions.png import grid_features
-
-    w, h, ch, px = decode_webp(data)
-    return w, h, grid_features(w, h, ch, px)
-
-
 # ----------------------------------------- system-libwebp fixture helpers
 # The clean-room code above DECODES; round-trip gates need the reference
 # ENCODER (and reference decoder) on the fixture side. Same pattern as

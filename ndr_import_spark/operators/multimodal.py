@@ -2,17 +2,20 @@
 with typed metadata.
 
 Net-new (BASELINE.json north_star). Image decode is REAL for PNG
-(functions/png.py — inflate, unfilter), baseline AND progressive JPEG
+(functions/png.py — inflate, unfilter), WebP (functions/webp.py — VP8L
+lossless, VP8 lossy keyframes as luma), baseline AND progressive JPEG
 (functions/jpeg.py — T.81 Huffman + exact IDCT, Annex G scans), GIF
 (functions/gif.py — LZW, interlace), BMP (functions/bmp.py — BI_RGB
-24/32-bit + palettised DIBs) and baseline TIFF (functions/tiff.py —
-II/MM strips, none/PackBits) payloads, dispatched by magic bytes;
-audio decode is REAL for WAV/PCM (functions/wav.py — RIFF walk, PCM and
-IEEE-float frames). Other formats need an injected decoder
-(`set_image_decoder`/`set_audio_decoder`; deterministic fake available for
-tests). Everything Spark-side is real either way:
-schema, Arrow-batched `mapInPandas` plumbing, batch shapes, partition
-sizing.
+24/32-bit + palettised DIBs), baseline TIFF (functions/tiff.py —
+II/MM strips, none/PackBits) and, when the system libheif is present,
+AVIF/HEIC (functions/heif.py) payloads, dispatched by magic bytes
+through one table (`_decode_raw`); audio decode is REAL for WAV/PCM
+(functions/wav.py — RIFF walk, PCM and IEEE-float frames). Other
+formats need an injected decoder (`set_image_decoder`/
+`set_audio_decoder`; deterministic fake available for tests).
+Everything Spark-side is real either way: schema, Arrow-batched
+`mapInPandas` plumbing (one adapter, `payload_map`, for every
+per-payload operator), batch shapes, partition sizing.
 
 Design for 100 TB: binary payloads ride in parquet binary columns (or
 pointers to object-store keys); decode/feature-extract runs in
@@ -23,9 +26,10 @@ touching bytes.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -64,6 +68,40 @@ def set_video_decoder(fn) -> None:
     _video_decoder = fn
 
 
+def payload_map(
+    df: DataFrame,
+    fn: Callable[[object, bytes | None], Iterable[tuple]],
+    schema: str,
+    id_col: str = "media_id",
+    payload_col: str = "payload",
+) -> DataFrame:
+    """Run ``fn(mid, payload)`` on every (id, payload) pair of `df` in
+    Arrow record batches and return the rows it gives as a frame of
+    `schema` — the one ``mapInPandas`` behind every per-payload operator.
+
+    Only `id_col` and `payload_col` cross into Python. ``payload`` is
+    ``bytes``, or ``None`` for a null payload. ``fn`` returns the row
+    tuples for that payload in `schema` column order: one row, none to
+    drop the payload, or several to fan out. What ``fn`` raises fails
+    the task, so an operator that isolates bad payloads catches its
+    codec errors inside ``fn``. The codec functions an operator imports
+    while it builds the plan ride in ``fn``'s closure, so a task imports
+    them once when it unpickles ``fn``, not once per payload."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                row
+                for mid, payload in zip(pdf[id_col], pdf[payload_col])
+                for row in fn(mid, payload)
+            ]
+            if rows:
+                # unnamed columns: Spark assigns them to `schema` by position
+                yield pd.DataFrame(rows)
+
+    return df.select(id_col, payload_col).mapInPandas(run, schema)
+
+
 def deterministic_fake_decoder(data: bytes) -> tuple[int, int, list[float]]:
     """Test decoder: reads the first 16 payload bytes as 'pixels' —
     deterministic, library-free, and reproducible by an SQL oracle (the
@@ -82,18 +120,19 @@ FEATURE_SCHEMA = (
 )
 
 
-_DECODER_UNSET = object()  # "caller didn't say": fall back to the module global
+_UNSET = object()  # "caller didn't say": fall back to the module global
 
 
-def extract_features(
-    df: DataFrame, batch_hint: int = 256, decoder=_DECODER_UNSET
-) -> DataFrame:
+def extract_features(df: DataFrame, decoder=_UNSET) -> DataFrame:
     """Decode + feature-extract via mapInPandas (Arrow record batches).
 
-    PNG and baseline-JPEG payloads decode with the stdlib codecs
-    (functions/png.py, functions/jpeg.py) by default; an injected decoder
-    takes precedence for other formats. Payloads in neither format with
-    no injected decoder raise NotImplementedError per batch.
+    PNG, WebP, JPEG, GIF, BMP, TIFF and (with the system libheif)
+    AVIF/HEIC payloads decode with the stdlib codecs through the
+    magic-byte dispatch `_decode_raw` by default; the feature is
+    `png.grid_features` of the decoded pixels. A payload in none of
+    those formats with no injected decoder raises NotImplementedError,
+    failing the task. A null payload yields a row of NULL width, height
+    and feature.
 
     Decoder injection (r8 verdict): prefer the per-call ``decoder=``
     parameter — passing ``decoder=None`` explicitly forces stdlib
@@ -102,65 +141,28 @@ def extract_features(
     decoder once, and applies only when the parameter is left unset;
     per-call injection never mutates (or is clobbered by) the global.
     """
+    from ndr_import_spark.functions.png import grid_features
 
     # capture the decoder at PLAN time: executors re-import this module in a
     # fresh interpreter, so reading the global inside the UDF would always
     # see None there
-    if decoder is _DECODER_UNSET:
+    if decoder is _UNSET:
         decoder = _image_decoder
 
-    def one(payload):
+    def one(key, payload):
+        mid, kind = key["media_id"], key["kind"]
         if payload is None:
             # a failed fetch must not kill the job (and must not be
             # misreported as an unsupported format): null feature row
-            return None, None, None
+            return [(mid, kind, None, None, None)]
         if decoder is not None:
-            return decoder(payload)
-        from ndr_import_spark.functions.bmp import bmp_image_decoder, is_bmp
-        from ndr_import_spark.functions.gif import gif_image_decoder, is_gif
-        from ndr_import_spark.functions.heif import heif_image_decoder, is_heif
-        from ndr_import_spark.functions.jpeg import is_jpeg, jpeg_image_decoder
-        from ndr_import_spark.functions.png import is_png, png_image_decoder
-        from ndr_import_spark.functions.tiff import is_tiff, tiff_image_decoder
-        from ndr_import_spark.functions.webp import is_webp, webp_image_decoder
+            return [(mid, kind, *decoder(payload))]
+        w, h, ch, px = _decode_raw(payload)
+        return [(mid, kind, w, h, grid_features(w, h, ch, px))]
 
-        raw = bytes(payload)
-        if is_png(raw):
-            return png_image_decoder(raw)
-        if is_webp(raw):
-            return webp_image_decoder(raw)
-        if is_jpeg(raw):
-            return jpeg_image_decoder(raw)
-        if is_gif(raw):
-            return gif_image_decoder(raw)
-        if is_bmp(raw):
-            return bmp_image_decoder(raw)
-        if is_tiff(raw):
-            return tiff_image_decoder(raw)
-        if is_heif(raw):
-            # AVIF/HEIC: env-gated system-libheif decode (r9); raises
-            # NotImplementedError with a clear message when absent
-            return heif_image_decoder(raw)
-        raise NotImplementedError(
-            "Non-PNG/WebP/JPEG/GIF/BMP/TIFF/AVIF/HEIC media needs an injected "
-            "decoder; use multimodal.set_image_decoder "
-            "(deterministic_fake_decoder available for tests)"
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [one(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "kind": pdf["kind"].values,
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "feature": [d[2] for d in decoded],
-                }
-            )
-
-    return df.mapInPandas(run, FEATURE_SCHEMA)
+    # the adapter hands `one` a single id value, so `kind` rides in it
+    keyed = df.select(F.struct("media_id", "kind").alias("key"), "payload")
+    return payload_map(keyed, one, FEATURE_SCHEMA, id_col="key")
 
 
 AUDIO_FEATURE_SCHEMA = (
@@ -179,9 +181,7 @@ def deterministic_fake_audio_decoder(data: bytes) -> tuple[int, int, list[float]
     return n, 16000, [x / 255.0 for x in b[:8]]
 
 
-def extract_audio_features(
-    df: DataFrame, batch_hint: int = 256, decoder=_DECODER_UNSET
-) -> DataFrame:
+def extract_audio_features(df: DataFrame, decoder=_UNSET) -> DataFrame:
     """Audio twin of `extract_features`: decode + feature-extract via
     Arrow-batched mapInPandas. WAV/PCM payloads (RIFF magic) decode with
     the stdlib codec (functions/wav.py — PCM 8/16/24/32-bit, IEEE float,
@@ -193,52 +193,38 @@ def extract_audio_features(
     Decoder injection follows extract_features: per-call ``decoder=``
     preferred (``None`` forces stdlib dispatch); the module-global
     ``set_audio_decoder`` applies only when the parameter is unset."""
-    if decoder is _DECODER_UNSET:
+    from ndr_import_spark.functions.flac import flac_audio_decoder, is_flac
+    from ndr_import_spark.functions.mp3 import decode_mp3, is_mp3
+    from ndr_import_spark.functions.wav import is_wav, wav_audio_decoder
+
+    if decoder is _UNSET:
         decoder = _audio_decoder
 
-    def one(payload):
+    def one(mid, payload):
         if payload is None:
-            return None, None, None
+            return [(mid, None, None, None)]
         if decoder is not None:
-            return decoder(bytes(payload))
-        from ndr_import_spark.functions.flac import flac_audio_decoder, is_flac
-        from ndr_import_spark.functions.wav import is_wav, wav_audio_decoder
-
-        raw = bytes(payload)
-        if is_wav(raw):
-            return wav_audio_decoder(raw)
-        if is_flac(raw):
-            return flac_audio_decoder(raw)
-        from ndr_import_spark.functions.mp3 import decode_mp3, is_mp3
-
-        if is_mp3(raw):
+            return [(mid, *decoder(payload))]
+        if is_wav(payload):
+            return [(mid, *wav_audio_decoder(payload))]
+        if is_flac(payload):
+            return [(mid, *flac_audio_decoder(payload))]
+        if is_mp3(payload):
             # env-gated: binds the system libmpg123 when present (the
             # Avro-jar/libheif posture); raises NotImplementedError with
             # the clean-room rationale otherwise (functions/mp3.py —
             # structural analytics via mp3_structure_table need no
             # decoder)
-            sr, nch, pcm = decode_mp3(raw)
+            sr, nch, pcm = decode_mp3(payload)
             feat = [float(abs(int(v))) / 32768.0 for v in pcm[:16]]
-            return len(pcm) // max(nch, 1), sr, feat
+            return [(mid, len(pcm) // max(nch, 1), sr, feat)]
         raise NotImplementedError(
             "Non-WAV/FLAC audio needs an injected decoder; use "
             "multimodal.set_audio_decoder "
             "(deterministic_fake_audio_decoder available for tests)"
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [one(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "n_samples": [d[0] for d in decoded],
-                    "sample_rate": [d[1] for d in decoded],
-                    "feature": [d[2] for d in decoded],
-                }
-            )
-
-    return df.mapInPandas(run, AUDIO_FEATURE_SCHEMA)
+    return payload_map(df, one, AUDIO_FEATURE_SCHEMA)
 
 
 MEDIA_META_SCHEMA = (
@@ -249,7 +235,7 @@ MEDIA_META_SCHEMA = (
 )
 
 
-def extract_media_metadata(df: DataFrame, batch_hint: int = 256) -> DataFrame:
+def extract_media_metadata(df: DataFrame) -> DataFrame:
     """Compressed-media METADATA scan: MP3 frame walk (+Xing/LAME), Ogg
     page walk (Vorbis/Opus id headers, RFC 3533 CRC), MP4 box walk
     (mvhd/stsd/stsz) via sources/mediameta.py — Arrow mapInPandas, one
@@ -257,34 +243,25 @@ def extract_media_metadata(df: DataFrame, batch_hint: int = 256) -> DataFrame:
     payloads yield container='unknown' with NULL fields (per-row
     robustness: a 100 TB crawl's media column routes/budgets on this
     output, so one bad payload must not fail a task)."""
+    from ndr_import_spark.sources.mediameta import MediaMetaError, probe_media
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ndr_import_spark.sources.mediameta import (
-            MediaMetaError,
-            probe_media,
-        )
+    cols = [
+        "container", "codec", "sample_rate", "channels", "duration_ms",
+        "bit_rate", "n_frames", "width", "height", "encoder",
+        "declared_frames", "vbr",
+    ]
 
-        cols = [
-            "container", "codec", "sample_rate", "channels", "duration_ms",
-            "bit_rate", "n_frames", "width", "height", "encoder",
-            "declared_frames", "vbr",
-        ]
-        for pdf in batches:
-            rows = []
-            for payload in pdf["payload"]:
-                try:
-                    m = probe_media(bytes(payload or b""))
-                except (MediaMetaError, IndexError, ValueError):
-                    m = {}
-                rows.append([m.get(c) if m else None for c in cols])
-            out = pd.DataFrame(rows, columns=cols)
-            if not len(out):
-                out = pd.DataFrame(columns=cols)
-            out.loc[out["container"].isna(), "container"] = "unknown"
-            out.insert(0, "media_id", pdf["media_id"].values)
-            yield out
+    def one(mid, payload):
+        try:
+            m = probe_media(payload or b"")
+        except (MediaMetaError, IndexError, ValueError):
+            m = {}
+        row = [m.get(c) for c in cols]
+        if row[0] is None:
+            row[0] = "unknown"
+        return [(mid, *row)]
 
-    return df.mapInPandas(run, MEDIA_META_SCHEMA)
+    return payload_map(df, one, MEDIA_META_SCHEMA)
 
 
 IMAGE_META_SCHEMA = (
@@ -304,76 +281,60 @@ def extract_image_metadata(df: DataFrame) -> DataFrame:
     must find before images ship). Arrow mapInPandas, per-row
     robustness: unparseable payloads yield fmt='unknown' with NULL
     fields."""
+    from ndr_import_spark.functions.exif import (
+        ExifError,
+        extract_image_meta,
+        parse_exif_tiff,
+    )
+    from ndr_import_spark.functions.webp import (
+        WebpError,
+        _walk_riff_chunks,
+        is_webp,
+        webp_metadata,
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    cols = [
+        "fmt", "width", "height", "orientation", "make", "model",
+        "datetime_original", "jfif_xdensity", "jfif_ydensity",
+        "icc_colorspace", "icc_size", "has_gps", "lat_micro",
+        "lon_micro", "alt_cm",
+    ]
 
-        from ndr_import_spark.functions.exif import (
-            ExifError,
-            extract_image_meta,
-            parse_exif_tiff,
-        )
-        from ndr_import_spark.functions.webp import (
-            WebpError,
-            is_webp,
-            webp_metadata,
-        )
+    def webp_meta(raw: bytes) -> dict:
+        # container probe works for all three flavours (incl. lossy
+        # VP8 dims from the uncompressed frame header); the EXIF
+        # chunk body is raw TIFF per the container spec -> same IFD
+        # walk as JPEG APP1 surfaces make/GPS
+        wm = webp_metadata(raw)
+        m = {
+            "fmt": "webp", "width": wm["width"],
+            "height": wm["height"], "has_gps": False,
+        }
+        for fourcc, pos, size in _walk_riff_chunks(raw):
+            if fourcc == b"ICCP":
+                m["icc_size"] = size
+            elif fourcc == b"EXIF":
+                body = raw[pos + 8:pos + 8 + size]
+                if body[:6] == b"Exif\x00\x00":
+                    body = body[6:]
+                exif = parse_exif_tiff(body)
+                exif.pop("width", None), exif.pop("height", None)
+                m.update(exif)
+        return m
 
-        cols = [
-            "fmt", "width", "height", "orientation", "make", "model",
-            "datetime_original", "jfif_xdensity", "jfif_ydensity",
-            "icc_colorspace", "icc_size", "has_gps", "lat_micro",
-            "lon_micro", "alt_cm",
-        ]
+    def one(mid, payload):
+        raw = payload or b""
+        try:
+            m = webp_meta(raw) if is_webp(raw) else extract_image_meta(raw)
+        except (WebpError, ExifError, ValueError, IndexError, struct.error):
+            m = {}
+        row = [m.get(c) for c in cols]
+        if row[0] is None:
+            row[0] = "unknown"
+        row[cols.index("has_gps")] = bool(m.get("has_gps"))
+        return [(mid, *row)]
 
-        from ndr_import_spark.functions.webp import (
-            _walk_riff_chunks as _walk_webp,
-        )
-
-        def webp_meta(raw: bytes) -> dict:
-            # container probe works for all three flavours (incl. lossy
-            # VP8 dims from the uncompressed frame header); the EXIF
-            # chunk body is raw TIFF per the container spec -> same IFD
-            # walk as JPEG APP1 surfaces make/GPS
-            wm = webp_metadata(raw)
-            m = {
-                "fmt": "webp", "width": wm["width"],
-                "height": wm["height"], "has_gps": False,
-            }
-            for fourcc, pos, size in _walk_webp(raw):
-                if fourcc == b"ICCP":
-                    m["icc_size"] = size
-                elif fourcc == b"EXIF":
-                    body = raw[pos + 8:pos + 8 + size]
-                    if body[:6] == b"Exif\x00\x00":
-                        body = body[6:]
-                    exif = parse_exif_tiff(body)
-                    exif.pop("width", None), exif.pop("height", None)
-                    m.update(exif)
-            return m
-
-        for pdf in batches:
-            rows = []
-            for payload in pdf["payload"]:
-                raw = bytes(payload or b"")
-                try:
-                    if is_webp(raw):
-                        m = webp_meta(raw)
-                    else:
-                        m = extract_image_meta(raw)
-                except (WebpError, ExifError, ValueError, IndexError,
-                        _struct.error):
-                    m = {}
-                rows.append([m.get(c) if m else None for c in cols])
-            out = pd.DataFrame(rows, columns=cols)
-            if not len(out):
-                out = pd.DataFrame(columns=cols)
-            out.loc[out["fmt"].isna(), "fmt"] = "unknown"
-            out["has_gps"] = out["has_gps"].astype("boolean").fillna(False)
-            out.insert(0, "media_id", pdf["media_id"].values)
-            yield out
-
-    return df.mapInPandas(run, IMAGE_META_SCHEMA)
+    return payload_map(df, one, IMAGE_META_SCHEMA)
 
 
 def scrub_image_metadata(
@@ -389,44 +350,31 @@ def scrub_image_metadata(
     extent zeroing. Other / unparseable payloads pass through UNCHANGED
     (the scrub must never destroy data it does not understand — route
     those to quarantine by fmt instead)."""
+    from ndr_import_spark.functions.exif import ExifError, strip_jpeg_metadata
+    from ndr_import_spark.functions.heif import (
+        HeifError,
+        is_heif,
+        scrub_heif_exif,
+    )
+    from ndr_import_spark.functions.webp import (
+        WebpError,
+        is_webp,
+        scrub_webp_metadata,
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def one(mid, payload):
+        raw = payload or b""
+        try:
+            if is_webp(raw):
+                return [(mid, scrub_webp_metadata(raw))]
+            if is_heif(raw):
+                return [(mid, scrub_heif_exif(raw))]
+            return [(mid, strip_jpeg_metadata(raw))]
+        except (WebpError, HeifError, ExifError, struct.error):
+            return [(mid, raw)]
 
-        from ndr_import_spark.functions.exif import (
-            ExifError,
-            strip_jpeg_metadata,
-        )
-        from ndr_import_spark.functions.heif import (
-            HeifError,
-            is_heif,
-            scrub_heif_exif,
-        )
-        from ndr_import_spark.functions.webp import (
-            WebpError,
-            is_webp,
-            scrub_webp_metadata,
-        )
-
-        for pdf in batches:
-            out_payloads = []
-            for payload in pdf[payload_col]:
-                raw = bytes(payload or b"")
-                try:
-                    if is_webp(raw):
-                        out_payloads.append(scrub_webp_metadata(raw))
-                    elif is_heif(raw):
-                        out_payloads.append(scrub_heif_exif(raw))
-                    else:
-                        out_payloads.append(strip_jpeg_metadata(raw))
-                except (WebpError, HeifError, ExifError, _struct.error):
-                    out_payloads.append(raw)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].values, payload_col: out_payloads}
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        run, f"{id_col} long, {payload_col} binary"
+    return payload_map(
+        df, one, f"{id_col} long, {payload_col} binary", id_col, payload_col
     )
 
 
@@ -436,14 +384,10 @@ VIDEO_FEATURE_SCHEMA = (
 )
 
 
-_USE_GLOBAL = object()
-
-
 def extract_video_features(
     df: DataFrame,
     frame_stride: int = 1,
-    batch_hint: int = 64,
-    decoder=_USE_GLOBAL,
+    decoder=_UNSET,
 ) -> DataFrame:
     """Video twin of `extract_features`: decode + per-frame feature
     extraction via Arrow-batched mapInPandas. MJPEG-in-AVI payloads (RIFF
@@ -460,48 +404,33 @@ def extract_video_features(
     global, pass `None` to force stdlib container dispatch, or pass a
     callable to use it for this plan only (r7 ADVICE — callers used to
     clobber the global to get the stdlib path)."""
+    from ndr_import_spark.functions.avi import avi_video_decoder, is_avi
+    from ndr_import_spark.functions.gif import gif_video_decoder, is_gif
+
     if frame_stride < 1:
         raise ValueError(
             f"frame_stride must be >= 1, got {frame_stride}"
         )
-    if decoder is _USE_GLOBAL:
+    if decoder is _UNSET:
         decoder = _video_decoder
 
-    def one(payload):
+    def one(mid, payload):
         if payload is None:
-            return None, None, None, None, None
+            return [(mid, None, None, None, None, None)]
         if decoder is not None:
-            return decoder(bytes(payload))
-        from ndr_import_spark.functions.avi import avi_video_decoder, is_avi
-        from ndr_import_spark.functions.gif import gif_video_decoder, is_gif
-
-        raw = bytes(payload)
-        if is_avi(raw):
-            return avi_video_decoder(raw, frame_stride=frame_stride)
-        if is_gif(raw):
+            return [(mid, *decoder(payload))]
+        if is_avi(payload):
+            return [(mid, *avi_video_decoder(payload, frame_stride=frame_stride))]
+        if is_gif(payload):
             # animated GIF is a video-like container (frames + delays):
             # the second real stdlib container on this path
-            return gif_video_decoder(raw, frame_stride=frame_stride)
+            return [(mid, *gif_video_decoder(payload, frame_stride=frame_stride))]
         raise NotImplementedError(
             "Non-AVI/GIF video needs an injected decoder; use "
             "multimodal.set_video_decoder"
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [one(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "n_frames": [d[0] for d in decoded],
-                    "width": [d[1] for d in decoded],
-                    "height": [d[2] for d in decoded],
-                    "duration_ms": [d[3] for d in decoded],
-                    "feature": [d[4] for d in decoded],
-                }
-            )
-
-    return df.mapInPandas(run, VIDEO_FEATURE_SCHEMA)
+    return payload_map(df, one, VIDEO_FEATURE_SCHEMA)
 
 
 RESIZED_SCHEMA = (
@@ -531,106 +460,53 @@ def _encode_gif_quantized(width: int, height: int, rgb: bytes) -> bytes:
 
 
 def resize_images(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Thumbnail/normalise stage: decode PNG, baseline-JPEG, GIF or BMP
-    payloads, nearest-neighbour resample to (target_w, target_h),
+    """Thumbnail/normalise stage: decode PNG, baseline-JPEG, GIF, BMP or
+    TIFF payloads, nearest-neighbour resample to (target_w, target_h),
     re-encode in the SOURCE format (PNG→PNG, JPEG→JPEG, GIF→GIF,
-    BMP→BMP) — a REAL stdlib roundtrip, batched through mapInPandas like
-    the feature extractor. Resizing needs raw pixels, so payloads in none
-    of the four formats raise per batch — the same honest env-gate
-    contract as the decode path."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ndr_import_spark.functions.bmp import (
-            decode_bmp,
-            encode_bmp,
-            is_bmp,
-        )
-        from ndr_import_spark.functions.gif import (
-            decode_gif,
-            encode_gif,
-            is_gif,
-        )
-        from ndr_import_spark.functions.jpeg import (
-            decode_jpeg,
-            encode_jpeg,
-            is_jpeg,
-        )
-        from ndr_import_spark.functions.png import (
-            decode_png,
-            encode_png,
-            is_png,
-            resize_rgb,
-        )
-        from ndr_import_spark.functions.tiff import (
-            decode_tiff,
-            encode_tiff,
-            is_tiff,
-        )
+    BMP→BMP, TIFF→TIFF) — a REAL stdlib roundtrip, batched through
+    mapInPandas like the feature extractor. Resizing needs raw pixels
+    and an encoder, so payloads in none of those five formats (WebP and
+    AVIF/HEIC included) raise NotImplementedError, failing the task —
+    the same honest env-gate contract as the decode path."""
+    from ndr_import_spark.functions.bmp import encode_bmp
+    from ndr_import_spark.functions.jpeg import encode_jpeg
+    from ndr_import_spark.functions.png import encode_png, resize_rgb
+    from ndr_import_spark.functions.tiff import encode_tiff
 
-        for pdf in batches:
-            out_payload = []
-            for p in pdf["payload"]:
-                data = bytes(p or b"")
-                if is_png(data):
-                    w, h, ch, px = decode_png(data)
-                    rgb = resize_rgb(w, h, ch, px, target_w, target_h)
-                    out_payload.append(encode_png(target_w, target_h, rgb))
-                    continue
-                if is_jpeg(data):
-                    w, h, ch, px = decode_jpeg(data)
-                    rgb = resize_rgb(w, h, ch, px, target_w, target_h)
-                    if ch == 1:
-                        # keep grayscale grayscale: resize_rgb replicated
-                        # the grey plane to 3 identical channels — take it
-                        # back out and re-encode single-component (a 3-ch
-                        # YCbCr re-encode changed the pixel layout and grew
-                        # the payload for no information)
-                        out_payload.append(
-                            encode_jpeg(
-                                target_w, target_h, rgb[0::3], channels=1
-                            )
-                        )
-                    else:
-                        out_payload.append(
-                            encode_jpeg(target_w, target_h, rgb, channels=3)
-                        )
-                    continue
-                if is_gif(data):
-                    # the decoded canvas is NOT guaranteed <=256 colours:
-                    # sub-frame compositing and transparency add black on
-                    # top of the palette (a full 256-colour GIF with a
-                    # smaller image descriptor decodes to 257), so the
-                    # re-encode quantises deterministically (drop low bits
-                    # per channel, coarsest first fit) when needed
-                    w, h, ch, px = decode_gif(data)
-                    rgb = resize_rgb(w, h, ch, px, target_w, target_h)
-                    out_payload.append(
-                        _encode_gif_quantized(target_w, target_h, rgb)
-                    )
-                    continue
-                if is_bmp(data):
-                    w, h, ch, px = decode_bmp(data)
-                    rgb = resize_rgb(w, h, ch, px, target_w, target_h)
-                    out_payload.append(encode_bmp(target_w, target_h, rgb))
-                    continue
-                if is_tiff(data):
-                    w, h, ch, px = decode_tiff(data)
-                    rgb = resize_rgb(w, h, ch, px, target_w, target_h)
-                    out_payload.append(encode_tiff(target_w, target_h, rgb))
-                    continue
-                raise NotImplementedError(
-                    "resize_images requires PNG, baseline-JPEG, GIF, BMP or "
-                    "TIFF payloads (stdlib codecs)"
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "width": [target_w] * len(pdf),
-                    "height": [target_h] * len(pdf),
-                    "payload": out_payload,
-                }
+    encoders = {
+        "png": encode_png,
+        "jpeg": encode_jpeg,
+        # the decoded GIF canvas is NOT guaranteed <=256 colours:
+        # sub-frame compositing and transparency add black on top of the
+        # palette (a full 256-colour GIF with a smaller image descriptor
+        # decodes to 257), so the re-encode quantises deterministically
+        # (drop low bits per channel, coarsest first fit) when needed
+        "gif": _encode_gif_quantized,
+        "bmp": encode_bmp,
+        "tiff": encode_tiff,
+    }
+
+    def one(mid, payload):
+        raw = payload or b""
+        fmt = _image_format(raw)
+        if fmt not in encoders:
+            raise NotImplementedError(
+                "resize_images requires PNG, baseline-JPEG, GIF, BMP or "
+                "TIFF payloads (stdlib codecs)"
             )
+        w, h, ch, px = _decode_raw(raw)
+        rgb = resize_rgb(w, h, ch, px, target_w, target_h)
+        if fmt == "jpeg" and ch == 1:
+            # keep grayscale grayscale: resize_rgb replicated the grey
+            # plane to 3 identical channels — take it back out and
+            # re-encode single-component (a 3-ch YCbCr re-encode changed
+            # the pixel layout and grew the payload for no information)
+            out = encode_jpeg(target_w, target_h, rgb[0::3], channels=1)
+        else:
+            out = encoders[fmt](target_w, target_h, rgb)
+        return [(mid, target_w, target_h, out)]
 
-    return df.mapInPandas(run, RESIZED_SCHEMA)
+    return payload_map(df, one, RESIZED_SCHEMA)
 
 
 def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -691,37 +567,47 @@ def ahash64(w: int, h: int, ch: int, px: bytes, grid: int = 8) -> int:
     return bits
 
 
+@functools.cache
+def _image_codecs() -> dict:
+    """The stdlib image codecs, format → (is_x, decode_x), in magic-byte
+    dispatch order. Imported on first use, so a task that never decodes
+    an image never loads them; shared, so callers must not mutate it."""
+    from ndr_import_spark.functions import bmp, gif, heif, jpeg, png, tiff, webp
+
+    return {
+        "png": (png.is_png, png.decode_png),
+        "webp": (webp.is_webp, webp.decode_webp),
+        "jpeg": (jpeg.is_jpeg, jpeg.decode_jpeg),
+        "gif": (gif.is_gif, gif.decode_gif),
+        "bmp": (bmp.is_bmp, bmp.decode_bmp),
+        "tiff": (tiff.is_tiff, tiff.decode_tiff),
+        # env-gated system-libheif decode (r9); raises
+        # NotImplementedError with a clear message when absent
+        "heif": (heif.is_heif, heif.decode_heif),
+    }
+
+
+def _image_format(data: bytes) -> str | None:
+    """The `_image_codecs` format whose magic bytes `data` carries."""
+    for fmt, (is_x, _decode) in _image_codecs().items():
+        if is_x(data):
+            return fmt
+    return None
+
+
 def _decode_raw(data: bytes):
-    """Magic-byte dispatch to the stdlib codecs' RAW pixel decoders —
-    shared by resize and perceptual hashing."""
-    from ndr_import_spark.functions.bmp import decode_bmp, is_bmp
-    from ndr_import_spark.functions.gif import decode_gif, is_gif
-    from ndr_import_spark.functions.jpeg import decode_jpeg, is_jpeg
-    from ndr_import_spark.functions.png import decode_png, is_png
-    from ndr_import_spark.functions.tiff import decode_tiff, is_tiff
-    from ndr_import_spark.functions.webp import decode_webp, is_webp
-
-    if is_png(data):
-        return decode_png(data)
-    if is_webp(data):
-        return decode_webp(data)
-    if is_jpeg(data):
-        return decode_jpeg(data)
-    if is_gif(data):
-        return decode_gif(data)
-    if is_bmp(data):
-        return decode_bmp(data)
-    if is_tiff(data):
-        return decode_tiff(data)
-    from ndr_import_spark.functions.heif import decode_heif, is_heif
-
-    if is_heif(data):
-        # env-gated system-libheif decode (r9); raises when absent
-        return decode_heif(data)
-    raise NotImplementedError(
-        "perceptual hashing requires PNG, WebP, baseline-JPEG, GIF, "
-        "BMP, TIFF or AVIF/HEIC payloads"
-    )
+    """The image dispatch: magic bytes → that codec's RAW pixel decoder,
+    (width, height, channels, pixels) — shared by feature extraction,
+    resize and perceptual hashing."""
+    fmt = _image_format(data)
+    if fmt is None:
+        raise NotImplementedError(
+            "no stdlib image codec for this payload (PNG, WebP, JPEG, GIF, "
+            "BMP, TIFF, AVIF/HEIC); inject a decoder with "
+            "multimodal.set_image_decoder (deterministic_fake_decoder "
+            "available for tests)"
+        )
+    return _image_codecs()[fmt][1](data)
 
 
 def perceptual_hash_images(df: DataFrame, grid: int = 8) -> DataFrame:
@@ -729,26 +615,14 @@ def perceptual_hash_images(df: DataFrame, grid: int = 8) -> DataFrame:
     codec stack, Arrow-batched. The hash is pure integer arithmetic on
     decoded pixels, so the same image encoded in ANY lossless format
     (PNG/BMP/TIFF/GIF within palette limits) produces the SAME hash —
-    which is exactly what cross-format image dedup needs."""
+    which is exactly what cross-format image dedup needs. A null or
+    undecodable payload fails the task."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, hashes = [], [], []
-            for p in pdf["payload"]:
-                w, h, ch, px = _decode_raw(bytes(p or b""))
-                ws.append(w)
-                hs.append(h)
-                hashes.append(ahash64(w, h, ch, px, grid))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].values,
-                    "width": ws,
-                    "height": hs,
-                    "phash": hashes,
-                }
-            )
+    def one(mid, payload):
+        w, h, ch, px = _decode_raw(payload or b"")
+        return [(mid, w, h, ahash64(w, h, ch, px, grid))]
 
-    return df.mapInPandas(run, PHASH_SCHEMA)
+    return payload_map(df, one, PHASH_SCHEMA)
 
 
 def image_dedup_groups(df: DataFrame, grid: int = 8) -> DataFrame:
@@ -794,102 +668,89 @@ def audio_tag_table(df: DataFrame, payload_col: str = "payload",
 
     Arrow mapInPandas, stateless, shuffle-free; untagged payloads yield
     id3_version=NULL rather than failing the task."""
+    from ndr_import_spark.functions.audiotags import (
+        AudioTagError,
+        flac_comments,
+        mp4_ilst,
+        ogg_comments,
+        riff_info,
+    )
+    from ndr_import_spark.functions.mp3 import parse_id3v1, parse_id3v2
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    # v2.4 / v2.3 / v2.2 frame ids for the common fields
+    fields = {
+        "title": ("TIT2", "TT2"), "artist": ("TPE1", "TP1"),
+        "album": ("TALB", "TAL"), "year": ("TDRC", "TYER", "TYE"),
+        "genre": ("TCON", "TCO"), "encoder": ("TSSE", "TSS"),
+    }
+    # VorbisComment and RIFF/INFO key maps onto the same columns
+    vorbis_map = {
+        "title": ("TITLE",), "artist": ("ARTIST",),
+        "album": ("ALBUM",), "year": ("DATE", "YEAR"),
+        "genre": ("GENRE",), "encoder": ("ENCODER",),
+    }
+    riff_map = {
+        "title": ("INAM",), "artist": ("IART",), "album": ("IPRD",),
+        "year": ("ICRD",), "genre": ("IGNR",), "encoder": ("ISFT",),
+    }
 
-        from ndr_import_spark.functions.audiotags import (
-            AudioTagError,
-            flac_comments,
-            mp4_ilst,
-            ogg_comments,
-            riff_info,
-        )
-        from ndr_import_spark.functions.mp3 import parse_id3v1, parse_id3v2
+    def pick(tags: dict, fids) -> str | None:
+        for fid in fids:
+            if tags.get(fid):
+                return tags[fid]
+        return None
 
-        # v2.4 / v2.3 / v2.2 frame ids for the common fields
-        fields = {
-            "title": ("TIT2", "TT2"), "artist": ("TPE1", "TP1"),
-            "album": ("TALB", "TAL"), "year": ("TDRC", "TYER", "TYE"),
-            "genre": ("TCON", "TCO"), "encoder": ("TSSE", "TSS"),
-        }
-        # VorbisComment and RIFF/INFO key maps onto the same columns
-        vorbis_map = {
-            "title": ("TITLE",), "artist": ("ARTIST",),
-            "album": ("ALBUM",), "year": ("DATE", "YEAR"),
-            "genre": ("GENRE",), "encoder": ("ENCODER",),
-        }
-        riff_map = {
-            "title": ("INAM",), "artist": ("IART",), "album": ("IPRD",),
-            "year": ("ICRD",), "genre": ("IGNR",), "encoder": ("ISFT",),
-        }
+    def one(mid, payload):
+        raw = payload or b""
+        rec: dict = {k: None for k in fields}
+        version = comment = None
+        has_pic = False
+        n_frames = 0
+        v2 = parse_id3v2(raw)
+        v1 = parse_id3v1(raw)
+        if v2 is not None:
+            version = v2["version"]
+            has_pic = v2["has_picture"]
+            n_frames = v2["n_frames"]
+            comment = v2["comment"]
+            for k, fids in fields.items():
+                rec[k] = pick(v2["tags"], fids)
+        if v1 is not None:
+            version = version or "1"
+            for k in ("title", "artist", "album", "year"):
+                rec[k] = rec[k] or v1[k]
+            comment = comment or v1["comment"]
+        if version is None:
+            # VorbisComment family + RIFF INFO + MP4 ilst
+            try:
+                vc = flac_comments(raw) or ogg_comments(raw) or mp4_ilst(raw)
+                if vc is not None:
+                    version = vc.get("codec") or "flac"
+                    has_pic = bool(vc.get("has_picture"))
+                    n_frames = vc["n_comments"]
+                    for k, fids in vorbis_map.items():
+                        rec[k] = pick(vc["tags"], fids)
+                    comment = pick(vc["tags"], ("COMMENT", "DESCRIPTION"))
+                else:
+                    ri = riff_info(raw)
+                    if ri is not None:
+                        version = "riff"
+                        n_frames = ri["n_comments"]
+                        for k, fids in riff_map.items():
+                            rec[k] = pick(ri["tags"], fids)
+                        comment = pick(ri["tags"], ("ICMT",))
+            except (AudioTagError, IndexError, struct.error):
+                # per-payload isolation: a malformed container
+                # (truncated Ogg page, bad lacing) must yield an
+                # error row, never fail the Spark task
+                version = "error"
+        return [(
+            mid, version, rec["title"], rec["artist"], rec["album"],
+            rec["year"], rec["genre"], rec["encoder"], comment, has_pic,
+            n_frames,
+        )]
 
-        def pick(tags: dict, fids) -> str | None:
-            for fid in fids:
-                if tags.get(fid):
-                    return tags[fid]
-            return None
-
-        for pdf in batches:
-            out = []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(p or b"")
-                rec: dict = {k: None for k in fields}
-                version = comment = None
-                has_pic = False
-                n_frames = 0
-                v2 = parse_id3v2(raw)
-                v1 = parse_id3v1(raw)
-                if v2 is not None:
-                    version = v2["version"]
-                    has_pic = v2["has_picture"]
-                    n_frames = v2["n_frames"]
-                    comment = v2["comment"]
-                    for k, fids in fields.items():
-                        rec[k] = pick(v2["tags"], fids)
-                if v1 is not None:
-                    version = version or "1"
-                    for k in ("title", "artist", "album", "year"):
-                        rec[k] = rec[k] or v1[k]
-                    comment = comment or v1["comment"]
-                if version is None:
-                    # VorbisComment family + RIFF INFO + MP4 ilst
-                    try:
-                        vc = (flac_comments(raw) or ogg_comments(raw)
-                              or mp4_ilst(raw))
-                        if vc is not None:
-                            version = vc.get("codec") or "flac"
-                            has_pic = bool(vc.get("has_picture"))
-                            n_frames = vc["n_comments"]
-                            for k, fids in vorbis_map.items():
-                                rec[k] = pick(vc["tags"], fids)
-                            comment = pick(
-                                vc["tags"], ("COMMENT", "DESCRIPTION"))
-                        else:
-                            ri = riff_info(raw)
-                            if ri is not None:
-                                version = "riff"
-                                n_frames = ri["n_comments"]
-                                for k, fids in riff_map.items():
-                                    rec[k] = pick(ri["tags"], fids)
-                                comment = pick(ri["tags"], ("ICMT",))
-                    except (AudioTagError, IndexError, _struct.error):
-                        # per-payload isolation: a malformed container
-                        # (truncated Ogg page, bad lacing) must yield an
-                        # error row, never fail the Spark task
-                        version = "error"
-                out.append((
-                    int(mid), version, rec["title"], rec["artist"],
-                    rec["album"], rec["year"], rec["genre"],
-                    rec["encoder"], comment, has_pic, n_frames,
-                ))
-            yield pd.DataFrame(out, columns=[
-                "media_id", "id3_version", "title", "artist", "album",
-                "year", "genre", "encoder", "comment", "has_picture",
-                "n_frames",
-            ])
-
-    return df.mapInPandas(run, AUDIO_TAG_SCHEMA)
+    return payload_map(df, one, AUDIO_TAG_SCHEMA, id_col, payload_col)
 
 
 AUDIO_FP_SCHEMA = (
@@ -911,40 +772,28 @@ def audio_fingerprint_table(df: DataFrame, payload_col: str = "payload",
 
     Arrow mapInPandas, stateless, shuffle-free; undecodable payloads
     yield codec='error' with NULL keys rather than failing the task."""
+    from ndr_import_spark.functions.audiofp import (
+        audio_codec_name,
+        audio_fingerprint,
+        decode_audio,
+        pcm_digest,
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def one(mid, payload):
+        raw = payload or b""
+        try:
+            codec = audio_codec_name(raw)
+            sr, samples = decode_audio(raw)
+            return [(
+                mid, codec, int(sr), int(samples.size),
+                pcm_digest(samples), audio_fingerprint(samples),
+            )]
+        except (ValueError, IndexError, struct.error):
+            # AudioFpError / WavError / AdpcmError and flac.py's
+            # plain ValueErrors are all ValueError subclasses
+            return [(mid, "error", None, None, None, None)]
 
-        from ndr_import_spark.functions.audiofp import (
-            audio_codec_name,
-            audio_fingerprint,
-            decode_audio,
-            pcm_digest,
-        )
-
-        for pdf in batches:
-            out = []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(p or b"")
-                try:
-                    codec = audio_codec_name(raw)
-                    sr, samples = decode_audio(raw)
-                    out.append((
-                        int(mid), codec, int(sr), int(samples.size),
-                        pcm_digest(samples),
-                        audio_fingerprint(samples),
-                    ))
-                except (ValueError, IndexError, _struct.error):
-                    # AudioFpError / WavError / AdpcmError and flac.py's
-                    # plain ValueErrors are all ValueError subclasses
-                    out.append((int(mid), "error", None, None, None,
-                                None))
-            yield pd.DataFrame(out, columns=[
-                "media_id", "codec", "sample_rate", "n_samples",
-                "pcm_md5", "fingerprint",
-            ])
-
-    return df.mapInPandas(run, AUDIO_FP_SCHEMA)
+    return payload_map(df, one, AUDIO_FP_SCHEMA, id_col, payload_col)
 
 
 AUDIO_QUALITY_SCHEMA = (
@@ -969,34 +818,27 @@ def audio_quality_table(df: DataFrame, payload_col: str = "payload",
     Arrow mapInPandas, stateless, shuffle-free; every stat is exact
     dyadic arithmetic for power-of-two sample counts, so oracles replay
     them bit-for-bit. Undecodable payloads yield verdict='error'."""
+    from ndr_import_spark.functions.audiofp import (
+        audio_codec_name,
+        audio_quality_stats,
+        decode_audio,
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    cols = ["sample_rate", "n_samples", "duration_ms", "peak",
+            "mean_square", "dc_offset", "clip_ratio",
+            "silence_ratio", "verdict"]
 
-        from ndr_import_spark.functions.audiofp import (
-            audio_codec_name,
-            audio_quality_stats,
-            decode_audio,
-        )
+    def one(mid, payload):
+        raw = payload or b""
+        try:
+            codec = audio_codec_name(raw)
+            sr, samples = decode_audio(raw)
+            st = audio_quality_stats(sr, samples)
+            return [(mid, codec, *[st[c] for c in cols])]
+        except (ValueError, IndexError, struct.error):
+            return [(mid, "error", *[None] * 8, "error")]
 
-        cols = ["sample_rate", "n_samples", "duration_ms", "peak",
-                "mean_square", "dc_offset", "clip_ratio",
-                "silence_ratio", "verdict"]
-        for pdf in batches:
-            out = []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(p or b"")
-                try:
-                    codec = audio_codec_name(raw)
-                    sr, samples = decode_audio(raw)
-                    st = audio_quality_stats(sr, samples)
-                    out.append([int(mid), codec] + [st[c] for c in cols])
-                except (ValueError, IndexError, _struct.error):
-                    out.append([int(mid), "error"] + [None] * 8
-                               + ["error"])
-            yield pd.DataFrame(out, columns=["media_id", "codec"] + cols)
-
-    return df.mapInPandas(run, AUDIO_QUALITY_SCHEMA)
+    return payload_map(df, one, AUDIO_QUALITY_SCHEMA, id_col, payload_col)
 
 
 def resample_audio(df: DataFrame, target_sr: int,
@@ -1012,35 +854,26 @@ def resample_audio(df: DataFrame, target_sr: int,
 
     Arrow mapInPandas, stateless; the resample is pure vectorised
     interpolation, exact on dyadic signals at integer factors."""
+    from ndr_import_spark.functions.audiofp import (
+        decode_audio,
+        resample_audio_linear,
+    )
+    from ndr_import_spark.functions.wav import encode_wav
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def one(mid, payload):
+        try:
+            sr, samples = decode_audio(payload or b"")
+            res = resample_audio_linear(samples, sr, target_sr)
+            return [(mid, encode_wav(target_sr, res, bits=16),
+                     int(target_sr), int(res.size))]
+        except (ValueError, IndexError, struct.error):
+            return []
 
-        from ndr_import_spark.functions.audiofp import (
-            decode_audio,
-            resample_audio_linear,
-        )
-        from ndr_import_spark.functions.wav import encode_wav
-
-        for pdf in batches:
-            out = []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(p or b"")
-                try:
-                    sr, samples = decode_audio(raw)
-                    res = resample_audio_linear(samples, sr, target_sr)
-                    out.append((int(mid),
-                                encode_wav(target_sr, res, bits=16),
-                                int(target_sr), int(res.size)))
-                except (ValueError, IndexError, _struct.error):
-                    continue
-            yield pd.DataFrame(out, columns=[
-                "media_id", "payload", "sample_rate", "n_samples"])
-
-    return df.mapInPandas(
-        run,
+    return payload_map(
+        df, one,
         f"{id_col} long, {payload_col} binary, sample_rate int, "
         "n_samples long",
+        id_col, payload_col,
     )
 
 
@@ -1064,39 +897,27 @@ def segment_audio_table(df: DataFrame, min_gap_ms: float = 100.0,
     Arrow mapInPandas, stateless, shuffle-free; segment rows are
     ~50 bytes regardless of audio length. Undecodable or fully-silent
     payloads yield no rows."""
+    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    from ndr_import_spark.functions.audiofp import (
+        decode_audio,
+        silence_segments,
+    )
 
-        import numpy as np
+    def one(mid, payload):
+        try:
+            sr, samples = decode_audio(payload or b"")
+            gap = max(1, int(sr * min_gap_ms / 1000.0))
+            segs = silence_segments(samples, gap)
+        except (ValueError, IndexError, struct.error):
+            return []
+        return [
+            (mid, ix, a * 1000.0 / sr, b * 1000.0 / sr, int(b - a),
+             float(np.mean(samples[a:b] * samples[a:b])))
+            for ix, (a, b) in enumerate(segs)
+        ]
 
-        from ndr_import_spark.functions.audiofp import (
-            decode_audio,
-            silence_segments,
-        )
-
-        for pdf in batches:
-            out = []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(p or b"")
-                try:
-                    sr, samples = decode_audio(raw)
-                    gap = max(1, int(sr * min_gap_ms / 1000.0))
-                    segs = silence_segments(samples, gap)
-                except (ValueError, IndexError, _struct.error):
-                    continue
-                for ix, (a, b) in enumerate(segs):
-                    seg = samples[a:b]
-                    out.append((
-                        int(mid), ix, a * 1000.0 / sr, b * 1000.0 / sr,
-                        int(b - a), float(np.mean(seg * seg)),
-                    ))
-            yield pd.DataFrame(out, columns=[
-                "media_id", "seg_ix", "start_ms", "end_ms", "n_samples",
-                "mean_square",
-            ])
-
-    return df.mapInPandas(run, AUDIO_SEG_SCHEMA)
+    return payload_map(df, one, AUDIO_SEG_SCHEMA, id_col, payload_col)
 
 
 MEDIA_ROUTE_SCHEMA = (
@@ -1114,20 +935,13 @@ def route_media_payloads(df: DataFrame, payload_col: str = "payload",
     sends each payload to the right probe family (extract_image_*,
     audio_*, probe_media, archive expansion) without touching payload
     bodies. Never raises: unrecognised bytes route 'unknown'."""
+    from ndr_import_spark.sources.mediameta import sniff_media
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ndr_import_spark.sources.mediameta import sniff_media
+    def one(mid, payload):
+        raw = payload or b""
+        return [(mid, *sniff_media(raw), len(raw))]
 
-        for pdf in batches:
-            out = []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(p or b"")
-                family, container = sniff_media(raw)
-                out.append((int(mid), family, container, len(raw)))
-            yield pd.DataFrame(out, columns=[
-                "media_id", "family", "container", "n_bytes"])
-
-    return df.mapInPandas(run, MEDIA_ROUTE_SCHEMA)
+    return payload_map(df, one, MEDIA_ROUTE_SCHEMA, id_col, payload_col)
 
 
 ALBUM_ART_SCHEMA = (
@@ -1151,37 +965,29 @@ def extract_album_art(df: DataFrame, payload_col: str = "payload",
     Arrow mapInPandas, stateless, shuffle-free; art-sized cost (audio
     codec bytes are never read past the tag walk). Untagged or
     malformed payloads yield no rows rather than failing the task."""
+    from ndr_import_spark.functions.audiotags import (
+        AudioTagError,
+        flac_pictures,
+        mp4_covers,
+    )
+    from ndr_import_spark.functions.mp3 import id3_pictures
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
+    def one(mid, payload):
+        raw = payload or b""
+        try:
+            arts = [("id3", m, d) for m, d in id3_pictures(raw)]
+            if not arts:
+                arts = [("flac", m, d) for m, d in flac_pictures(raw)]
+            if not arts:
+                arts = [("mp4", m, d) for m, d in mp4_covers(raw)]
+        except (AudioTagError, IndexError, struct.error):
+            return []  # malformed container: no art rows
+        return [
+            (mid, ix, cont, mime, art)
+            for ix, (cont, mime, art) in enumerate(arts)
+        ]
 
-        from ndr_import_spark.functions.audiotags import (
-            AudioTagError,
-            flac_pictures,
-            mp4_covers,
-        )
-        from ndr_import_spark.functions.mp3 import id3_pictures
-
-        for pdf in batches:
-            out = []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(p or b"")
-                try:
-                    arts = [("id3", m, d) for m, d in id3_pictures(raw)]
-                    if not arts:
-                        arts = [("flac", m, d)
-                                for m, d in flac_pictures(raw)]
-                    if not arts:
-                        arts = [("mp4", m, d) for m, d in mp4_covers(raw)]
-                except (AudioTagError, IndexError, _struct.error):
-                    continue  # malformed container: no art rows
-                for ix, (cont, mime, art) in enumerate(arts):
-                    out.append((int(mid), ix, cont, mime, art))
-            yield pd.DataFrame(out, columns=[
-                "media_id", "art_ix", "container", "mime", "payload",
-            ])
-
-    return df.mapInPandas(run, ALBUM_ART_SCHEMA)
+    return payload_map(df, one, ALBUM_ART_SCHEMA, id_col, payload_col)
 
 
 WEBP_CANVAS_SCHEMA = (
@@ -1203,37 +1009,27 @@ def webp_canvas_table(df: DataFrame, payload_col: str = "payload",
     Arrow mapInPandas, stateless, shuffle-free: the canvases of one
     animation live and die inside one task; only digests and channel
     sums (32 bytes/frame) ever reach the shuffle. Per-payload error
-    isolation: a malformed animation yields one frame_ix=-1 row."""
-    import hashlib
+    isolation: a malformed animation or a null payload yields one
+    frame_ix=-1 row (after the rows of any frames composited before
+    the fault)."""
+    from ndr_import_spark.functions.vp8 import VP8Error
+    from ndr_import_spark.functions.webp import WebpError, composite_webp_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ndr_import_spark.functions.vp8 import VP8Error
-        from ndr_import_spark.functions.webp import (
-            WebpError,
-            composite_webp_frames,
-        )
+    def one(mid, payload):
+        rows = []
+        try:
+            for fr in composite_webp_frames(payload or b""):
+                c = fr["canvas"]
+                rows.append((
+                    mid, fr["frame_ix"], fr["duration_ms"],
+                    hashlib.md5(c).hexdigest(),
+                    sum(c[0::4]), sum(c[1::4]), sum(c[2::4]), sum(c[3::4]),
+                ))
+        except (WebpError, VP8Error, NotImplementedError):
+            rows.append((mid, -1, None, None, None, None, None, None))
+        return rows
 
-        for pdf in batches:
-            out = []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    for fr in composite_webp_frames(bytes(p)):
-                        c = fr["canvas"]
-                        out.append((
-                            int(mid), fr["frame_ix"], fr["duration_ms"],
-                            hashlib.md5(c).hexdigest(),
-                            sum(c[0::4]), sum(c[1::4]),
-                            sum(c[2::4]), sum(c[3::4]),
-                        ))
-                except (WebpError, VP8Error, NotImplementedError):
-                    out.append((int(mid), -1, None, None,
-                                None, None, None, None))
-            yield pd.DataFrame(out, columns=[
-                "media_id", "frame_ix", "duration_ms", "canvas_md5",
-                "sum_r", "sum_g", "sum_b", "sum_a",
-            ])
-
-    return df.mapInPandas(run, WEBP_CANVAS_SCHEMA)
+    return payload_map(df, one, WEBP_CANVAS_SCHEMA, id_col, payload_col)
 
 
 MP3_STRUCT_SCHEMA = (
@@ -1255,28 +1051,23 @@ def mp3_structure_table(df: DataFrame, payload_col: str = "payload",
     Arrow mapInPandas, stateless, shuffle-free — payloads never leave
     their input split, identical scaling posture to extract_features.
     Unparseable payloads get verdict='not_mp3' (per-payload isolation)."""
+    from ndr_import_spark.functions.mp3 import Mp3Error, mp3_structure
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ndr_import_spark.functions.mp3 import Mp3Error, mp3_structure
+    cols = [
+        "n_frames", "sample_rate", "channels", "mpeg1", "duration_ms",
+        "vbr", "verdict", "max_reservoir_bytes", "huffman_bits",
+        "scalefac_bits", "n_long", "n_short", "n_mixed",
+    ]
 
-        cols = [
-            "n_frames", "sample_rate", "channels", "mpeg1", "duration_ms",
-            "vbr", "verdict", "max_reservoir_bytes", "huffman_bits",
-            "scalefac_bits", "n_long", "n_short", "n_mixed",
-        ]
-        for pdf in batches:
-            out = []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    s = mp3_structure(bytes(p or b""))
-                    out.append([int(mid)] + [s[c] for c in cols])
-                except Mp3Error:
-                    out.append(
-                        [int(mid), 0, None, None, None, 0.0, None,
-                         "not_mp3", 0, 0, 0, 0, 0, 0])
-            yield pd.DataFrame(out, columns=["media_id"] + cols)
+    def one(mid, payload):
+        try:
+            s = mp3_structure(payload or b"")
+        except Mp3Error:
+            return [(mid, 0, None, None, None, 0.0, None, "not_mp3",
+                     0, 0, 0, 0, 0, 0)]
+        return [(mid, *[s[c] for c in cols])]
 
-    return df.mapInPandas(run, MP3_STRUCT_SCHEMA)
+    return payload_map(df, one, MP3_STRUCT_SCHEMA, id_col, payload_col)
 
 
 WEBP_FRAME_SCHEMA = (
@@ -1302,49 +1093,35 @@ def webp_frame_table(df: DataFrame, payload_col: str = "payload",
     extract_features. Decode throughput is the pure-Python test-scale
     contract (functions/vp8.py docstring); the batch plumbing is the
     production design."""
-    import hashlib
+    from ndr_import_spark.functions.vp8 import VP8Error, decode_vp8_keyframe
+    from ndr_import_spark.functions.webp import (
+        WebpError,
+        decode_vp8l,
+        iter_webp_frames,
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ndr_import_spark.functions.vp8 import (
-            VP8Error,
-            decode_vp8_keyframe,
-        )
-        from ndr_import_spark.functions.webp import (
-            WebpError,
-            decode_vp8l,
-            iter_webp_frames,
-        )
+    def one(mid, payload):
+        # Per-payload isolation (r10 ADVICE): one malformed animation,
+        # or a null payload, must not fail the whole task — emit an
+        # error row (codec='error', null digest) and keep going;
+        # downstream quarantines on codec='error'.
+        rows = []
+        try:
+            for fr in iter_webp_frames(payload or b""):
+                if fr["codec"] == "vp8":
+                    _w, _h, y, u, v = decode_vp8_keyframe(fr["payload"])
+                    digest = hashlib.md5(
+                        y.tobytes() + u.tobytes() + v.tobytes()
+                    ).hexdigest()
+                else:
+                    _w, _h, _ch, px = decode_vp8l(fr["payload"])
+                    digest = hashlib.md5(px).hexdigest()
+                rows.append((
+                    mid, fr["frame_ix"], fr["codec"], fr["width"],
+                    fr["height"], fr["duration_ms"], digest,
+                ))
+        except (WebpError, VP8Error, NotImplementedError):
+            rows.append((mid, -1, "error", None, None, None, None))
+        return rows
 
-        for pdf in batches:
-            out = []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                # Per-payload isolation (r10 ADVICE): one malformed
-                # animation must not fail the whole task — emit an
-                # error row (codec='error', null digest) and keep
-                # going; downstream quarantines on codec='error'.
-                try:
-                    for fr in iter_webp_frames(bytes(p)):
-                        if fr["codec"] == "vp8":
-                            _w, _h, y, u, v = decode_vp8_keyframe(
-                                fr["payload"])
-                            digest = hashlib.md5(
-                                y.tobytes() + u.tobytes() + v.tobytes()
-                            ).hexdigest()
-                        else:
-                            _w, _h, _ch, px = decode_vp8l(fr["payload"])
-                            digest = hashlib.md5(px).hexdigest()
-                        out.append((
-                            int(mid), fr["frame_ix"], fr["codec"],
-                            fr["width"], fr["height"], fr["duration_ms"],
-                            digest,
-                        ))
-                except (WebpError, VP8Error, NotImplementedError):
-                    out.append((
-                        int(mid), -1, "error", None, None, None, None,
-                    ))
-            yield pd.DataFrame(out, columns=[
-                "media_id", "frame_ix", "codec", "width", "height",
-                "duration_ms", "pixel_md5",
-            ])
-
-    return df.mapInPandas(run, WEBP_FRAME_SCHEMA)
+    return payload_map(df, one, WEBP_FRAME_SCHEMA, id_col, payload_col)

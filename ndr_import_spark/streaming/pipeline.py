@@ -824,39 +824,33 @@ def stream_audio_triage(
     output adds a `route` column ('keep' for structurally-intact
     files, 'quarantine' otherwise) that a forEachBatch sink splits
     on."""
-    import pandas as pd
+    from ndr_import_spark.functions.mp3 import (
+        Mp3Error,
+        mp3_structure,
+        parse_id3v2,
+    )
+    from ndr_import_spark.operators.multimodal import payload_map
 
-    def run(batches):
-        from ndr_import_spark.functions.mp3 import (
-            Mp3Error,
-            mp3_structure,
-            parse_id3v2,
-        )
+    def one(mid, payload):
+        raw = payload or b""
+        try:
+            s = mp3_structure(raw)
+            verdict = s["verdict"]
+            dur = s["duration_ms"]
+        except Mp3Error:
+            verdict, dur = "not_mp3", 0.0
+        v2 = parse_id3v2(raw)
+        title = None
+        if v2 is not None:
+            title = v2["tags"].get("TIT2") or v2["tags"].get("TT2")
+        return [(
+            mid, verdict, dur, title,
+            "keep" if verdict == "ok" else "quarantine",
+        )]
 
-        for pdf in batches:
-            out = []
-            for mid, p in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(p or b"")
-                try:
-                    s = mp3_structure(raw)
-                    verdict = s["verdict"]
-                    dur = s["duration_ms"]
-                except Mp3Error:
-                    verdict, dur = "not_mp3", 0.0
-                v2 = parse_id3v2(raw)
-                title = None
-                if v2 is not None:
-                    title = v2["tags"].get("TIT2") or v2["tags"].get("TT2")
-                out.append((
-                    int(mid), verdict, dur, title,
-                    "keep" if verdict == "ok" else "quarantine",
-                ))
-            yield pd.DataFrame(out, columns=[
-                "media_id", "verdict", "duration_ms", "title", "route",
-            ])
-
-    return media_stream.mapInPandas(
-        run,
+    return payload_map(
+        media_stream, one,
         "media_id long, verdict string, duration_ms double, "
         "title string, route string",
+        id_col, payload_col,
     )

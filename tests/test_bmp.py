@@ -8,11 +8,11 @@ import pytest
 
 from ndr_import_spark.functions.bmp import (
     BmpError,
-    bmp_image_decoder,
     decode_bmp,
     encode_bmp,
     is_bmp,
 )
+from ndr_import_spark.functions.png import grid_features
 
 
 def _rgb(pixels):
@@ -116,7 +116,8 @@ def test_image_decoder_grid_features():
     # 4x4 grey ramp: grid_features over a 4x4 image is the per-pixel value
     grey = bytes(v for i in range(16) for v in (i * 16, i * 16, i * 16))
     data = encode_bmp(4, 4, grey)
-    w, h, feats = bmp_image_decoder(data)
+    w, h, ch, px = decode_bmp(data)
+    feats = grid_features(w, h, ch, px)
     assert (w, h) == (4, 4)
     assert feats == [round(i * 16 / 255.0, 6) for i in range(16)]
 

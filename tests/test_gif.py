@@ -16,9 +16,9 @@ from ndr_import_spark.functions.gif import (
     GifError,
     decode_gif,
     encode_gif,
-    gif_image_decoder,
     is_gif,
 )
+from ndr_import_spark.functions.png import grid_features
 
 
 def _quilt(w, h, ncolours=4):
@@ -149,7 +149,8 @@ class TestErrors:
 
     def test_decoder_hook_shape(self):
         img = _quilt(8, 8)
-        w, h, feats = gif_image_decoder(encode_gif(8, 8, img.tobytes()))
+        w, h, ch, px = decode_gif(encode_gif(8, 8, img.tobytes()))
+        feats = grid_features(w, h, ch, px)
         assert (w, h) == (8, 8) and len(feats) == 16
 
 

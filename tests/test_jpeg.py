@@ -18,8 +18,8 @@ from ndr_import_spark.functions.jpeg import (
     encode_jpeg,
     encode_jpeg_progressive,
     is_jpeg,
-    jpeg_image_decoder,
 )
+from ndr_import_spark.functions.png import grid_features
 
 
 def _gradient_rgb(w, h):
@@ -185,7 +185,8 @@ class TestErrorPaths:
 
     def test_decoder_hook_shape(self):
         data = encode_jpeg(12, 9, bytes([77]) * 108, channels=1, quality=100)
-        w, h, feats = jpeg_image_decoder(data)
+        w, h, ch, px = decode_jpeg(data)
+        feats = grid_features(w, h, ch, px)
         assert (w, h) == (12, 9)
         assert len(feats) == 16
         assert all(abs(f - 77 / 255.0) < 1e-6 for f in feats)
@@ -319,9 +320,12 @@ class TestProgressive:
                 decode_jpeg(prog[: int(len(prog) * frac)])
 
     def test_dispatches_through_multimodal_decoder_hook(self):
+        from ndr_import_spark.operators.multimodal import _decode_raw
+
         img = _gradient_rgb(16, 16)
         prog = encode_jpeg_progressive(16, 16, img.tobytes(), channels=3,
                                        quality=90)
-        w, h, feats = jpeg_image_decoder(prog)
+        w, h, ch, px = _decode_raw(prog)
+        feats = grid_features(w, h, ch, px)
         assert (w, h) == (16, 16)
         assert len(feats) > 0

@@ -18,7 +18,6 @@ from ndr_import_spark.functions.png import (
     encode_png,
     grid_features,
     is_png,
-    png_image_decoder,
 )
 
 
@@ -149,7 +148,8 @@ class TestSparkPngDecode:
         }
         for i in range(12):
             w, h = 4 + i % 3, 3 + i % 4
-            ew, eh, efeat = png_image_decoder(encode_png(w, h, gradient_rgb(w, h)))
+            ew, eh, ch, px = decode_png(encode_png(w, h, gradient_rgb(w, h)))
+            efeat = grid_features(ew, eh, ch, px)
             assert (got[i]["width"], got[i]["height"]) == (ew, eh) == (w, h)
             assert got[i]["feature"] == pytest.approx(efeat)
 

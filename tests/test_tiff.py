@@ -12,8 +12,8 @@ from ndr_import_spark.functions.tiff import (
     decode_tiff,
     encode_tiff,
     is_tiff,
-    tiff_image_decoder,
 )
+from ndr_import_spark.functions.png import grid_features
 
 
 def _pb_literal(seg: bytes) -> bytes:
@@ -141,7 +141,8 @@ def test_error_gates():
 def test_grid_features_ramp():
     grey = bytes(v for i in range(16) for v in (i * 16, i * 16, i * 16))
     data = encode_tiff(4, 4, grey)
-    w, h, feats = tiff_image_decoder(data)
+    w, h, ch, px = decode_tiff(data)
+    feats = grid_features(w, h, ch, px)
     assert (w, h) == (4, 4)
     assert feats == [round(i * 16 / 255.0, 6) for i in range(16)]
 

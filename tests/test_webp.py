@@ -53,11 +53,14 @@ class TestRoundTrip:
         assert _rgb_of(px, 64) == solid
 
     def test_webp_image_decoder_contract_matches_png(self):
-        from ndr_import_spark.functions.png import png_image_decoder
+        from ndr_import_spark.functions.png import decode_png, grid_features
+
+        def features(w, h, ch, px):
+            return w, h, grid_features(w, h, ch, px)
 
         rgb = bytes(range(48))
-        wf = W.webp_image_decoder(W.encode_webp(4, 4, rgb))
-        pf = png_image_decoder(encode_png(4, 4, rgb))
+        wf = features(*W.decode_webp(W.encode_webp(4, 4, rgb)))
+        pf = features(*decode_png(encode_png(4, 4, rgb)))
         assert wf == pf  # same (w, h, features) on identical pixels
 
 

@@ -284,3 +284,18 @@ class TestOperator:
         assert rows[0].sum_r == rows[1].sum_r == 64 * BASE[0]
         assert rows[0].canvas_md5 == rows[1].canvas_md5
         assert rows[2].canvas_md5 is None
+
+    def test_null_payload_yields_error_row(self, spark):
+        """A null payload (a failed fetch) gets the malformed-animation
+        row instead of failing the task with a TypeError."""
+        from ndr_import_spark.operators.multimodal import webp_canvas_table
+
+        good = _anim([build_anmf_chunk(0, 0, 8, 8, 25, _solid(8, 8, BASE),
+                                       b"VP8L")])
+        df = spark.createDataFrame(
+            [(0, bytearray(good)), (1, None)],
+            "media_id long, payload binary",
+        )
+        rows = {r.media_id: r for r in webp_canvas_table(df).collect()}
+        assert rows[0].frame_ix == 0 and rows[0].sum_r == 64 * BASE[0]
+        assert rows[1].frame_ix == -1 and rows[1].canvas_md5 is None

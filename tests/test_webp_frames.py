@@ -158,3 +158,20 @@ class TestFrameTable:
         assert rows[0].codec == "vp8l" and rows[0].pixel_md5
         assert rows[1].codec == "error" and rows[1].pixel_md5 is None
         assert rows[1].frame_ix == -1
+
+    def test_null_payload_yields_error_row(self, spark):
+        """A null payload (a failed fetch) gets the same quarantine row
+        as a malformed animation instead of failing the task with a
+        TypeError."""
+        from ndr_import_spark.operators.multimodal import webp_frame_table
+
+        chunk = _vp8l_chunk(GREY)
+        good = _anim([build_anmf_chunk(0, 0, 4, 4, 10, chunk, b"VP8L")])
+        df = spark.createDataFrame(
+            [(0, bytearray(good)), (1, None)],
+            "media_id long, payload binary",
+        )
+        rows = {r.media_id: r for r in webp_frame_table(df).collect()}
+        assert rows[0].codec == "vp8l" and rows[0].pixel_md5
+        assert (rows[1].frame_ix, rows[1].codec) == (-1, "error")
+        assert rows[1].pixel_md5 is None
