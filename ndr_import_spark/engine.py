@@ -13,7 +13,10 @@ Returns {canonical_name → records DataFrame}.
 
 Strict mode mirrors the reference's raise-on-error behaviour (header
 mismatch raises at plan time; presence/width errors raise on first
-occurrence). At scale, pass strict=False and route `_errors` to a sink.
+occurrence). First is in (file, row) order, as the reference streams the
+files: the least `source_file`, then `row_index`, then klass mapping order,
+then the error's position in `_errors` (`compiler.first_error`). At scale,
+pass strict=False and route `_errors` to a sink.
 """
 
 from __future__ import annotations

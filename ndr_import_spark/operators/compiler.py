@@ -295,9 +295,9 @@ def _map_from_entries(entries: list[tuple[str, Column]], keep_null: bool = False
     dedup: dict[str, Column] = {}
     for name, expr in entries:
         dedup[name] = expr  # last wins
-    structs = [F.struct(F.lit(k).alias("key"), v.cast("string").alias("value")) for k, v in dedup.items()]
-    m = F.map_from_entries(F.array(*structs))
-    return m
+    keys = F.array(*[F.lit(k) for k in dedup])
+    values = F.array(*[v.cast("string") for v in dedup.values()])
+    return F.map_from_arrays(keys, values)
 
 
 def _fields_map(
@@ -340,7 +340,11 @@ def compile_records(
 ) -> DataFrame:
     """Compile the klass-masked mapping over a cells DataFrame → records.
 
-    One `select` + one `explode`; no shuffle. `strict` surfaces `_errors`
+    One `select` builds the per-klass record array, the next explodes it;
+    no shuffle. The array sits in a projection of its own because
+    `GenerateExec` evaluates its generator's expression tree row by row in
+    interpreted mode, while a projection compiles it (with common
+    subexpressions shared). `strict` surfaces `_errors`
     (presence validation, column-count guard) for the caller's
     collect-or-quarantine policy (Engine.run raises on first error in parity
     mode; at scale, filter them to an error sink instead).
@@ -371,10 +375,16 @@ def compile_records(
         )
 
     n_cols = len(mapping.columns)
+    # explode_outer: for `explode` over a column Spark infers a
+    # `size(_records) > 0` filter and pushes it below the source's parse,
+    # inlining the whole mapping there. The array holds one struct per
+    # klass, so the outer form yields the same rows; with no klass at all
+    # the plain form keeps the result empty.
+    explode = F.explode_outer if record_structs else F.explode
     out = df.select(
         F.col("source_file"),
         F.col("row_index"),
-        F.explode(F.array(*record_structs)).alias("record"),
+        F.array(*record_structs).alias("_records"),
         *( [
             F.when(
                 F.size(F.col("cells")) > n_cols,
@@ -385,6 +395,11 @@ def compile_records(
                 ),
             ).alias("_width_error")
         ] if strict and "cells" in df.columns else [F.lit(None).cast("string").alias("_width_error")] ),
+    ).select(
+        F.col("source_file"),
+        F.col("row_index"),
+        explode(F.col("_records")).alias("record"),
+        F.col("_width_error"),
     ).select(
         F.col("record.klass").alias("klass"),
         F.col("record.fields").alias("fields"),
@@ -431,10 +446,19 @@ def records_wide(records: DataFrame, mapping: TableMapping, klass: str) -> DataF
 
 
 def first_error(records: DataFrame) -> str | None:
-    """Strict-parity helper: first mapping error, if any (small collect)."""
-    row = (
-        records.select(F.explode(F.col("_errors")).alias("e"))
-        .limit(1)
-        .collect()
+    """Strict-parity helper: the first mapping error, if any.
+
+    First means least in (source_file, row_index, emission order, position
+    in `_errors`); emission order within a row is the klass mapping order,
+    read from a scan-order id. A sort under `limit(1)` plans as a top-1
+    take: every partition keeps its own least error in one wave of tasks
+    and the driver keeps the least of those, so the answer does not depend
+    on which task finishes first."""
+    errors = records.filter(F.size(F.col("_errors")) > 0).select(
+        "source_file",
+        "row_index",
+        F.monotonically_increasing_id().alias("_emit"),
+        F.posexplode(F.col("_errors")).alias("_pos", "e"),
     )
+    row = errors.orderBy("source_file", "row_index", "_emit", "_pos").limit(1).collect()
     return row[0]["e"] if row else None

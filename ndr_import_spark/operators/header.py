@@ -6,7 +6,11 @@ file-order streaming and Spark (SURVEY §3): every op here keys off the
 per-file ``row_index`` column that sources attach at read time.
 
 * Header consume+validate is a driver-side check over `header_lines` rows per
-  file (tiny collect — bounded by files × header_lines).
+  file (tiny collect — bounded by files × header_lines). The
+  ``row_index < header_lines`` filter sits right above the source's index
+  join, so a reader that indexes before it parses (the delimited reader)
+  parses only the header rows for this collect: one scan of the input, two
+  Spark jobs (the scan and the index's broadcast).
 * Footer skip needs each file's max row index: computed with a groupBy on
   ``source_file`` (one small aggregate over file names, broadcast back) —
   at 100 TB this stays cheap because the aggregate's width is #files, not

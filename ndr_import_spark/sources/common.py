@@ -4,18 +4,27 @@ Row order is the one impedance between the reference's file-order streaming
 and Spark (SURVEY §3): header/footer handling, `row_identifier: index` and
 non-tabular sessionization all need a dense, 0-based, per-file line number.
 
-`attach_row_index` computes it WITHOUT a wide shuffle:
+`attach_row_index` computes it WITHOUT a wide shuffle and without a Python
+worker:
 
 1. `monotonically_increasing_id()` (narrow) gives `pid * 2^33 + offset` in
-   scan order — partition ids follow file/split order for file scans;
-2. a per-partition count aggregate (tiny: #partitions rows) → driver prefix
-   sums → dense global index, applied via a broadcast join;
-3. per-file min (tiny: #files rows) subtracted via broadcast join.
+   scan order. A file scan reads each split in file order and numbers a
+   file's splits in ascending partition ids, though not always adjacent
+   ones: Spark packs splits largest first, so a file's short last split can
+   land after other files' partitions;
+2. one grouped collect of `(count, min id)` per `(partition id, file)`
+   (tiny: #partitions × files-per-partition rows). The driver walks each
+   file's groups in partition order and gives every group one delta, the
+   rows of that file already seen minus the group's min id;
+3. the deltas join back as a broadcast hash join on a driver-local
+   relation (`createDataFrame(pyarrow.Table)` plans as a `LocalRelation`),
+   so each later action pays one small JVM broadcast job and no Python
+   task.
 
-Total cost at 100 TB: one extra pass for the two small aggregates; no
-all-to-all shuffle, no single-partition funnel (a window over
-`partitionBy(source_file)` would funnel each file into one reducer — exactly
-the trap this avoids).
+The result is dense per file however its splits are placed. Total cost at
+100 TB: one extra pass for the small aggregate; no all-to-all shuffle, no
+single-partition funnel (a window over `partitionBy(source_file)` would
+funnel each file into one reducer — exactly the trap this avoids).
 """
 
 from __future__ import annotations
@@ -25,39 +34,48 @@ from pyspark.sql import functions as F
 
 
 def attach_row_index(df: DataFrame, file_col: str = "source_file") -> DataFrame:
-    """Add dense 0-based per-file `row_index` preserving scan order."""
+    """Add dense 0-based per-file `row_index` preserving scan order.
+
+    Runs Spark jobs when called (the grouped collect); every action on
+    the result adds one broadcast job for the delta relation."""
+    import pyarrow as pa
+
     spark = df.sparkSession
     df = df.withColumn("_mid", F.monotonically_increasing_id())
     df = df.withColumn("_pid", F.shiftrightunsigned(F.col("_mid"), 33))
 
-    part_stats = (
-        df.groupBy("_pid")
+    groups = (
+        df.groupBy("_pid", file_col)
         .agg(F.count(F.lit(1)).alias("_n"), F.min("_mid").alias("_base"))
         .collect()
     )
-    offsets = []
-    acc = 0
-    for row in sorted(part_stats, key=lambda r: r["_pid"]):
-        # dense global index = acc + (_mid - _base)
-        offsets.append((row["_pid"], acc - row["_base"]))
-        acc += row["_n"]
-    if not offsets:
+    if not groups:
         return df.withColumn("row_index", F.lit(0).cast("long")).drop("_mid", "_pid")
 
-    off_df = spark.createDataFrame(offsets, "_pid long, _off long")
-    df = (
-        df.join(F.broadcast(off_df), "_pid")
-        .withColumn("_gidx", F.col("_mid") + F.col("_off"))
-        .drop("_mid", "_pid", "_off")
-    )
+    # row_index = _mid + delta, delta = rows of the file in earlier groups
+    # minus the group's first id (a file's rows in one partition are one
+    # contiguous id run)
+    seen: dict = {}
+    pids, files, deltas = [], [], []
+    for row in sorted(groups, key=lambda r: r["_base"]):  # partition order
+        fname = row[file_col]
+        n_seen = seen.get(fname, 0)
+        pids.append(row["_pid"])
+        files.append(fname)
+        deltas.append(n_seen - row["_base"])
+        seen[fname] = n_seen + row["_n"]
 
-    file_mins = df.groupBy(file_col).agg(F.min("_gidx").alias("_fmin"))
-    df = (
-        df.join(F.broadcast(file_mins), file_col)
-        .withColumn("row_index", (F.col("_gidx") - F.col("_fmin")).cast("long"))
-        .drop("_gidx", "_fmin")
+    table = pa.table({
+        "_pid": pa.array(pids, pa.int64()),
+        file_col: pa.array(files, pa.string()),
+        "_delta": pa.array(deltas, pa.int64()),
+    })
+    delta_df = spark.createDataFrame(table)
+    return (
+        df.join(F.broadcast(delta_df), ["_pid", file_col])
+        .withColumn("row_index", F.col("_mid") + F.col("_delta"))
+        .drop("_mid", "_pid", "_delta")
     )
-    return df
 
 
 def probe_encoding(path: str, default: str = "UTF-8") -> str:

@@ -14,9 +14,15 @@ then each line parses in-expression:
   ragged-row padding — the reference's Ruby CSV does not);
 * lines containing a quote char route through `from_csv` with slack
   columns, right-trimmed of padding NULLs (quoted separators handled).
+  The parse sits in a projection of its own, so each quoted line is parsed
+  once; the cell array reads its fields in the next projection.
 
-Both branches stay JVM-side in one projection; `multi_line` mode (quoted
-cells spanning lines) falls back to the whole-file csv parse.
+Both branches stay JVM-side. The per-file `row_index` is attached to the
+raw lines, before the parse: the parse is deterministic and the index join
+is not, so a `row_index` filter above (header validation's
+`row_index < header_lines` collect) lands below the parse and parses only
+the rows it keeps. `multi_line` mode (quoted cells spanning lines) falls
+back to the whole-file csv parse and indexes its records after it.
 `liberal_parsing` maps to `unescapedQuoteHandling=STOP_AT_CLOSING_QUOTE`
 which reproduces the pinned `2"malformed"` cell behaviour
 (test/file/delimited_test.rb:36-49).
@@ -87,27 +93,35 @@ def read_delimited(
         df = df.withColumn("source_file", F.input_file_name()).select(
             "source_file", cells_raw.alias("_cells_raw")
         )
+        df = attach_row_index(df)
     else:
         # raw-line scan: improbable separator + disabled quoting → _c0 is
-        # the whole (chomped, decoded) line
+        # the whole (chomped, decoded) line, indexed before it is parsed
         df = (
             reader.option("sep", _LINE_SEP_SENTINEL)
             .option("quote", "")
             .schema("_c0 string")
             .csv(files)
         )
+        df = attach_row_index(
+            df.select(F.input_file_name().alias("source_file"), "_c0")
+        )
         line = F.coalesce(F.col("_c0"), F.lit(""))
-        simple = F.split(line, _re.escape(sep), -1)
+        is_quoted = line.contains('"')
         schema = ", ".join(f"c{i} string" for i in range(slack))
-        parsed = F.from_csv(line, schema, _csv_options(sep, liberal))
-        quoted = rtrim_nulls(F.array(*[parsed.getField(f"c{i}") for i in range(slack)]))
-        cells_raw = F.when(line.contains('"'), quoted).otherwise(simple)
-        df = (
-            df.withColumn("source_file", F.input_file_name())
-            .select("source_file", cells_raw.alias("_cells_raw"))
+        # from_csv in a projection of its own: the cell array below reads
+        # its fields from the parsed column instead of re-parsing per field
+        df = df.withColumn(
+            "_parsed", F.when(is_quoted, F.from_csv(line, schema, _csv_options(sep, liberal)))
+        )
+        quoted = rtrim_nulls(F.array(F.col("_parsed.*")))
+        simple = F.split(line, _re.escape(sep), -1)
+        df = df.select(
+            "source_file",
+            "row_index",
+            F.when(is_quoted, quoted).otherwise(simple).alias("_cells_raw"),
         )
 
-    df = attach_row_index(df)
     # Ruby delimited_rows: line.map(&:to_s) — nil cells become '' (ragged
     # shorter rows stay short); strip any BOM residue from the lead cell.
     df = df.select(
