@@ -75,13 +75,6 @@ def daysafter(col: Column, epoch: object) -> Column:
     return F.when(intlike, added.cast("string")).otherwise(col)
 
 
-def daysafter_date(col: Column, epoch: object) -> Column:
-    """Typed variant: DateType result, NULL for non-integer cells."""
-    epoch_date = _coerce_date(epoch)
-    intlike = col.cast("string").rlike(r"^-?[1-9]\d*$") | (col.cast("string") == "0")
-    return F.when(intlike, F.date_add(F.lit(epoch_date), col.cast("int")))
-
-
 def _coerce_date(epoch: object) -> date:
     if isinstance(epoch, datetime):
         return epoch.date()

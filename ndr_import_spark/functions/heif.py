@@ -356,10 +356,6 @@ def scrub_heif_exif(data: bytes) -> bytes:
 _LIBHEIF = None
 
 
-class _HeifCError(Exception):
-    pass
-
-
 def _load_libheif():
     global _LIBHEIF
     if _LIBHEIF is None:

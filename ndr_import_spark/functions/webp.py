@@ -308,24 +308,7 @@ def _read_prefix_code(br: _BitReader, alphabet_size: int) -> _PrefixCode:
     return _PrefixCode(lengths)
 
 
-# --------------------------------------------- LZ77 prefix value coding
-
-def _lz77_code(value: int) -> tuple[int, int, int]:
-    """length/distance prefix coding (spec §5.2.2), value -> (code,
-    extra_bits_value, n_extra): small values are direct codes, larger
-    ones split into (offset << extra) + extra bits — the inverse of the
-    decoding in `_decode_pixels`."""
-    if value <= 4:
-        return value - 1, 0, 0
-    v = value - 1
-    extra = v.bit_length() - 2
-    offset = (2 + ((v >> extra) & 1)) << extra
-    return (
-        2 * extra + ((v >> extra) & 1) + 2,
-        value - offset - 1,
-        extra,
-    )
-
+# --------------------------------------------------- LZ77 distance map
 
 def _gen_dist_map() -> list[tuple[int, int]]:
     """The 120 close-neighbourhood (x, y) offsets, derived by the

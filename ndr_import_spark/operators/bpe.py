@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ndr_import_spark.operators.textstats import release_local_checkpoint
+from ndr_import_spark.sources.common import local_frame
 
 END_OF_WORD = "</w>"
 
@@ -400,9 +401,7 @@ GROUP BY lang ORDER BY lang""")
 
 
 def merges_df(spark, merges: list[tuple[int, str, str, int]]) -> DataFrame:
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, pair_freq long"
-    )
+    return local_frame(spark, merges, "rank int, left string, right string, pair_freq long")
 
 
 def apply_bpe_to_vocab(

@@ -34,6 +34,8 @@ from decimal import ROUND_HALF_UP, Decimal
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ndr_import_spark.sources.common import local_frame
+
 LOGREG_WSCALE = 1_000_000
 LOGREG_LR = "100.0"
 
@@ -124,7 +126,7 @@ def longform_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def trajectory_df(spark, traj: list[tuple[int, int, int]]) -> DataFrame:
-    return spark.createDataFrame(traj, "round int, j int, w long")
+    return local_frame(spark, traj, "round int, j int, w long")
 
 
 def logreg_oracle_sql(

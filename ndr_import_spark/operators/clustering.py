@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ndr_import_spark.sources.common import local_frame
+
 KMEANS_SCALE = 127
 
 
@@ -105,7 +107,7 @@ def _assign_wide(
     ]
     schema = "d int, " + ", ".join(f"c{cid} long" for cid in cids)
     spark = dims.sparkSession
-    wide = spark.createDataFrame(wide_rows, schema)
+    wide = local_frame(spark, wide_rows, schema)
     q = F.col("q").cast("long")
     sums = [
         F.sum((q - F.col(f"c{cid}")) * (q - F.col(f"c{cid}"))).alias(f"d{cid}")
@@ -380,20 +382,6 @@ def _centroid_rounds(
     return cent_rows
 
 
-def _final_assignment(
-    df: DataFrame,
-    dims: DataFrame,
-    k: int,
-    iterations: int,
-    id_col: str,
-) -> DataFrame:
-    """Train via :func:`_centroid_rounds`, then return the FINAL
-    assignment frame (id, cid, dist)."""
-    return _assign_wide(
-        dims, _centroid_rounds(df, dims, k, iterations, id_col), id_col
-    )
-
-
 def kmeans_centroids(
     df: DataFrame,
     k: int = 8,
@@ -408,9 +396,7 @@ def kmeans_centroids(
     the stream."""
     qdf = embedding_qarr(df, id_col, vec_col, scale)
     cent_rows = _centroid_rounds_np(qdf, k, iterations, id_col)
-    return df.sparkSession.createDataFrame(
-        cent_rows, "cid int, d int, c long"
-    )
+    return local_frame(df.sparkSession, cent_rows, "cid int, d int, c long")
 
 
 def kmeans_lattice(

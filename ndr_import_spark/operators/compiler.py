@@ -37,7 +37,6 @@ with a filter instead of a driver-side collect.
 
 from __future__ import annotations
 
-import json
 import re
 from dataclasses import dataclass, field as dc_field
 from typing import Callable
@@ -99,14 +98,6 @@ def _mapped_value(original: Column, fm: FieldMapping) -> Column:
     if fm.daysafter is not None:
         return daysafter(original, fm.daysafter)
     return strip_default(original)
-
-
-def _field_type(fm: FieldMapping) -> str:
-    if fm.format is not None or fm.daysafter is not None:
-        return "date" if fm.format is not None else "string"
-    if fm.zip_order is not None:
-        return "array"
-    return "string"
 
 
 def _escape_split_char(split_char: str) -> str:

@@ -136,16 +136,6 @@ _PII_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def redact_pii(text: Column) -> Column:
-    """Scrub email / phone-ish / long-digit-run substrings with typed
-    placeholder tokens. Pure `regexp_replace` chain — whole-stage codegen,
-    no shuffle, linear scan per document."""
-    out = text
-    for pat, repl in _PII_PATTERNS:
-        out = F.regexp_replace(out, pat, repl)
-    return out
-
-
 def pii_scrub(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

@@ -25,6 +25,7 @@ from ndr_import_spark.operators.textstats import (
     normalize_text,
     release_local_checkpoint,
 )
+from ndr_import_spark.sources.common import local_frame
 
 __all_reexports__ = ["md5_long"]  # canonical definition lives in textstats
 
@@ -62,19 +63,6 @@ def drop_exact_duplicates(
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
-
-def char_shingles(text: Column, n: int = 5) -> Column:
-    """Character n-gram shingle set over normalised text (distinct).
-
-    NOTE: `text` is captured inside the transform lambda, so its expression
-    is re-evaluated PER ARRAY ELEMENT (Catalyst inlines single-use aliases
-    even into lambda bodies). Pass an attribute (a materialised column),
-    not a regex-heavy expression — see _shingle_base for the pattern."""
-    norm = normalize_text(text)
-    length = F.length(norm)
-    starts = F.sequence(F.lit(1), F.greatest(length - n + 1, F.lit(1)))
-    return F.array_distinct(F.transform(starts, lambda i: F.substring(norm, i, n)))
-
 
 def _shingle_base(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(_id, _norm) with `_norm` materialised as a real attribute.
@@ -211,15 +199,6 @@ def minhash_perm_consts(k: int, salt: str) -> list[tuple[int, int]]:
     return out
 
 
-def _affine_perm(a: int, b: int):
-    """Closure-captured constants (a `lambda h, a=a:` default would make
-    PySpark pass the array index INTO the lambda, corrupting the hash)."""
-    def f(h: Column) -> Column:
-        return (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-
-    return f
-
-
 def minhash_signatures_column(hs: Column, k: int, salt: str) -> Column:
     """k MinHash minima as ONE nested transform over a literal (a, b)
     const array — the generated code is k-fold smaller than k separate
@@ -244,16 +223,6 @@ def shingle_hashes(sh: Column) -> Column:
     the difference between 70 s and 4 s at 5k docs, and between feasible
     and not at 100 TB)."""
     return F.transform(sh, lambda s: md5_long(s).bitwiseAND(F.lit((1 << 30) - 1)))
-
-
-def minhash_signature(text: Column, k: int = 16, shingle_n: int = 5) -> Column:
-    """k-permutation MinHash over char shingles → array<long>[k].
-
-    Convenience form over an expression input; the LSH pipeline uses
-    minhash_signatures_column over a materialised _hs attribute instead
-    (an expression collection re-evaluates per permutation)."""
-    hs = shingle_hashes(char_shingles(text, shingle_n))
-    return minhash_signatures_column(hs, k, "mh")
 
 
 def _char_shingle_rows(
@@ -1297,7 +1266,8 @@ def write_neardup_index(
     ).parquet(f"{path}/bands")
     # 1-row params artifact: probing with different constants would
     # silently match nothing — make the mismatch loud at probe time
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(k, bands, shingle_n, "mh")],
         "k int, bands int, shingle_n int, salt string",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params")

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ndr_import_spark.sources.common import local_frame
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("kind", T.StringType()),      # image | audio | video
@@ -467,7 +469,8 @@ def resize_images(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
     mapInPandas like the feature extractor. Resizing needs raw pixels
     and an encoder, so payloads in none of those five formats (WebP and
     AVIF/HEIC included) raise NotImplementedError, failing the task —
-    the same honest env-gate contract as the decode path."""
+    the same honest env-gate contract as the decode path. A null payload
+    yields a row of NULL width, height and payload."""
     from ndr_import_spark.functions.bmp import encode_bmp
     from ndr_import_spark.functions.jpeg import encode_jpeg
     from ndr_import_spark.functions.png import encode_png, resize_rgb
@@ -487,14 +490,15 @@ def resize_images(df: DataFrame, target_w: int, target_h: int) -> DataFrame:
     }
 
     def one(mid, payload):
-        raw = payload or b""
-        fmt = _image_format(raw)
+        if payload is None:
+            return [(mid, None, None, None)]
+        fmt = _image_format(payload)
         if fmt not in encoders:
             raise NotImplementedError(
                 "resize_images requires PNG, baseline-JPEG, GIF, BMP or "
                 "TIFF payloads (stdlib codecs)"
             )
-        w, h, ch, px = _decode_raw(raw)
+        w, h, ch, px = _decode_raw(payload)
         rgb = resize_rgb(w, h, ch, px, target_w, target_h)
         if fmt == "jpeg" and ch == 1:
             # keep grayscale grayscale: resize_rgb replicated the grey
@@ -530,7 +534,7 @@ def synth_media_df(spark, n: int = 64) -> DataFrame:
         rows.append((i, kind, f"{kind}/fake", 64, 48, 2000 + i * 10, bytearray(payload)))
     # a tiny table over default parallelism would spin up one Arrow python
     # worker per partition for a handful of rows each
-    return spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(4)
+    return local_frame(spark, rows, MEDIA_SCHEMA).coalesce(4)
 
 
 PHASH_SCHEMA = "media_id long, width int, height int, phash long"
@@ -615,11 +619,14 @@ def perceptual_hash_images(df: DataFrame, grid: int = 8) -> DataFrame:
     codec stack, Arrow-batched. The hash is pure integer arithmetic on
     decoded pixels, so the same image encoded in ANY lossless format
     (PNG/BMP/TIFF/GIF within palette limits) produces the SAME hash —
-    which is exactly what cross-format image dedup needs. A null or
-    undecodable payload fails the task."""
+    which is exactly what cross-format image dedup needs. A null payload
+    yields a row of NULL width, height and phash; an undecodable one
+    fails the task."""
 
     def one(mid, payload):
-        w, h, ch, px = _decode_raw(payload or b"")
+        if payload is None:
+            return [(mid, None, None, None)]
+        w, h, ch, px = _decode_raw(payload)
         return [(mid, w, h, ahash64(w, h, ch, px, grid))]
 
     return payload_map(df, one, PHASH_SCHEMA)
@@ -632,9 +639,11 @@ def image_dedup_groups(df: DataFrame, grid: int = 8) -> DataFrame:
     Hamming distance d compose with the SimHash banding machinery
     (`dedup.simhash_hamming_pairs` slices) on this same hash column; the
     exact grouping here is the lossless-codec case where pixels — and
-    therefore hashes — are identical."""
+    therefore hashes — are identical. A null payload has a NULL hash and
+    is in no group."""
     return (
         perceptual_hash_images(df, grid)
+        .where(F.col("phash").isNotNull())
         .groupBy("phash")
         .agg(
             F.min("media_id").alias("kept_id"),

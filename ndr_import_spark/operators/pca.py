@@ -41,6 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ndr_import_spark.sources.common import local_frame
+
 PCA_QSCALE = 127          # shared with clustering.KMEANS_SCALE
 PCA_VSCALE = 1_000_000    # power-iteration vector lattice
 PCA_ROUNDS = 8
@@ -133,7 +135,8 @@ def pca_first_component(
     ]
     pc1 = _power_iteration(cov, rounds, vscale)
     spark = df.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, means[i], pc1[i]) for i in range(dim)],
         "d int, mean_q long, pc1_q long",
     )

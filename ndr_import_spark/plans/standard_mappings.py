@@ -42,18 +42,6 @@ DEFAULT_STANDARD_MAPPINGS: dict[str, dict] = {
     },
 }
 
-_registry: dict[str, dict] = copy.deepcopy(DEFAULT_STANDARD_MAPPINGS)
-
-
-def configure(mappings: dict[str, dict]) -> None:
-    """Replace the registry (reference: StandardMappings.mappings=)."""
-    global _registry
-    _registry = copy.deepcopy(mappings)
-
-
-def get_registry() -> dict[str, dict]:
-    return _registry
-
 
 def resolve(column: ColumnMapping) -> ColumnMapping:
     """Merge a column's ``standard_mapping`` preset (mapper.rb:70-83).
@@ -64,7 +52,7 @@ def resolve(column: ColumnMapping) -> ColumnMapping:
     name = column.standard_mapping
     if name is None:
         return column
-    preset = _registry.get(name)
+    preset = DEFAULT_STANDARD_MAPPINGS.get(name)
     if preset is None:
         raise MappingError(f'Standard mapping "{name}" does not exist')
     merged = copy.deepcopy(preset)

@@ -15,7 +15,7 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-from ndr_import_spark.sources.common import list_input_files
+from ndr_import_spark.sources.common import list_input_files, local_frame
 from ndr_import_spark.sources.registry import Registry, read_tables
 
 
@@ -234,7 +234,6 @@ def read_lz4(spark: SparkSession, path: str | list[str], options: dict):
 def read_jsonl_zst_distributed(
     spark: SparkSession,
     paths: list[str],
-    n_slices: int | None = None,
     dictionary: bytes | None = None,
 ):
     """Executor-side `.jsonl.zst` shard ingest — the 100 TB path.
@@ -266,9 +265,7 @@ def read_jsonl_zst_distributed(
     """
     import pandas as pd
 
-    src = spark.createDataFrame([(p,) for p in paths], "path string")
-    if n_slices is None:
-        n_slices = max(1, min(len(paths), 4096))
+    src = local_frame(spark, [(p,) for p in paths], "path string")
 
     def expand(batches):
         import json
@@ -336,7 +333,7 @@ def read_jsonl_zst_distributed(
                     rows.append((path, idx, cells))
             yield pd.DataFrame(rows, columns=["source_file", "row_index", "cells_map"])
 
-    return src.repartition(n_slices, "path").mapInPandas(
+    return src.repartition(max(1, min(len(paths), 4096)), "path").mapInPandas(
         expand, "source_file string, row_index long, cells_map map<string,string>"
     )
 

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ndr_import_spark.sources.common import attach_row_index, list_input_files
+from ndr_import_spark.sources.common import attach_row_index, list_input_files, local_frame
 from ndr_import_spark.sources.registry import Registry
 
 
@@ -61,7 +61,8 @@ def frame_to_reference_rows(spark: SparkSession, df: DataFrame) -> DataFrame:
     )
     data = attach_row_index(data).withColumn("row_index", F.col("row_index") + 1)
 
-    header = spark.createDataFrame(
+    header = local_frame(
+        spark,
         [
             (f, 0, names)
             for f in sorted(
@@ -91,7 +92,8 @@ def read_avro(
         for f in files:
             local = f[7:] if f.startswith("file://") else f
             rows = ocf_rows(local)
-            tdf = spark.createDataFrame(
+            tdf = local_frame(
+                spark,
                 [(f, i, r) for i, r in enumerate(rows)],
                 "source_file string, row_index long, cells array<string>",
             )

@@ -1,4 +1,12 @@
-"""Shared source utilities: per-file dense row indexing, encoding probe.
+"""Shared source utilities: driver-side frames, per-file dense row
+indexing, encoding probe.
+
+`local_frame` is the package's one way to turn rows held on the driver
+into a DataFrame. A frame built from a Python list is a parallelised
+Python RDD, so every action that reads it (a header check,
+`first_error`, the write) starts Python worker tasks again; a frame
+built from a `pyarrow.Table` plans as a `LocalRelation` that the JVM
+scans by itself.
 
 Row order is the one impedance between the reference's file-order streaming
 and Spark (SURVEY §3): header/footer handling, `row_identifier: index` and
@@ -16,10 +24,8 @@ worker:
    (tiny: #partitions × files-per-partition rows). The driver walks each
    file's groups in partition order and gives every group one delta, the
    rows of that file already seen minus the group's min id;
-3. the deltas join back as a broadcast hash join on a driver-local
-   relation (`createDataFrame(pyarrow.Table)` plans as a `LocalRelation`),
-   so each later action pays one small JVM broadcast job and no Python
-   task.
+3. the deltas join back as a broadcast hash join on a `local_frame`, so
+   each later action pays one small JVM broadcast job and no Python task.
 
 The result is dense per file however its splits are placed. Total cost at
 100 TB: one extra pass for the small aggregate; no all-to-all shuffle, no
@@ -31,21 +37,36 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
-def attach_row_index(df: DataFrame, file_col: str = "source_file") -> DataFrame:
-    """Add dense 0-based per-file `row_index` preserving scan order.
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """DataFrame of driver-side `rows` (tuples in `schema` order; `schema`
+    is a DDL string or a StructType), planned as a `LocalRelation`."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(struct.fields)
+    table = pa.table(
+        [pa.array(c, f.type) for c, f in zip(columns, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, struct)
+
+
+def attach_row_index(df: DataFrame) -> DataFrame:
+    """Add dense 0-based `row_index` per `source_file`, preserving scan
+    order.
 
     Runs Spark jobs when called (the grouped collect); every action on
     the result adds one broadcast job for the delta relation."""
-    import pyarrow as pa
-
     spark = df.sparkSession
     df = df.withColumn("_mid", F.monotonically_increasing_id())
     df = df.withColumn("_pid", F.shiftrightunsigned(F.col("_mid"), 33))
 
     groups = (
-        df.groupBy("_pid", file_col)
+        df.groupBy("_pid", "source_file")
         .agg(F.count(F.lit(1)).alias("_n"), F.min("_mid").alias("_base"))
         .collect()
     )
@@ -56,23 +77,16 @@ def attach_row_index(df: DataFrame, file_col: str = "source_file") -> DataFrame:
     # minus the group's first id (a file's rows in one partition are one
     # contiguous id run)
     seen: dict = {}
-    pids, files, deltas = [], [], []
+    deltas = []
     for row in sorted(groups, key=lambda r: r["_base"]):  # partition order
-        fname = row[file_col]
+        fname = row["source_file"]
         n_seen = seen.get(fname, 0)
-        pids.append(row["_pid"])
-        files.append(fname)
-        deltas.append(n_seen - row["_base"])
+        deltas.append((row["_pid"], fname, n_seen - row["_base"]))
         seen[fname] = n_seen + row["_n"]
 
-    table = pa.table({
-        "_pid": pa.array(pids, pa.int64()),
-        file_col: pa.array(files, pa.string()),
-        "_delta": pa.array(deltas, pa.int64()),
-    })
-    delta_df = spark.createDataFrame(table)
+    delta_df = local_frame(spark, deltas, "_pid long, source_file string, _delta long")
     return (
-        df.join(F.broadcast(delta_df), ["_pid", file_col])
+        df.join(F.broadcast(delta_df), ["_pid", "source_file"])
         .withColumn("row_index", F.col("_mid") + F.col("_delta"))
         .drop("_mid", "_pid", "_delta")
     )

@@ -23,7 +23,7 @@ from datetime import date, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ndr_import_spark.sources.common import list_input_files
+from ndr_import_spark.sources.common import list_input_files, local_frame
 from ndr_import_spark.sources.registry import Registry
 
 _NS = {"m": "http://schemas.openxmlformats.org/spreadsheetml/2006/main"}
@@ -172,7 +172,8 @@ def read_excel(
                     from ndr_import_spark.sources.legacy_office import parse_xls
 
                     for sheet_name, rows in parse_xls(data, password=password):
-                        df = spark.createDataFrame(
+                        df = local_frame(
+                            spark,
                             [(f, i, r) for i, r in enumerate(rows)],
                             "source_file string, row_index long, cells array<string>",
                         )
@@ -181,7 +182,8 @@ def read_excel(
             else:
                 raise ValueError(f"Not an Excel file: {f}")
         for sheet_name, rows in parse_xlsx(data):
-            df = spark.createDataFrame(
+            df = local_frame(
+                spark,
                 [(f, i, r) for i, r in enumerate(rows)],
                 "source_file string, row_index long, cells array<string>",
             )

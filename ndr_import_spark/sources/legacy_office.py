@@ -138,19 +138,6 @@ def _read_xl_string(buf: bytes, pos: int, cch: int) -> tuple[str, int]:
     return text, pos
 
 
-def _parse_sst(data: bytes) -> list[str]:
-    """SST record (its CONTINUE records must already be merged with their
-    boundary grbit bytes handled by the caller — see _merged_sst)."""
-    (_total, unique) = struct.unpack("<ii", data[:8])
-    out = []
-    pos = 8
-    for _ in range(unique):
-        (cch,) = struct.unpack("<H", data[pos:pos + 2])
-        text, pos = _read_xl_string(data, pos + 2, cch)
-        out.append(text)
-    return out
-
-
 def _merged_sst(stream: bytes, sst_pos: int) -> list[str]:
     """Merge SST + CONTINUE records. Strings that span a CONTINUE boundary
     restate the grbit byte at the continuation start; handle by parsing

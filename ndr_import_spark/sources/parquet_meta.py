@@ -18,9 +18,9 @@ The Python-per-footer cost is microseconds against a >100-byte footer
 parse; Arrow batching amortises interpreter overhead across paths.
 
 Scale shape: the input frame is FILE-count-sized (metadata, not data);
-`repartition(n_slices)` spreads footer I/O over the cluster; the output
-is row-group-count-sized. No shuffle besides the initial spread; any
-aggregation downstream is map-side combinable.
+`repartition` into one slice per path (at most 1024) spreads footer I/O
+over the cluster; the output is row-group-count-sized. No shuffle besides
+the initial spread; any aggregation downstream is map-side combinable.
 
 Integrity property this enables (and the oracle gate checks): footer-
 only answers (total rows, key min/max) must equal full-scan answers —
@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ndr_import_spark.sources.common import local_frame
+
 FOOTER_SCHEMA = (
     "path string, key_col string, n_columns int, row_group_id int, "
     "rg_rows bigint, rg_bytes bigint, key_min bigint, key_max bigint"
@@ -44,7 +46,6 @@ FOOTER_SCHEMA = (
 def parquet_footer_inventory(
     spark: SparkSession,
     targets: list[tuple[str, str]],
-    n_slices: int | None = None,
 ) -> DataFrame:
     """One row per (file, row group) from footer metadata only.
 
@@ -54,9 +55,7 @@ def parquet_footer_inventory(
     missing or carries no statistics — silently absent stats would
     make the integrity gate vacuous.
     """
-    src = spark.createDataFrame(targets, "path string, key_col string")
-    if n_slices is None:
-        n_slices = max(1, min(len(targets), 1024))
+    src = local_frame(spark, targets, "path string, key_col string")
 
     def read_footers(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pyarrow.parquet as pq
@@ -85,7 +84,9 @@ def parquet_footer_inventory(
                          "rg_rows", "rg_bytes", "key_min", "key_max"],
             )
 
-    return src.repartition(n_slices, "path").mapInPandas(read_footers, FOOTER_SCHEMA)
+    return src.repartition(max(1, min(len(targets), 1024)), "path").mapInPandas(
+        read_footers, FOOTER_SCHEMA
+    )
 
 
 def footer_table_summary(inventory: DataFrame) -> DataFrame:

@@ -17,7 +17,6 @@ import zipfile
 
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
@@ -69,15 +68,6 @@ def _extract_word_text(data: bytes | None, password: str | None = None) -> str |
     return data.decode("utf-8", errors="replace")
 
 
-_doc_parser = None
-
-
-def set_doc_parser(fn) -> None:
-    """Inject a real .doc parser (bytes → str) when the lib is available."""
-    global _doc_parser
-    _doc_parser = fn
-
-
 def make_word_text_udf(password: str | None = None):
     """Arrow-batched extractor UDF; `password` is captured at plan time
     (it is per-mapping, not per-row — docx.rb:21-30)."""
@@ -87,8 +77,6 @@ def make_word_text_udf(password: str | None = None):
         def one(b):
             if b is None:
                 return None
-            if _doc_parser is not None and bytes(b)[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1":
-                return _doc_parser(bytes(b))
             return _extract_word_text(bytes(b), password)
         return blobs.map(one)
 

@@ -19,7 +19,7 @@ import xml.etree.ElementTree as ET
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ndr_import_spark.sources.common import attach_row_index, list_input_files
+from ndr_import_spark.sources.common import attach_row_index, list_input_files, local_frame
 from ndr_import_spark.sources.registry import Registry
 
 
@@ -146,9 +146,7 @@ def read_xml(
         tags = matching_record_tags(files, options.get("xml_record_xpath", ""))
         if not tags:
             # no matching element names → zero records (xml_test.rb:65-88)
-            df = spark.createDataFrame(
-                [], "source_file string, row_index long"
-            )
+            df = local_frame(spark, [], "source_file string, row_index long")
             return [(None, df)]
         parts = []
         for tag in tags:

@@ -56,6 +56,38 @@ def test_unknown_payload_raises_not_implemented(spark, name):
         UNKNOWN_PAYLOAD_OPERATORS[name](df).collect()
 
 
+NULL_PAYLOAD_OPERATORS = {
+    "perceptual_hash_images": (MM.perceptual_hash_images, (8, 8)),
+    "resize_images": (lambda df: MM.resize_images(df, 4, 4), (4, 4)),
+}
+
+
+def _png_and_null_frame(spark):
+    return spark.createDataFrame(
+        [
+            (1, "image", "image/png", 8, 8, 0, bytearray(png.encode_png(8, 8, RGB))),
+            (2, "image", "image/png", None, None, None, None),
+        ],
+        MM.MEDIA_SCHEMA,
+    )
+
+
+@pytest.mark.parametrize("name", sorted(NULL_PAYLOAD_OPERATORS))
+def test_null_payload_yields_null_row(spark, name):
+    op, size = NULL_PAYLOAD_OPERATORS[name]
+    rows = sorted(op(_png_and_null_frame(spark)).collect())
+    assert [r[0] for r in rows] == [1, 2]
+    assert (rows[0][1], rows[0][2]) == size and rows[0][3] is not None
+    assert tuple(rows[1])[1:] == (None, None, None)
+
+
+def test_null_payloads_form_no_dedup_group(spark):
+    df = _png_and_null_frame(spark).unionByName(
+        spark.createDataFrame([(3, "image", None, None, None, None, None)], MM.MEDIA_SCHEMA)
+    )
+    assert [tuple(r) for r in MM.image_dedup_groups(df).collect()] == [(1, 1)]
+
+
 def test_module_has_one_adapter_and_one_image_dispatch():
     """Source-level pin: every per-payload operator goes through
     `payload_map` (the module's only mapInPandas call), and the image
