@@ -50,11 +50,25 @@ def recommended_session_conf() -> dict[str, str]:
     under-parallelised small stages spread out. The value is a property
     of CPU-per-byte, not of one machine — production clusters want the
     same order of magnitude.
+
+    ``spark.sql.codegen.cache.maxEntries = 1000``: Spark keeps compiled
+    whole-stage and projection classes in an LRU cache of 100 entries by
+    default. A `corpus_dedup` repetition (perfbench) needs 160–240
+    distinct classes, so with 100 entries every repetition evicts and
+    compiles nearly all of them again, serially on the driver (208–220
+    per steady repetition); with 1000 entries the steady repetitions
+    compiled 12, 0 and 0. `feed` needs 29 classes
+    and `media_decode` 17, all compiled in the cold repetition with
+    either size. The cached classes did not grow the driver's Metaspace:
+    169 MB after three steady `corpus_dedup` repetitions with either
+    size. The conf is static: it takes effect only when set before the
+    session is built.
     """
     return {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+        "spark.sql.codegen.cache.maxEntries": "1000",
     }
 
 

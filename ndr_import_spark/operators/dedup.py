@@ -889,6 +889,44 @@ def _star_components(
     ).select("node", F.coalesce(F.col("_c"), F.col("node")).alias("component"))
 
 
+# Edge rows at or below which `connected_components` ("auto"/"star")
+# finishes on the driver. Rows are distinct directed edges, so an
+# undirected pair counts twice and a self-pair once. The size check
+# collects up to this many rows as Python Rows (~300 MB at the limit
+# with 40-bit int ids, measured) and union-find over them takes ~1.3 s on
+# one core, while every distributed propagation round costs ~3 Spark jobs
+# whatever the input size. Sized to a default driver's memory, not to the
+# data: it is not a parameter.
+LOCAL_CC_MAX_EDGES = 1_000_000
+
+
+def _min_label_union_find(pairs) -> list[tuple]:
+    """(node, component) over driver-side (a, b) pairs, where component is
+    the minimum id connected to node: union-find that always hangs the
+    larger root under the smaller one. A null id is its own component (it
+    equals no id, so it links nothing), as on the distributed paths."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while x != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return [(x, find(x)) for x in parent]
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -901,67 +939,107 @@ def connected_components(
     chain a~b~c must collapse to one representative even though (a, c)
     was never compared).
 
-    Iterative min-label propagation: every node starts labelled with its
-    own id; each round, labels flow across edges and every node keeps the
-    minimum seen. Per round that is ONE shuffle join (symmetric edges ×
-    labels) plus one map-side-combined min-aggregate; rounds needed =
-    graph diameter, which for near-dup clusters is tiny (template families
-    are near-cliques). Each round's labels are `localCheckpoint`-ed:
-    iterative plans MUST truncate lineage, not merely cache — the labels
-    frame appears twice per round (join side + union side), so the
-    un-truncated logical plan doubles every iteration (2^rounds nodes:
-    a 19-round chain OOMed the driver in Catalyst before any data moved).
-    On a fault-tolerant cluster run, swap localCheckpoint for
-    `checkpoint()` with a checkpoint dir (localCheckpoint trades executor-
-    loss resilience for speed).
-
-    `algorithm` picks the long-chain strategy:
-
-    * ``"auto"`` (default) — propagation for up to `max_iterations`
-      rounds; if the budget exhausts without a fixpoint (a pathological
-      chain — near-dup clusters are normally near-cliques with tiny
-      diameter), CONTRACT the graph through the partial labels (edges
-      between label-representatives only — the graph shrinks to one node
-      per partially-merged group) and finish it with large-star /
-      small-star (`_star_components`, O(log n) rounds). Never raises on
-      diameter; the propagation rounds already paid are reused.
-    * ``"propagation"`` — round-3 behaviour: raise on budget exhaustion
-      rather than return partially-propagated labels.
-    * ``"star"`` — skip propagation, pure star contraction (the right
-      opening when the caller KNOWS chains are long).
-
-    Convergence probe: labels only ever DECREASE, so an unchanged
-    sum(component) ⟺ fixpoint — no extra comparison join.
-
     Returns (node, component) for every node that appears in `pairs`,
-    where component = the minimum doc id reachable.
+    where component = the minimum id reachable; a null id is its own
+    component. Runs Spark jobs when called, on one of three paths:
+
+    * **driver** (``"auto"``/``"star"``, at most `LOCAL_CC_MAX_EDGES`
+      edge rows): the symmetric, distinct edge frame that the distributed
+      paths use is persisted, and one ``limit(LOCAL_CC_MAX_EDGES +
+      1).collect()`` reads it: the job(s) of the edges' shuffle stage
+      and of the read (one per partition batch Spark's limit scans),
+      plus any upstream stages of `pairs`. If it returns no more than the
+      limit, union-find on the driver labels the components, the edges
+      are unpersisted and the result is a `local_frame` (a driver-local
+      relation, with the ids' type). No round jobs, and no
+      `localCheckpoint`: nothing the result depends on is lost with an
+      executor.
+    * **propagation** (``"auto"`` above the limit, and ``"propagation"``
+      always, which skips the size check): iterative min-label
+      propagation. Every node starts labelled with its own id; each
+      round, labels flow across edges and every node keeps the minimum
+      seen: ONE shuffle join (symmetric edges × labels) plus one
+      map-side-combined min-aggregate, ~3 jobs under AQE. Rounds needed
+      = graph diameter, which for near-dup clusters is tiny (template
+      families are near-cliques). Each round's labels are
+      `localCheckpoint`-ed: iterative plans MUST truncate lineage, not
+      merely cache — the labels frame appears twice per round (join side
+      + union side), so the un-truncated logical plan doubles every
+      iteration (2^rounds nodes: a 19-round chain OOMed the driver in
+      Catalyst before any data moved). localCheckpoint is not fault
+      tolerant: on a cluster that can lose executors, swap it for
+      `checkpoint()` with a checkpoint dir.
+    * **star** (``"star"`` above the limit): large-star / small-star
+      contraction (`_star_components`, O(log n) rounds, the same
+      per-round shape and checkpoints) over the persisted edges — the
+      right opening when the caller KNOWS chains are long.
+
+    Above the limit the size check adds only the read's job(s) to the
+    distributed path: one when the first partition holds more than the
+    limit, a few more while Spark's limit widens its scan (up to 4x the
+    partitions per job). The edges' shuffle stage is shared, and the
+    partitions the read computed stay in the cache the rounds then use.
+
+    On the propagation path `algorithm` picks what happens when
+    `max_iterations` rounds end without a fixpoint (a pathological chain
+    — near-dup clusters are normally near-cliques with tiny diameter):
+
+    * ``"auto"`` (default) — CONTRACT the graph through the partial
+      labels (edges between label-representatives only — the graph
+      shrinks to one node per partially-merged group) and finish it with
+      star contraction. Never raises on diameter; the propagation rounds
+      already paid are reused.
+    * ``"propagation"`` — round-3 behaviour: raise rather than return
+      partially-propagated labels.
+
+    Convergence probe: each round's aggregate also keeps every node's
+    previous label, so the round's one action counts the labels that
+    changed — exact for any orderable id type, with no extra join.
     """
     from pyspark import StorageLevel
 
     if algorithm not in ("auto", "propagation", "star"):
         raise ValueError(f"unknown connected-components algorithm {algorithm!r}")
-    if algorithm == "star":
-        all_nodes = pairs.select(F.col(id_a).alias("node")).unionByName(
-            pairs.select(F.col(id_b).alias("node"))
-        )
-        edges = (
-            pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            )
-            .distinct()
-        )
-        return _star_components(edges, nodes=all_nodes)
-
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK_DESER)
     )
-    # eager=False + immediate action: the sum aggregate's job
+    try:
+        if algorithm != "propagation":
+            # the size check reads the persisted edges: when the graph is
+            # too big, the distributed path reuses them instead of
+            # computing `pairs` a second time
+            rows = edges.limit(LOCAL_CC_MAX_EDGES + 1).collect()
+            if len(rows) <= LOCAL_CC_MAX_EDGES:
+                t = edges.schema["src"].dataType.simpleString()
+                return local_frame(
+                    pairs.sparkSession,
+                    _min_label_union_find(rows),
+                    f"node {t}, component {t}",
+                )
+            del rows  # up to LOCAL_CC_MAX_EDGES rows the rounds do not need
+        if algorithm == "star":
+            return _star_components(
+                edges.filter(F.col("src") < F.col("dst")),
+                nodes=edges.select(F.col("src").alias("node")),
+            )
+        return _min_label_propagation(edges, max_iterations, algorithm)
+    finally:
+        edges.unpersist(blocking=False)
+
+
+def _min_label_propagation(
+    edges: DataFrame, max_iterations: int, algorithm: str
+) -> DataFrame:
+    """The propagation path of `connected_components` over its persisted,
+    symmetric, distinct (src, dst) `edges`."""
+    # an edge (null, x) would hand x's label to the null node; (x, null)
+    # never joins, as null equals no node. So a null id stays its own
+    # component, as on the star and driver paths
+    links = edges.where(F.col("src").isNotNull())
+    # eager=False + immediate action: the count aggregate's job
     # materialises the checkpoint as it runs — one job per round instead
     # of a checkpoint job followed by a collect job (r11; same trick in
     # every convergence loop below)
@@ -971,44 +1049,33 @@ def connected_components(
         .select("node", F.col("node").alias("component"))
         .localCheckpoint(eager=False)
     )
-    prev_sum = None
     for _ in range(max_iterations):
-        msgs = edges.join(labels, F.col("dst") == F.col("node")).select(
+        msgs = links.join(labels, F.col("dst") == F.col("node")).select(
             F.col("src").alias("node"), F.col("component")
         )
         new = (
-            labels.unionByName(msgs)
+            labels.select("node", "component", F.col("component").alias("_prev"))
+            .unionByName(msgs, allowMissingColumns=True)
             .groupBy("node")
-            .agg(F.min("component").alias("component"))
+            .agg(F.min("component").alias("component"), F.min("_prev").alias("_prev"))
             .localCheckpoint(eager=False)
         )
-        row = new.agg(
-            F.sum("component").alias("s"), F.sum("node").alias("s0")
-        ).collect()[0]
-        s = row["s"]
-        if prev_sum is None:
-            # labels₀ is (node, node), so its component-sum equals the
-            # node-id sum — and every round preserves the node set (the
-            # groupBy over labels ∪ msgs keeps all labels rows), so
-            # round 1's aggregate yields BOTH sums and the former
-            # pre-loop sum action (a whole job + pass over the node
-            # set) is folded away (r11)
-            prev_sum = row["s0"]
-        # the sum action just materialised `new`, so last round's
+        changed = new.agg(
+            F.count(F.when(F.col("component") != F.col("_prev"), 1)).alias("n")
+        ).collect()[0]["n"]
+        # the count action just materialised `new`, so last round's
         # checkpoint blocks are dead — free them now instead of waiting
         # for JVM GC (otherwise diameter-many label frames accumulate
         # per run for the session lifetime)
         release_local_checkpoint(labels)
         labels = new
-        if s == prev_sum:
+        if changed == 0:
             break
-        prev_sum = s
     else:
         # budget exhausted without a fixpoint: labels are only PARTIALLY
         # propagated — returning them would split one real cluster into
         # several and keep phantom representatives
         if algorithm == "propagation":
-            edges.unpersist(blocking=False)
             raise RuntimeError(
                 f"connected_components did not converge in {max_iterations} "
                 "rounds: the pair graph has a chain longer than the budget — "
@@ -1050,10 +1117,8 @@ def connected_components(
             )
             .localCheckpoint(eager=False)
         )
-        edges.unpersist(blocking=False)
         return final
-    edges.unpersist(blocking=False)
-    return labels
+    return labels.select("node", "component")
 
 
 def embedding_neardup_drops(

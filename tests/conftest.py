@@ -4,16 +4,20 @@ from pyspark.sql import SparkSession
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = (
+    from ndr_import_spark import recommended_session_conf
+
+    builder = (
         SparkSession.builder.master("local[4]")
         .appName("ndr_import_spark-tests")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.default.parallelism", "4")
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
-        .getOrCreate()
     )
+    # the suite runs under the conf the engine recommends for its workloads
+    for key, value in recommended_session_conf().items():
+        builder = builder.config(key, value)
+    spark = builder.getOrCreate()
     yield spark
     spark.stop()
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ndr_import_spark.operators import dedup
 from ndr_import_spark.operators.corpus import passage_dedup
 from ndr_import_spark.operators.dedup import connected_components
 
@@ -49,10 +50,17 @@ class TestConnectedComponents:
                 pairs, max_iterations=5, algorithm="propagation"
             ).collect()
 
-    def test_auto_falls_back_to_star_on_long_chain(self, spark):
+    @pytest.mark.parametrize(
+        "max_edges", [0, 10**9], ids=["distributed", "driver"]
+    )
+    def test_auto_falls_back_to_star_on_long_chain(
+        self, spark, monkeypatch, max_edges
+    ):
         # a 10_000-node path has diameter 9_999: propagation alone would
         # exhaust any sane budget; auto must contract through the partial
-        # labels and finish with large-star/small-star
+        # labels and finish with large-star/small-star. The chain fits
+        # the driver path, so "distributed" forces the star fallback
+        monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", max_edges)
         n = 10_000
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
@@ -88,6 +96,108 @@ class TestConnectedComponents:
         pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
         with pytest.raises(ValueError, match="unknown"):
             connected_components(pairs, algorithm="bogus")
+
+
+MIXED_GRAPH = (
+    [(i, i + 1) for i in range(10, 18)]  # chain 10..18
+    + [(1, 2), (2, 3), (3, 1), (3, 4)]  # triangle + tail
+    + [(100, 200)]
+    + [(7, 7)]  # degenerate self-pair: node must still appear
+)
+
+
+class TestDriverFinish:
+    """Graphs of at most `LOCAL_CC_MAX_EDGES` edge rows finish with
+    union-find on the driver; larger ones take the distributed path. The
+    limit is forced to 0 (always distributed) and to 10**9 (always on the
+    driver): both must give the same (node, component) rows."""
+
+    def _rows(self, monkeypatch, max_edges, pairs, **kw):
+        monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", max_edges)
+        comp = connected_components(pairs, **kw)
+        rows = sorted((tuple(r) for r in comp.collect()), key=repr)
+        return rows, comp.schema.simpleString()
+
+    def _parity(self, monkeypatch, pairs, **kw):
+        dist = self._rows(monkeypatch, 0, pairs, **kw)
+        local = self._rows(monkeypatch, 10**9, pairs, **kw)
+        assert local == dist
+        return local[0]
+
+    @pytest.mark.parametrize("algorithm", ["auto", "star"])
+    def test_mixed_graph(self, spark, monkeypatch, algorithm):
+        pairs = spark.createDataFrame(MIXED_GRAPH, "id_a long, id_b long")
+        got = dict(self._parity(monkeypatch, pairs, algorithm=algorithm))
+        assert got[7] == 7 and got[18] == 10 and got[4] == 1 and got[200] == 100
+
+    @pytest.mark.parametrize("algorithm", ["auto", "star"])
+    def test_null_id_is_its_own_component(self, spark, monkeypatch, algorithm):
+        pairs = spark.createDataFrame(
+            [(1, None), (2, None), (None, 5), (3, 4)], "id_a long, id_b long"
+        )
+        got = self._parity(monkeypatch, pairs, algorithm=algorithm)
+        assert got == [(1, 1), (2, 2), (3, 3), (4, 3), (5, 5), (None, None)]
+
+    @pytest.mark.parametrize("algorithm", ["auto", "star"])
+    def test_string_ids(self, spark, monkeypatch, algorithm):
+        pairs = spark.createDataFrame(
+            [("b", "c"), ("c", "d"), ("a", "b"), ("x", "y"), ("q", "q")],
+            "id_a string, id_b string",
+        )
+        got = dict(self._parity(monkeypatch, pairs, algorithm=algorithm))
+        assert got == {"a": "a", "b": "a", "c": "a", "d": "a",
+                       "q": "q", "x": "x", "y": "x"}
+
+    @pytest.mark.parametrize("algorithm", ["auto", "star"])
+    def test_empty_pairs(self, spark, monkeypatch, algorithm):
+        pairs = spark.createDataFrame([], "id_a long, id_b long")
+        assert self._parity(monkeypatch, pairs, algorithm=algorithm) == []
+
+    def test_long_chain(self, spark, monkeypatch):
+        n = 10_000
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+        ).repartition(8)
+        got = self._parity(monkeypatch, pairs, max_iterations=6)
+        assert dict(got) == dict.fromkeys(range(n), 0)
+
+    def test_driver_path_keeps_nothing_cached(self, spark, monkeypatch):
+        monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", 10**9)
+        pairs = spark.createDataFrame(MIXED_GRAPH, "id_a long, id_b long")
+        persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+        comp = connected_components(pairs)
+        # no cache and no checkpoint stays behind: the result is a
+        # driver-local relation
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+        assert comp._jdf.queryExecution().optimizedPlan().toString().startswith(
+            "LocalRelation"
+        )
+
+    def test_job_counts(self, spark, monkeypatch):
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        pairs = spark.createDataFrame(MIXED_GRAPH, "id_a long, id_b long")
+
+        def jobs(max_edges, algorithm):
+            monkeypatch.setattr(dedup, "LOCAL_CC_MAX_EDGES", max_edges)
+            group = f"cc-{max_edges}-{algorithm}"
+            sc.setJobGroup(group, group)
+            try:
+                connected_components(pairs, algorithm=algorithm).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(tracker.getJobIdsForGroup(group))
+
+        # "propagation" skips the size check: it is the distributed path
+        # alone, as "auto" ran it before the driver path existed
+        rounds = jobs(0, "propagation")
+        # driver path: the edges' shuffle stage and the size check's read
+        # (Spark's limit scans the first partition, then the rest)
+        assert jobs(10**9, "auto") <= 3
+        assert jobs(10**9, "star") <= 3
+        # distributed path: the size check adds one job
+        assert jobs(0, "auto") <= rounds + 1
+        assert rounds > 10
 
 
 class TestPassageDedup:
