@@ -1436,8 +1436,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ndr_import_spark.operators import multimodal as MM
 
     media = MM.synth_media_df(spark, 256)
-    # per-call injection (r8 verdict): never clobbers a caller's
-    # session-wide set_image_decoder registration
+    # per-call decoder injection (r8 verdict)
     feats = MM.extract_features(media, decoder=MM.deterministic_fake_decoder)
     mean_feat = F.aggregate(
         F.col("feature"), F.lit(0.0), lambda a, x: a + x

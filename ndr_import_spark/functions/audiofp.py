@@ -222,20 +222,19 @@ def resample_audio_linear(samples: np.ndarray, src_sr: int,
 # --------------------------------------------- silence segmentation (r11)
 
 
-def silence_segments(samples: np.ndarray, min_gap: int,
-                     level: float = SILENCE_LEVEL) -> list[tuple[int, int]]:
+def silence_segments(samples: np.ndarray, min_gap: int) -> list[tuple[int, int]]:
     """Split a mono signal into voiced segments separated by silence —
     the audio twin of document chunking for ASR-style corpus prep:
     [(start, end)) sample ranges of maximal runs whose samples are not
     all silent, where two voiced runs merge unless separated by at
-    least `min_gap` consecutive samples with |s| <= level. Leading and
+    least `min_gap` consecutive samples with |s| <= SILENCE_LEVEL. Leading and
     trailing silence belongs to no segment. Pure integer run-length
     arithmetic on a boolean mask — vectorised, deterministic,
     distribution-free."""
     if min_gap < 1:
         raise AudioFpError("min_gap must be >= 1 sample")
     s = np.asarray(samples, dtype=np.float64)
-    voiced = np.abs(s) > level
+    voiced = np.abs(s) > SILENCE_LEVEL
     if not voiced.any():
         return []
     idx = np.flatnonzero(voiced)

@@ -258,28 +258,24 @@ def ogg_comments(data: bytes) -> dict | None:
     return None
 
 
-def build_ogg_vorbis_tagged(rate: int, channels: int,
-                            tags: dict[str, str],
-                            vendor: str = "ndr-spark") -> bytes:
+def build_ogg_vorbis_tagged(rate: int, channels: int, tags: dict[str, str]) -> bytes:
     from ndr_import_spark.sources.mediameta import build_ogg_page
 
     ident = (b"\x01vorbis" + struct.pack("<I", 0) + bytes([channels])
              + struct.pack("<I", rate) + struct.pack("<iii", 0, 0, 0)
              + b"\xb8\x01")
-    comment = b"\x03vorbis" + _build_vorbis_body(tags, vendor) + b"\x01"
+    comment = b"\x03vorbis" + _build_vorbis_body(tags, "ndr-spark") + b"\x01"
     return (build_ogg_page(7771, 0, 0, [ident], header_type=2)
             + build_ogg_page(7771, 1, 0, [comment])
             + build_ogg_page(7771, 2, 4096, [bytes(20)], header_type=4))
 
 
-def build_ogg_opus_tagged(rate: int, channels: int,
-                          tags: dict[str, str],
-                          vendor: str = "ndr-spark") -> bytes:
+def build_ogg_opus_tagged(rate: int, channels: int, tags: dict[str, str]) -> bytes:
     from ndr_import_spark.sources.mediameta import build_ogg_page
 
     head = (b"OpusHead\x01" + bytes([channels]) + struct.pack("<H", 312)
             + struct.pack("<I", rate) + struct.pack("<h", 0) + b"\x00")
-    comment = b"OpusTags" + _build_vorbis_body(tags, vendor)
+    comment = b"OpusTags" + _build_vorbis_body(tags, "ndr-spark")
     return (build_ogg_page(42, 0, 0, [head], header_type=2)
             + build_ogg_page(42, 1, 0, [comment])
             + build_ogg_page(42, 2, 960, [bytes(8)], header_type=4))

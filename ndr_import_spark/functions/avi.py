@@ -213,8 +213,8 @@ def encode_avi_mjpeg(
 def avi_video_decoder(
     data: bytes, frame_stride: int = 1
 ) -> tuple[int, int, int, int, list[float]]:
-    """`set_video_decoder`-shaped decoder: (n_frames, width, height,
-    duration_ms, per-sampled-frame mean pixel features in [0, 1]).
+    """A ``decoder=`` for `extract_video_features`: (n_frames, width,
+    height, duration_ms, per-sampled-frame mean pixel features in [0, 1]).
 
     Decodes every `frame_stride`-th frame through the stdlib JPEG codec
     and averages its pixels — the video twin of the image grid features /

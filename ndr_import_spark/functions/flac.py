@@ -433,20 +433,16 @@ def _encode_subframe(bw: _BitWriter, samples: list[int], bps: int) -> None:
         bw.write(u & ((1 << param) - 1), param)
 
 
-def encode_flac(
-    rate: int, samples: np.ndarray, bits: int = 16, blocksize: int = 4096
-) -> bytes:
+def encode_flac(rate: int, samples: np.ndarray, blocksize: int = 4096) -> bytes:
     """Real FLAC bytes for a float signal in [-1, 1): 16-bit quantise
     (round-half-up like encode_wav), independent channels, fixed
     blocking, CONSTANT/FIXED-2/VERBATIM subframes with one Rice
     partition. Mono 1-D input is treated as one channel."""
-    if bits != 16:
-        raise ValueError("fixture encoder writes 16-bit FLAC only")
     arr = np.asarray(samples, dtype=np.float64)
     if arr.ndim == 1:
         arr = arr[:, None]
-    ints = np.floor(arr * (1 << (bits - 1)) + 0.5).astype(np.int64)
-    ints = np.clip(ints, -(1 << (bits - 1)), (1 << (bits - 1)) - 1)
+    ints = np.floor(arr * (1 << 15) + 0.5).astype(np.int64)
+    ints = np.clip(ints, -(1 << 15), (1 << 15) - 1)
     n, nch = ints.shape
     if nch > 8:
         raise ValueError("FLAC supports at most 8 channels")
@@ -467,7 +463,7 @@ def encode_flac(
     si.write(0, 24)
     si.write(rate, 20)
     si.write(nch - 1, 3)
-    si.write(bits - 1, 5)
+    si.write(15, 5)  # bits per sample - 1
     si.write(n, 36)
     si.pad_to_byte()
     streaminfo = si.bytes() + md.digest()
@@ -496,7 +492,7 @@ def encode_flac(
         bw = _BitWriter()
         body = _BitWriter()
         for c in range(nch):
-            _encode_subframe(body, [int(v) for v in block[:, c]], bits)
+            _encode_subframe(body, [int(v) for v in block[:, c]], 16)
         body.pad_to_byte()
         frame = header + bytes([crc8(header)]) + body.bytes()
         frame += crc16(frame).to_bytes(2, "big")
@@ -505,7 +501,7 @@ def encode_flac(
 
 
 def flac_audio_decoder(data: bytes) -> tuple[int, int, list[float]]:
-    """`set_audio_decoder`-shaped decoder over real FLAC bytes:
+    """A ``decoder=`` for `extract_audio_features` over real FLAC bytes:
     (n_samples, sample_rate, 8 time-slice means of the mono mix)."""
     from ndr_import_spark.functions.wav import slice_features
 

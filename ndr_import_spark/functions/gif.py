@@ -372,18 +372,15 @@ def encode_gif_animation(
     return bytes(out)
 
 
-def gif_video_decoder(
-    data: bytes, frame_stride: int = 1
-) -> tuple[int, int, int, int, list[float]]:
+def gif_video_decoder(data: bytes) -> tuple[int, int, int, int, list[float]]:
     """`extract_video_features`-shaped decoder over an animated GIF:
-    (n_frames, width, height, duration_ms, per-sampled-frame mean/255).
+    (n_frames, width, height, duration_ms, per-frame mean/255).
     Delays are GIF centiseconds -> ms x10; frames are the COMPOSED
     canvases, so disposal/transparency affect the features exactly as a
     renderer would show them."""
     sw, sh, frames = decode_gif_frames(data)
     duration_ms = sum(d for d, _ in frames) * 10
-    feats = []
-    for j in range(0, len(frames), max(1, frame_stride)):
-        arr = np.frombuffer(frames[j][1], dtype=np.uint8)
-        feats.append(float(arr.mean()) / 255.0)
+    feats = [
+        float(np.frombuffer(px, dtype=np.uint8).mean()) / 255.0 for _d, px in frames
+    ]
     return len(frames), sw, sh, duration_ms, feats

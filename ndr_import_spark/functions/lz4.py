@@ -23,6 +23,9 @@ class Lz4Error(ValueError):
     pass
 
 
+MAX_OUTPUT = 1 << 31  # decompression-bomb guard on decoded bytes
+
+
 # --- XXH32 (public xxHash spec) -------------------------------------------
 
 _P32_1 = 0x9E3779B1
@@ -37,14 +40,14 @@ def _rotl32(x: int, r: int) -> int:
     return ((x << r) | (x >> (32 - r))) & _M32
 
 
-def xxh32(data: bytes, seed: int = 0) -> int:
+def xxh32(data: bytes) -> int:
     n = len(data)
     i = 0
     if n >= 16:
-        v1 = (seed + _P32_1 + _P32_2) & _M32
-        v2 = (seed + _P32_2) & _M32
-        v3 = seed & _M32
-        v4 = (seed - _P32_1) & _M32
+        v1 = (_P32_1 + _P32_2) & _M32
+        v2 = _P32_2
+        v3 = 0
+        v4 = -_P32_1 & _M32
         while i + 16 <= n:
             l1, l2, l3, l4 = struct.unpack_from("<IIII", data, i)
             v1 = (_rotl32((v1 + l1 * _P32_2) & _M32, 13) * _P32_1) & _M32
@@ -55,7 +58,7 @@ def xxh32(data: bytes, seed: int = 0) -> int:
         acc = (_rotl32(v1, 1) + _rotl32(v2, 7) + _rotl32(v3, 12)
                + _rotl32(v4, 18)) & _M32
     else:
-        acc = (seed + _P32_5) & _M32
+        acc = _P32_5
     acc = (acc + n) & _M32
     while i + 4 <= n:
         (lane,) = struct.unpack_from("<I", data, i)
@@ -75,11 +78,11 @@ def xxh32(data: bytes, seed: int = 0) -> int:
 # --- block format ----------------------------------------------------------
 
 
-def decompress_block(data: bytes, max_output: int = 1 << 31) -> bytes:
+def decompress_block(data: bytes) -> bytes:
     """LZ4 block: token (lit len nibble | match len nibble), 255-run
     length extensions, 2-byte LE offsets, min-match 4, last sequence is
     literals-only."""
-    return _decode_sequences(data, b"", max_output)
+    return _decode_sequences(data, b"", MAX_OUTPUT)
 
 
 def _decode_sequences(block: bytes, history: bytes, max_output: int) -> bytes:
@@ -143,7 +146,7 @@ _SKIP_LO = 0x184D2A50
 _SKIP_HI = 0x184D2A5F
 
 
-def decompress_frame(data: bytes, max_output: int = 1 << 31) -> bytes:
+def decompress_frame(data: bytes, max_output: int = MAX_OUTPUT) -> bytes:
     """All LZ4 frames in `data` (skippable frames skipped), with header
     and content checksums verified when present. Linked-block frames
     (B.Indep = 0) are decoded with a shared history window, matching

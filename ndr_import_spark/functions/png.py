@@ -151,10 +151,8 @@ def encode_png(width: int, height: int, rgb: bytes) -> bytes:
     )
 
 
-def grid_features(
-    width: int, height: int, channels: int, pixels: bytes, grid: int = 4
-) -> list[float]:
-    """Mean grey intensity over a grid×grid cell partition of the image —
+def grid_features(width: int, height: int, channels: int, pixels: bytes) -> list[float]:
+    """Mean grey intensity over a 4×4 cell partition of the image —
     a deterministic 16-dim feature vector in [0, 1]. Vectorised with
     numpy: a per-pixel Python loop would dominate decode time on real
     photos."""
@@ -165,11 +163,11 @@ def grid_features(
         grey = arr[:, :, :3].sum(axis=2, dtype=np.float64) / 3.0
     else:
         grey = arr[:, :, 0].astype(np.float64)
-    gy = np.minimum(np.arange(height) * grid // height, grid - 1)
-    gx = np.minimum(np.arange(width) * grid // width, grid - 1)
-    cell = (gy[:, None] * grid + gx[None, :]).ravel()
-    sums_v = np.bincount(cell, weights=grey.ravel(), minlength=grid * grid)
-    counts_v = np.bincount(cell, minlength=grid * grid)
+    gy = np.minimum(np.arange(height) * 4 // height, 3)
+    gx = np.minimum(np.arange(width) * 4 // width, 3)
+    cell = (gy[:, None] * 4 + gx[None, :]).ravel()
+    sums_v = np.bincount(cell, weights=grey.ravel(), minlength=16)
+    counts_v = np.bincount(cell, minlength=16)
     return [
         round(float(s) / int(c) / 255.0, 6) if c else 0.0
         for s, c in zip(sums_v, counts_v)

@@ -570,9 +570,7 @@ def _filter_edge(plane: np.ndarray, x: int, y: int, n: int, vertical: bool,
 # ---------------------------------------------------------------------------
 
 
-def decode_vp8_keyframe(data: bytes, _apply_loop_filter: bool = True,
-                        _debug: dict | None = None,
-                        max_pixels: int = 1 << 26):
+def decode_vp8_keyframe(data: bytes, max_pixels: int = 1 << 26):
     """Decode a VP8 keyframe bitstream (the 'VP8 ' chunk payload of a
     lossy WebP). Returns (width, height, Y, U, V) with Y a (h, w) uint8
     array and U/V ((h+1)//2, (w+1)//2) uint8 arrays.
@@ -903,17 +901,8 @@ def decode_vp8_keyframe(data: bytes, _apply_loop_filter: bool = True,
                 plane_arr[cy0:cy0 + 8, cx0:cx0 + 8] = np.clip(
                     recon, 0, 255).astype(np.uint8)
 
-    if _debug is not None:
-        _debug.update(
-            filter_type=filter_type, filter_level=filter_level,
-            sharpness=sharpness, q_index=q_index, n_parts=n_parts,
-            seg_enabled=seg_enabled, lf_delta=lf_delta_enabled,
-            ref_deltas=ref_deltas, mode_deltas=mode_deltas,
-            bpred=mb_bpred.copy(), inner=mb_inner.copy(),
-        )
-
     # --- loop filter (§15) ---
-    if filter_level > 0 and _apply_loop_filter:
+    if filter_level > 0:
         # per-segment levels
         def level_for(seg_id: int, bpred: bool) -> int:
             lvl = (seg_lf[seg_id] if seg_abs else filter_level + seg_lf[seg_id]) \

@@ -279,9 +279,7 @@ def _riff_wrap(fmt: bytes, raw: bytes) -> bytes:
     ])
 
 
-def encode_wav_g711(
-    sample_rate: int, g711_bytes: bytes, law: str = "mulaw", channels: int = 1
-) -> bytes:
+def encode_wav_g711(sample_rate: int, g711_bytes: bytes, law: str = "mulaw") -> bytes:
     """Wrap an already-companded G.711 byte stream (one byte per sample)
     in a RIFF/WAVE container with format tag 7 (µ-law) or 6 (A-law) —
     fixture builder; no linear→G.711 compressor is needed because test
@@ -291,9 +289,8 @@ def encode_wav_g711(
         raise WavError(f"unknown G.711 law {law!r} (mulaw|alaw)")
     raw = bytes(g711_bytes)
     fmt = struct.pack(
-        "<HHIIHH", tag, channels, sample_rate, sample_rate * channels,
-        channels, 8,
-    )
+        "<HHIIHH", tag, 1, sample_rate, sample_rate, 1, 8,
+    )  # mono: byte rate = sample rate, block align 1, 8 bits
     return _riff_wrap(fmt, raw)
 
 
@@ -311,22 +308,22 @@ def alaw_byte(sign: int, segment: int, mantissa: int) -> int:
     return a ^ 0x55
 
 
-def slice_features(samples: np.ndarray, n_slices: int = 8) -> list[float]:
+def slice_features(samples: np.ndarray) -> list[float]:
     """Mono-mix time-slice means — the audio twin of png.grid_features:
-    average the channels, split the timeline into `n_slices` contiguous
+    average the channels, split the timeline into 8 contiguous
     chunks (floor(j·n/k) boundaries), mean each. Deterministic float64."""
     mono = samples.mean(axis=1)
     n = mono.size
     feats = []
-    for j in range(n_slices):
-        lo = j * n // n_slices
-        hi = (j + 1) * n // n_slices
+    for j in range(8):
+        lo = j * n // 8
+        hi = (j + 1) * n // 8
         feats.append(float(mono[lo:hi].mean()) if hi > lo else 0.0)
     return feats
 
 
 def wav_audio_decoder(data: bytes) -> tuple[int, int, list[float]]:
-    """`set_audio_decoder`-shaped decoder over real WAV bytes:
+    """A ``decoder=`` for `extract_audio_features` over real WAV bytes:
     (n_samples, sample_rate, 8 time-slice means of the mono mix)."""
     rate, _channels, samples = decode_wav(data)
     return samples.shape[0], rate, slice_features(samples)

@@ -967,7 +967,6 @@ def build_webp_container(chunks: list[tuple[bytes, bytes]]) -> bytes:
 def build_vp8x_header(
     width: int,
     height: int,
-    icc: bool = False,
     alpha: bool = False,
     exif: bool = False,
     xmp: bool = False,
@@ -975,7 +974,7 @@ def build_vp8x_header(
 ) -> bytes:
     """The 10-byte VP8X chunk body (flags + 24-bit canvas dims)."""
     flags = (
-        (0x20 if icc else 0) | (0x10 if alpha else 0)
+        (0x10 if alpha else 0)
         | (0x08 if exif else 0) | (0x04 if xmp else 0)
         | (0x02 if animation else 0)
     )
@@ -1329,8 +1328,7 @@ def libwebp_encode_rgb(rgb: bytes, width: int, height: int,
 
 
 def libwebp_encode_rgba(rgba: bytes, width: int, height: int,
-                        lossless: bool = True,
-                        quality: float = 75.0) -> bytes:
+                        lossless: bool = True) -> bytes:
     """Encode RGBA32 with the SYSTEM libwebp: lossless VP8L by default
     (the reference encoder's transforms, colour cache and meta prefix
     codes, which the literal-only `encode_webp` never emits), or lossy
@@ -1347,7 +1345,7 @@ def libwebp_encode_rgba(rgba: bytes, width: int, height: int,
                                        ctypes.byref(out))
     else:
         n = lib.WebPEncodeRGBA(rgba, width, height, width * 4,
-                               ctypes.c_float(quality), ctypes.byref(out))
+                               ctypes.c_float(75.0), ctypes.byref(out))
     if not n:
         raise WebpError("libwebp RGBA encode failed")
     data = ctypes.string_at(out.value, n)

@@ -84,14 +84,14 @@ def _merge(acc: int, val: int) -> int:
     return ((acc ^ _round(0, val)) * _P1 + _P4) & _M64
 
 
-def xxh64(data: bytes, seed: int = 0) -> int:
+def xxh64(data: bytes) -> int:
     n = len(data)
     i = 0
     if n >= 32:
-        v1 = (seed + _P1 + _P2) & _M64
-        v2 = (seed + _P2) & _M64
-        v3 = seed & _M64
-        v4 = (seed - _P1) & _M64
+        v1 = (_P1 + _P2) & _M64
+        v2 = _P2
+        v3 = 0
+        v4 = -_P1 & _M64
         while i + 32 <= n:
             l1, l2, l3, l4 = struct.unpack_from("<QQQQ", data, i)
             v1 = _round(v1, l1)
@@ -105,7 +105,7 @@ def xxh64(data: bytes, seed: int = 0) -> int:
         acc = _merge(acc, v3)
         acc = _merge(acc, v4)
     else:
-        acc = (seed + _P5) & _M64
+        acc = _P5
     acc = (acc + n) & _M64
     while i + 8 <= n:
         (lane,) = struct.unpack_from("<Q", data, i)

@@ -35,19 +35,18 @@ def asof_join(
     left_by: str,
     right_by: str,
     how: str = "inner",
-    suffix: str = "_r",
 ) -> DataFrame:
     """Join each left row to the latest right row with
     ``right.right_on <= left.left_on`` and matching by-key.
 
     Returns left columns + right payload columns (right_by/right_on keep
-    their names; clashes with left column names get `suffix`). `how` is
+    their names; clashes with left column names get ``_r``). `how` is
     'inner' (drop unmatched left rows) or 'left' (keep, right side NULL).
     """
     lcols = left.columns
     rcols = right.columns
     payload = [c for c in rcols if c != right_by]
-    renamed = {c: (c + suffix if c in lcols else c) for c in payload}
+    renamed = {c: (c + "_r" if c in lcols else c) for c in payload}
 
     lt = left.select(
         F.col(left_by).alias("_k"),

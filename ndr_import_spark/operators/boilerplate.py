@@ -37,6 +37,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Default cut line of step 3, shared with the DuckDB oracle.
+MIN_WORDS = 10
+MAX_LINK_PCT = 25
+
 # Block-level boundary tags (open or close, attributes allowed).
 BLOCK_TAG_RE = (
     r"(?i)</?(?:p|div|h[1-6]|li|ul|ol|dl|dt|dd|td|th|tr|table|thead|tbody"
@@ -110,8 +114,8 @@ def extract_main_content(
     df: DataFrame,
     html_col: str = "html",
     id_col: str = "doc_id",
-    min_words: int = 10,
-    max_link_pct: int = 25,
+    min_words: int = MIN_WORDS,
+    max_link_pct: int = MAX_LINK_PCT,
 ) -> DataFrame:
     """(id, n_blocks, n_kept, main_text): the page's content blocks,
     document-ordered and space-joined. Documents whose every block is
@@ -144,8 +148,8 @@ def extract_main_content_stateless(
     df: DataFrame,
     html_col: str = "html",
     id_col: str = "doc_id",
-    min_words: int = 10,
-    max_link_pct: int = 25,
+    min_words: int = MIN_WORDS,
+    max_link_pct: int = MAX_LINK_PCT,
 ) -> DataFrame:
     """`extract_main_content` as ONE row-local select: segmentation,
     per-block features, the keep rule and ordered reassembly all run as
@@ -219,16 +223,11 @@ def extract_main_content_stateless(
     return out.where(F.col("n_blocks") > 0)
 
 
-def main_content_oracle_sql(
-    pages_cte: str,
-    id_col: str = "doc_id",
-    min_words: int = 10,
-    max_link_pct: int = 25,
-) -> str:
+def main_content_oracle_sql(pages_cte: str) -> str:
     """DuckDB transcription running the LITERAL same regexes.
 
     `pages_cte` must be a complete ``WITH``-clause body ending in a CTE
-    named ``pages`` with columns (`id_col`, html).
+    named ``pages`` with columns (doc_id, html).
     """
     # same transformation ORDER as _clean_text: strip inline tags, then
     # entities (&amp; last), then whitespace collapse + trim
@@ -237,36 +236,36 @@ def main_content_oracle_sql(
         ents = f"replace({ents}, '{ent}', '{rep.replace(chr(39), chr(39)*2)}')"
     return rf"""WITH {pages_cte},
 nos AS (
-  SELECT {id_col},
+  SELECT doc_id,
          regexp_replace(regexp_replace(html,
              '{SCRIPT_RE}', ' ', 'g'), '{STYLE_RE}', ' ', 'g') AS h
   FROM pages
 ), seg AS (
-  SELECT {id_col}, string_split_regex(h, '{BLOCK_TAG_RE}') AS bs FROM nos
+  SELECT doc_id, string_split_regex(h, '{BLOCK_TAG_RE}') AS bs FROM nos
 ), rawb AS (
-  SELECT {id_col}, i - 1 AS idx, bs[i] AS raw
+  SELECT doc_id, i - 1 AS idx, bs[i] AS raw
   FROM seg, unnest(generate_series(1, len(bs))) AS u(i)
 ), feat AS (
-  SELECT {id_col}, idx,
+  SELECT doc_id, idx,
          trim(regexp_replace({ents}, '\s+', ' ', 'g')) AS text,
          CAST(coalesce(length(array_to_string(
              regexp_extract_all(raw, '{ANCHOR_TEXT_RE}', 1), '')), 0)
            AS INT) AS anchor_chars
   FROM rawb
 ), blocks AS (
-  SELECT {id_col}, idx, text,
+  SELECT doc_id, idx, text,
          CAST(CASE WHEN text = '' THEN 0
               ELSE len(string_split(text, ' ')) END AS INT) AS n_words,
          CAST(length(text) AS INT) AS n_chars, anchor_chars
   FROM feat WHERE length(text) > 0
 ), perdoc AS (
-  SELECT {id_col},
+  SELECT doc_id,
          CAST(count(*) AS INT) AS n_blocks,
-         CAST(sum(CASE WHEN n_words >= {min_words}
-                        AND anchor_chars * 100 <= n_chars * {max_link_pct}
+         CAST(sum(CASE WHEN n_words >= {MIN_WORDS}
+                        AND anchor_chars * 100 <= n_chars * {MAX_LINK_PCT}
                        THEN 1 ELSE 0 END) AS INT) AS n_kept,
-         coalesce(string_agg(CASE WHEN n_words >= {min_words}
-                        AND anchor_chars * 100 <= n_chars * {max_link_pct}
+         coalesce(string_agg(CASE WHEN n_words >= {MIN_WORDS}
+                        AND anchor_chars * 100 <= n_chars * {MAX_LINK_PCT}
                        THEN text END, ' ' ORDER BY idx), '') AS main_text
-  FROM blocks GROUP BY {id_col}
+  FROM blocks GROUP BY doc_id
 )"""

@@ -186,7 +186,6 @@ def _learn_bpe_local(
 def learn_bpe(
     df: DataFrame,
     n_merges: int = 16,
-    text_col: str = "text",
     min_pair_freq: int = 2,
     max_vocab: int | None = None,
     collect_threshold: int = 65536,
@@ -214,7 +213,7 @@ def learn_bpe(
     empty-pattern regex advances code-point-wise (a surrogate pair
     stays one symbol; pinned by the non-BMP parity test in
     tests/test_bpe.py)."""
-    vocab = word_frequencies(df, text_col)
+    vocab = word_frequencies(df, "text")
     if max_vocab is not None:
         vocab = (
             vocab.orderBy(F.col("freq").desc(), F.col("word").asc())
@@ -440,20 +439,15 @@ def apply_bpe_to_vocab(
     return vocab.mapInPandas(run, "word string, freq long, n_pieces int")
 
 
-def bpe_fertility(
-    df: DataFrame,
-    merges: list[tuple[int, str, str, int]],
-    text_col: str = "text",
-    group_col: str = "lang",
-) -> DataFrame:
+def bpe_fertility(df: DataFrame, merges: list[tuple[int, str, str, int]]) -> DataFrame:
     """Pieces-per-word fertility of a learned BPE, per group: the corpus
     token stream joins the vocab-sized (word → n_pieces) table — a
     broadcast-friendly keyed join; the corpus never meets Python."""
     from ndr_import_spark.operators.textstats import tokens
 
     toks = df.select(
-        F.col(group_col).alias("grp"),
-        F.explode(tokens(F.col(text_col))).alias("word"),
+        F.col("lang").alias("grp"),
+        F.explode(tokens(F.col("text"))).alias("word"),
     )
     pieces = apply_bpe_to_vocab(
         toks.groupBy("word").agg(F.count(F.lit(1)).alias("freq")), merges
@@ -466,7 +460,7 @@ def bpe_fertility(
             F.sum("n_pieces").alias("n_pieces"),
         )
         .select(
-            F.col("grp").alias(group_col),
+            F.col("grp").alias("lang"),
             "n_words",
             "n_pieces",
             F.round(

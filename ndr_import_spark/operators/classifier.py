@@ -52,10 +52,8 @@ def sigmoid_quantised(margin: Column, wscale: int = LOGREG_WSCALE) -> Column:
 def train_logreg_lattice(
     feat_df: DataFrame,
     feature_cols: list[str],
-    label_col: str = "y",
     rounds: int = 4,
     lr: str = LOGREG_LR,
-    wscale: int = LOGREG_WSCALE,
 ) -> list[tuple[int, int, int]]:
     """Full-batch GD; returns the trajectory [(round, j, w_j)] for
     round = 1..rounds (post-update lattice weights)."""
@@ -72,14 +70,14 @@ def train_logreg_lattice(
     from pyspark import StorageLevel
 
     feat_df = feat_df.select(
-        *[F.col(c).cast("long").alias(c) for c in feature_cols], label_col
+        *[F.col(c).cast("long").alias(c) for c in feature_cols], "y"
     ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
     for r in range(1, rounds + 1):
         margin = None
         for j, c in enumerate(feature_cols):
             term = F.lit(w[j]) * F.col(c).cast("long")
             margin = term if margin is None else margin + term
-        resid = sigmoid_quantised(margin, wscale) - F.col(label_col).cast(
+        resid = sigmoid_quantised(margin, LOGREG_WSCALE) - F.col("y").cast(
             "decimal(8,6)"
         )
         aggs = [
@@ -100,7 +98,7 @@ LONGFORM_TOKENS = 55      # teacher label: n_tokens >= this
 LONGFORM_CENTERS = (38, 25, 3)   # chars div 8, distinct tokens, en stopwords
 
 
-def longform_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def longform_features(df: DataFrame) -> DataFrame:
     """Teacher-student distillation frame: the 'teacher' label is the
     token-count long-form rule (y = n_tokens ≥ 55); the student only
     sees cheap correlated proxies — centered char count (÷8), distinct
@@ -115,10 +113,10 @@ def longform_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
     c1, c2, c3 = LONGFORM_CENTERS
-    t = F.col(text_col)
+    t = F.col("text")
     return df.select(
         F.lit(1).alias("x0"),
-        (F.expr(f"length({text_col}) div 8") - F.lit(c1)).alias("x1"),
+        (F.expr("length(text) div 8") - F.lit(c1)).alias("x1"),
         (F.size(F.array_distinct(tokens(t))) - F.lit(c2)).alias("x2"),
         (stopword_count(t) - F.lit(c3)).alias("x3"),
         (token_count(t) >= LONGFORM_TOKENS).cast("int").alias("y"),
@@ -129,12 +127,7 @@ def trajectory_df(spark, traj: list[tuple[int, int, int]]) -> DataFrame:
     return local_frame(spark, traj, "round int, j int, w long")
 
 
-def logreg_oracle_sql(
-    rounds: int = 4,
-    lr: str = LOGREG_LR,
-    wscale: int = LOGREG_WSCALE,
-    table: str = "documents",
-) -> str:
+def logreg_oracle_sql(rounds: int = 4) -> str:
     """DuckDB transcription of longform_features + train_logreg_lattice,
     unrolled: one feature CTE, then per round a single-row gradient CTE
     and a single-row weight CTE. Stopword counts use the list-membership
@@ -151,7 +144,7 @@ def logreg_oracle_sql(
     c1, c2, c3 = LONGFORM_CENTERS
     d = 4
     parts = [f"""WITH t AS (
-  SELECT text, {toks} AS toks FROM {table}
+  SELECT text, {toks} AS toks FROM documents
 ), feat AS MATERIALIZED (
   SELECT 1 AS x0,
          length(text) // 8 - {c1} AS x1,
@@ -166,14 +159,14 @@ def logreg_oracle_sql(
             f"sum(resid * x{j}) AS g{j}" for j in range(d)
         )
         wsel = ", ".join(
-            f"w.w{j} - CAST(round(COALESCE(g.g{j}, 0) * {lr}, 0) AS BIGINT) "
+            f"w.w{j} - CAST(round(COALESCE(g.g{j}, 0) * {LOGREG_LR}, 0) AS BIGINT) "
             f"AS w{j}"
             for j in range(d)
         )
         parts.append(f""", g{k} AS MATERIALIZED (
   SELECT {gsel} FROM (
     SELECT CAST(round(1.0 / (1.0 + exp(-(CAST({margin} AS DOUBLE)
-                                         / {wscale}))), 6) AS DECIMAL(8,6))
+                                         / {LOGREG_WSCALE}))), 6) AS DECIMAL(8,6))
            - CAST(f.y AS DECIMAL(8,6)) AS resid,
            {", ".join(f"f.x{j}" for j in range(d))}
     FROM feat f, w{k} w) s

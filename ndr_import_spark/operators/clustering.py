@@ -38,21 +38,16 @@ from ndr_import_spark.sources.common import local_frame
 KMEANS_SCALE = 127
 
 
-def embedding_dims(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = KMEANS_SCALE,
-) -> DataFrame:
+def embedding_dims(df: DataFrame) -> DataFrame:
     """(id, d, q) long-form lattice quantization of an embedding column —
     posexplode + one codegen round; the frame every k-means step reuses."""
     return df.select(
-        F.col(id_col),
-        F.posexplode(F.col(vec_col)).alias("d", "_v"),
+        F.col("vec_id"),
+        F.posexplode(F.col("embedding")).alias("d", "_v"),
     ).select(
-        id_col,
+        "vec_id",
         "d",
-        F.round(F.col("_v").cast("double") * F.lit(float(scale)))
+        F.round(F.col("_v").cast("double") * F.lit(float(KMEANS_SCALE)))
         .cast("int")
         .alias("q"),
     )
@@ -120,17 +115,17 @@ def _assign_wide(
     )
 
 
-def argmin_chain(cids: list[int], prefix: str = "d"):
+def argmin_chain(cids: list[int]):
     """(best, chain) Column pair for the tie-broken argmin over the
-    ``{prefix}<cid>`` distance columns: ``best`` is the least distance,
+    ``d<cid>`` distance columns: ``best`` is the least distance,
     ``chain`` resolves to the SMALLEST cid attaining it. ONE definition —
     the batch assignment and the streaming router both compile through
     it, so their documented bit-parity is structural, not copy-paste."""
-    cols = [F.col(f"{prefix}{cid}") for cid in cids]
+    cols = [F.col(f"d{cid}") for cid in cids]
     best = F.least(*cols) if len(cols) > 1 else cols[0]
     chain = None
     for cid in cids:
-        cond = F.col(f"{prefix}{cid}") == best
+        cond = F.col(f"d{cid}") == best
         chain = (
             F.when(cond, F.lit(cid))
             if chain is None
@@ -382,31 +377,17 @@ def _centroid_rounds(
     return cent_rows
 
 
-def kmeans_centroids(
-    df: DataFrame,
-    k: int = 8,
-    iterations: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = KMEANS_SCALE,
-) -> DataFrame:
+def kmeans_centroids(df: DataFrame, k: int = 8, iterations: int = 3) -> DataFrame:
     """(cid, d, c) trained centroid frame — the standing table a batch
     job persists and `streaming.stream_cluster_assign` routes against.
     k·d rows; write it with a plain `.write.parquet` and reload it for
     the stream."""
-    qdf = embedding_qarr(df, id_col, vec_col, scale)
-    cent_rows = _centroid_rounds_np(qdf, k, iterations, id_col)
+    qdf = embedding_qarr(df, "vec_id", "embedding", KMEANS_SCALE)
+    cent_rows = _centroid_rounds_np(qdf, k, iterations, "vec_id")
     return local_frame(df.sparkSession, cent_rows, "cid int, d int, c long")
 
 
-def kmeans_lattice(
-    df: DataFrame,
-    k: int = 8,
-    iterations: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = KMEANS_SCALE,
-) -> DataFrame:
+def kmeans_lattice(df: DataFrame, k: int = 8, iterations: int = 3) -> DataFrame:
     """Lloyd's k-means on the integer lattice: init = the k smallest ids'
     vectors, `iterations` assign→update rounds, one final assignment.
     Returns (cluster, n_members, wcss, min_vec_id) per non-empty cluster.
@@ -414,14 +395,14 @@ def kmeans_lattice(
     r11 shape: the vectorized Arrow path — the final assignment is one
     matmul pass over (id, qarr) rows and the ONLY exchange in the output
     plan is the k-row groupBy(cluster)."""
-    qdf = embedding_qarr(df, id_col, vec_col, scale)
+    qdf = embedding_qarr(df, "vec_id", "embedding", KMEANS_SCALE)
     final = _assign_np(
-        qdf, _centroid_rounds_np(qdf, k, iterations, id_col), id_col
+        qdf, _centroid_rounds_np(qdf, k, iterations, "vec_id"), "vec_id"
     )
     return final.groupBy(F.col("cid").alias("cluster")).agg(
         F.count("*").alias("n_members"),
         F.sum("dist").alias("wcss"),
-        F.min(id_col).alias("min_vec_id"),
+        F.min("vec_id").alias("min_vec_id"),
     )
 
 
@@ -689,13 +670,11 @@ c{t} AS (
     return "".join(parts)
 
 
-def kmeans_oracle_sql(
-    k: int = 8, iterations: int = 3, scale: int = KMEANS_SCALE
-) -> str:
+def kmeans_oracle_sql(k: int = 8, iterations: int = 3) -> str:
     """DuckDB transcription of kmeans_lattice: the same lattice recurrence
     unrolled into CTEs c0..c{iterations} + a final assignment."""
     return (
-        _kmeans_ctes(k, iterations, scale)
+        _kmeans_ctes(k, iterations, KMEANS_SCALE)
         + f"""
 SELECT cid AS cluster, count(*) AS n_members,
        CAST(sum(dist) AS BIGINT) AS wcss, min(vec_id) AS min_vec_id
@@ -707,14 +686,13 @@ def semantic_dedup_oracle_sql(
     k: int = 8,
     iterations: int = 3,
     threshold_pct: int = 25,
-    scale: int = KMEANS_SCALE,
 ) -> str:
     """DuckDB transcription of semantic_dedup_pairs: the kmeans CTE chain
     + within-cluster integer-cosine pair selection."""
     p2 = threshold_pct * threshold_pct
     fin = f"a{iterations + 1}"
     return (
-        _kmeans_ctes(k, iterations, scale)
+        _kmeans_ctes(k, iterations, KMEANS_SCALE)
         + f""",
 tagged AS (
   SELECT a.cid, dm.vec_id, dm.d, dm.q
@@ -746,7 +724,6 @@ def semantic_dedup_capped_oracle_sql(
     k: int = 8,
     iterations: int = 3,
     threshold_pct: int = 25,
-    scale: int = KMEANS_SCALE,
     max_cluster_size: int = 60,
     n_bands: int = 4,
 ) -> str:
@@ -757,7 +734,7 @@ def semantic_dedup_capped_oracle_sql(
     p2 = threshold_pct * threshold_pct
     fin = f"a{iterations + 1}"
     return (
-        _kmeans_ctes(k, iterations, scale)
+        _kmeans_ctes(k, iterations, KMEANS_SCALE)
         + f""",
 tagged AS (
   SELECT a.cid, dm.vec_id, dm.d, dm.q

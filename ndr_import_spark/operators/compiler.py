@@ -305,21 +305,21 @@ def _fields_map(
     return F.map_filter(m, lambda k, v: v.isNotNull())
 
 
-def default_cell_fn(cells_col: str = "cells") -> CellFn:
+def default_cell_fn() -> CellFn:
     def fn(cm: ColumnMapping, idx: int) -> Column:
         # F.get, not [idx]: rows shorter than the mapping yield nil cells in
         # the reference (mapper.rb:94-99); GetArrayItem THROWS under Spark
         # 4's default ANSI mode
-        return F.get(F.col(cells_col), F.lit(idx))
+        return F.get(F.col("cells"), F.lit(idx))
     return fn
 
 
-def hash_cell_fn(cells_map_col: str = "cells_map") -> CellFn:
+def hash_cell_fn() -> CellFn:
     """Hash-shaped rows (AcroForm, JSONL): cells fetched by column name —
     order-free, mirroring pdf_form/table.rb:29-45."""
     def fn(cm: ColumnMapping, idx: int) -> Column:
         name = cm.column if isinstance(cm.column, str) else None
-        return F.element_at(F.col(cells_map_col), F.lit(name))
+        return F.element_at(F.col("cells_map"), F.lit(name))
     return fn
 
 

@@ -87,7 +87,6 @@ def ngram_decontaminate(
     eval_set: DataFrame,
     n: int = 5,
     text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Documents of `corpus` that share at least one word `n`-gram with any
     document of `eval_set` — the training/benchmark overlap
@@ -106,16 +105,16 @@ def ngram_decontaminate(
     Returns (doc_id) — distinct contaminated ids.
     """
     eval_grams = (
-        exploded_word_ngrams(eval_set, text_col, id_col, n)
+        exploded_word_ngrams(eval_set, text_col, "doc_id", n)
         .select(gram_key(F.col("_g")).alias("_gk"))
         .distinct()
     )
-    corpus_grams = exploded_word_ngrams(corpus, text_col, id_col, n).select(
-        id_col, gram_key(F.col("_g")).alias("_gk")
+    corpus_grams = exploded_word_ngrams(corpus, text_col, "doc_id", n).select(
+        "doc_id", gram_key(F.col("_g")).alias("_gk")
     )
     return (
         corpus_grams.join(F.broadcast(eval_grams), "_gk", "left_semi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
     )
 
@@ -136,21 +135,19 @@ _PII_PATTERNS: list[tuple[str, str]] = [
 ]
 
 
-def pii_scrub(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """Redact PII and report per-document counts.
 
     Returns (id, redacted, n_emails, n_phones, n_numbers) where counts are
     occurrences replaced per pattern class. Counting uses the same chained
     order as redaction (each count runs on the text AFTER the previous
     class was masked) so counts and output agree."""
-    stage = F.col(text_col)
+    stage = F.col("text")
     counts = []
     for (pat, repl), name in zip(_PII_PATTERNS, ("n_emails", "n_phones", "n_numbers")):
         counts.append(F.size(F.regexp_extract_all(stage, F.lit(pat), 0)).alias(name))
         stage = F.regexp_replace(stage, pat, repl)
-    return df.select(F.col(id_col), stage.alias("redacted"), *counts)
+    return df.select(F.col("doc_id"), stage.alias("redacted"), *counts)
 
 
 # ---------------------------------------------------------------------------
@@ -284,12 +281,7 @@ def chunk_documents(
 # ---------------------------------------------------------------------------
 
 
-def passage_dedup(
-    df: DataFrame,
-    passage_words: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def passage_dedup(df: DataFrame, passage_words: int = 32) -> DataFrame:
     """Cross-document EXACT passage dedup with keep-first semantics — the
     C4/RefinedWeb-style stage that strips boilerplate passages repeated
     across a crawl (navigation blocks, license footers) while keeping
@@ -310,19 +302,19 @@ def passage_dedup(
     Returns (doc_id, n_passages, n_kept, clean_md5) ordered by nothing —
     callers sort."""
     chunks = chunk_documents(
-        df, chunk_words=passage_words, overlap=0, text_col=text_col, id_col=id_col
+        df, chunk_words=passage_words, overlap=0, text_col="text", id_col="doc_id"
     )
     hashed = chunks.select(
-        id_col, "chunk_id", "chunk", F.md5(F.col("chunk")).alias("_h")
+        "doc_id", "chunk_id", "chunk", F.md5(F.col("chunk")).alias("_h")
     )
     first = hashed.groupBy("_h").agg(
         F.min(
-            F.struct(F.col(id_col).alias("d"), F.col("chunk_id").alias("c"))
+            F.struct(F.col("doc_id").alias("d"), F.col("chunk_id").alias("c"))
         ).alias("_k")
     )
     flagged = hashed.join(first, "_h").withColumn(
         "_keep",
-        (F.col(id_col) == F.col("_k.d")) & (F.col("chunk_id") == F.col("_k.c")),
+        (F.col("doc_id") == F.col("_k.d")) & (F.col("chunk_id") == F.col("_k.c")),
     )
     kept_structs = F.collect_list(
         F.when(F.col("_keep"), F.struct(F.col("chunk_id"), F.col("chunk")))
@@ -330,7 +322,7 @@ def passage_dedup(
     clean = F.concat_ws(
         " ", F.transform(F.array_sort(kept_structs), lambda s: s["chunk"])
     )
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_passages"),
         F.sum(F.when(F.col("_keep"), 1).otherwise(0)).alias("n_kept"),
         F.md5(clean).alias("clean_md5"),
@@ -342,12 +334,7 @@ def passage_dedup(
 # ---------------------------------------------------------------------------
 
 
-def duplicated_span_report(
-    df: DataFrame,
-    window_words: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def duplicated_span_report(df: DataFrame, window_words: int = 8) -> DataFrame:
     """Exact-substring duplication report — the window-granularity form of
     suffix-array substring dedup (Lee et al. 2022, "Deduplicating
     Training Data Makes Language Models Better"): find every
@@ -379,7 +366,7 @@ def duplicated_span_report(
     if w < 2:
         raise ValueError("window_words must be >= 2")
     toked = df.select(
-        F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_toks")
+        F.col("doc_id").alias("_id"), tokens(F.col("text")).alias("_toks")
     )
     n_words = F.size(F.col("_toks"))
     starts = F.sequence(F.lit(1), n_words - w + 1)
@@ -442,7 +429,7 @@ def duplicated_span_report(
     return (
         base.join(per_doc, "_id")
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             "n_words",
             "n_windows",
             "n_dup_windows",
@@ -459,12 +446,7 @@ def duplicated_span_report(
 # ---------------------------------------------------------------------------
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Top-`k` characteristic terms per document by TF-IDF
     (``tf * ln(N / df)``), ties broken on term ascending.
 
@@ -482,10 +464,10 @@ def tfidf_top_terms(
     Returns (doc_id, term, tf, df, score) with score rounded to 5dp.
     """
     toks = df.select(
-        F.col(id_col),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("term"),
+        F.col("doc_id"),
+        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("term"),
     ).filter(F.col("term") != "")
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.select(F.count(F.lit(1)).alias("_n"))
     scored = (
@@ -496,13 +478,13 @@ def tfidf_top_terms(
             F.round(F.col("tf") * F.log(F.col("_n") / F.col("df")), 5),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.desc("score"), F.col("term")
     )
     return (
         scored.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= k)
-        .select(id_col, "term", "tf", "df", "score")
+        .select("doc_id", "term", "tf", "df", "score")
     )
 
 
@@ -515,8 +497,6 @@ def deterministic_sample(
     df: DataFrame,
     fractions: dict[str, float],
     strata_col: str,
-    id_col: str = "doc_id",
-    salt: str = "sample",
     default_fraction: float = 0.0,
 ) -> DataFrame:
     """Deterministic per-stratum sampling — the data-mixing stage that
@@ -524,14 +504,15 @@ def deterministic_sample(
 
     A row is kept iff its 16-bit md5 bucket (same arithmetic as
     `hash_split`) is below ``fraction * 65536`` for its stratum. Unlike
-    `DataFrame.sample`, the decision depends only on (salt, id): stable
+    `DataFrame.sample`, the decision depends only on the id (salted
+    "sample", read from ``doc_id``): stable
     across runs, partitionings, cluster sizes, and corpus growth, and a
     document sampled at 0.25 is a subset of the same document set sampled
     at 0.5 (nested samples — the property mix experiments need).
     Narrow projection, no shuffle."""
     from ndr_import_spark.operators.packing import md5_bucket16
 
-    bucket = md5_bucket16(F.col(id_col), salt)
+    bucket = md5_bucket16(F.col("doc_id"), "sample")
     thresh = None
     for stratum, frac in fractions.items():
         cond = F.col(strata_col) == stratum
@@ -554,9 +535,8 @@ def hash_split(
     df: DataFrame,
     weights: dict[str, int],
     id_col: str = "doc_id",
-    salt: str = "split",
 ) -> DataFrame:
-    """Assign each row a stable split label by md5(salt:id) mod total
+    """Assign each row a stable split label by md5("split":id) mod total
     weight — reproducible on any engine/cluster size, immune to partition
     order (unlike `randomSplit`), and stable under corpus growth: a
     document keeps its split when other documents are added or removed.
@@ -571,7 +551,7 @@ def hash_split(
     from ndr_import_spark.operators.packing import md5_bucket16
 
     total = sum(weights.values())
-    bucket = md5_bucket16(F.col(id_col), salt) % total
+    bucket = md5_bucket16(F.col(id_col), "split") % total
     thresholds: list[tuple[int, str]] = []
     acc = 0
     for label, wt in weights.items():
@@ -650,12 +630,7 @@ def temperature_mix_weights(
 # ---------------------------------------------------------------------------
 
 
-def oov_rate(
-    df: DataFrame,
-    vocab_size: int,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def oov_rate(df: DataFrame, vocab_size: int) -> DataFrame:
     """Per-group out-of-vocabulary rate against the corpus-global
     top-`vocab_size` token vocabulary (ties broken on token ascending) —
     the tokenizer-coverage probe run before committing a vocab.
@@ -669,7 +644,7 @@ def oov_rate(
     from ndr_import_spark.operators.textstats import tokens
 
     toks = df.select(
-        F.col(group_col).alias("grp"), F.explode(tokens(F.col(text_col))).alias("tok")
+        F.col("source").alias("grp"), F.explode(tokens(F.col("text"))).alias("tok")
     )
     vocab = (
         toks.groupBy("tok")
@@ -692,8 +667,8 @@ def oov_rate(
             "oov_rate",
             F.round(F.col("n_oov").cast("double") / F.col("n_tokens"), 6),
         )
-        .withColumnRenamed("grp", group_col)
-        .orderBy(group_col)
+        .withColumnRenamed("grp", "source")
+        .orderBy("source")
     )
 
 
@@ -702,11 +677,7 @@ def oov_rate(
 # ---------------------------------------------------------------------------
 
 
-def unigram_surprisal(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def unigram_surprisal(df: DataFrame) -> DataFrame:
     """Per-document mean unigram surprisal (-mean ln p(token), nats) under
     the corpus's own unigram distribution — the cheap stand-in for the
     LM-perplexity quality filter (CCNet-style): boilerplate full of
@@ -725,7 +696,7 @@ def unigram_surprisal(
     """
     from ndr_import_spark.operators.textstats import tokens
 
-    toks = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("_t"))
+    toks = df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("_t"))
     counts = toks.groupBy("_t").agg(F.count(F.lit(1)).alias("_n"))
     total = counts.agg(F.sum("_n").alias("_total"))
     lnp = (
@@ -742,13 +713,13 @@ def unigram_surprisal(
     )
     per_doc = (
         toks.join(lnp, "_t")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum("_nlp").alias("_s"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             F.round(
                 F.col("_s").cast("double") / F.col("n_tokens").cast("double"), 6
@@ -763,10 +734,10 @@ def unigram_surprisal(
     )
     # empty documents never appear in `toks`; restore them at 0.0
     empties = (
-        df.select(F.col(id_col))
-        .join(per_doc.select(id_col), id_col, "left_anti")
+        df.select(F.col("doc_id"))
+        .join(per_doc.select("doc_id"), "doc_id", "left_anti")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.lit(0).cast("bigint").alias("n_tokens"),
             F.lit(0.0).alias("surprisal"),
         )
@@ -779,12 +750,7 @@ def unigram_surprisal(
 # ---------------------------------------------------------------------------
 
 
-def pmi_collocations(
-    df: DataFrame,
-    text_col: str = "text",
-    min_count: int = 5,
-    k: int = 50,
-) -> DataFrame:
+def pmi_collocations(df: DataFrame, min_count: int = 5, k: int = 50) -> DataFrame:
     """Top-`k` adjacent-word collocations by pointwise mutual information
     — the phrase-mining pass that feeds tokenizer vocabulary building and
     word2phrase-style phrase merging.
@@ -806,7 +772,7 @@ def pmi_collocations(
 
     # codegen tokenizer (textstats.tokens — bit-identical to the old
     # filter-lambda form, pinned by test_textstats_codegen.py)
-    toks = df.select(_tokens(F.col(text_col)).alias("_ts"))
+    toks = df.select(_tokens(F.col("text")).alias("_ts"))
     exploded = toks.select(F.explode(F.col("_ts")).alias("_w"))
     uni = exploded.groupBy("_w").agg(F.count(F.lit(1)).alias("_nu"))
     total_uni = uni.agg(F.sum("_nu").alias("_tu"))
@@ -858,8 +824,6 @@ def decontaminate_report(
     corpus: DataFrame,
     eval_set: DataFrame,
     n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Contamination PROVENANCE: for each contaminated corpus document,
     how many eval documents it overlaps, how many distinct shared
@@ -874,18 +838,18 @@ def decontaminate_report(
     per-document aggregate. Distinct counts run on the compact md5 keys.
     """
     eval_grams = (
-        exploded_word_ngrams(eval_set, text_col, id_col, n)
+        exploded_word_ngrams(eval_set, "text", "doc_id", n)
         .select(
-            F.col(id_col).alias("_eid"), gram_key(F.col("_g")).alias("_gk")
+            F.col("doc_id").alias("_eid"), gram_key(F.col("_g")).alias("_gk")
         )
         .distinct()
     )
-    corpus_grams = exploded_word_ngrams(corpus, text_col, id_col, n).select(
-        id_col, gram_key(F.col("_g")).alias("_gk")
+    corpus_grams = exploded_word_ngrams(corpus, "text", "doc_id", n).select(
+        "doc_id", gram_key(F.col("_g")).alias("_gk")
     )
     matched = corpus_grams.join(F.broadcast(eval_grams), "_gk")
     return (
-        matched.groupBy(id_col)
+        matched.groupBy("doc_id")
         .agg(
             F.countDistinct("_eid").alias("n_eval_docs"),
             F.countDistinct("_gk").alias("n_shared_grams"),
@@ -899,9 +863,7 @@ def decontaminate_report(
 # ---------------------------------------------------------------------------
 
 
-def corpus_card(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def corpus_card(df: DataFrame) -> DataFrame:
     """One-pass dataset card: the headline numbers a corpus release
     publishes — document/token/char volume, language and source
     cardinalities, exact-duplicate surplus, and empty-document count —
@@ -915,9 +877,9 @@ def corpus_card(
 
     # NULL text counts as an empty document (otherwise NULL hashes fall
     # out of countDistinct and fabricate phantom duplicate surplus)
-    txt = F.coalesce(F.col(text_col), F.lit(""))
+    txt = F.coalesce(F.col("text"), F.lit(""))
     per_doc = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("lang"),
         F.col("source"),
         token_count(txt).alias("_nt"),
@@ -965,11 +927,7 @@ def corpus_card(
     return rows.orderBy("metric")
 
 
-def vocab_coverage_curve(
-    df: DataFrame,
-    ks: list[int] | None = None,
-    text_col: str = "text",
-) -> DataFrame:
+def vocab_coverage_curve(df: DataFrame, ks: list[int] | None = None) -> DataFrame:
     """(k, n_words, coverage): share of the corpus token stream covered by
     the top-k vocabulary (freq desc, word asc) at each probe size — the
     curve that sizes a tokenizer's vocab (Zipfian corpora: ~1k words ≈
@@ -989,7 +947,7 @@ def vocab_coverage_curve(
     if ks is None:
         ks = [1, 4, 16, 64, 256, 1024, 4096, 16384]
     vocab = (
-        df.select(F.explode(tokens(F.col(text_col))).alias("word"))
+        df.select(F.explode(tokens(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -1034,18 +992,9 @@ def vocab_coverage_curve(
     )
 
 
-def split_leakage_report(
-    df: DataFrame,
-    weights: dict[str, int] | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    k: int = 16,
-    bands: int = 4,
-    shingle_n: int = 5,
-) -> DataFrame:
+def split_leakage_report(df: DataFrame) -> DataFrame:
     """(split_a, split_b, n_pairs, max_jaccard): near-duplicate pairs that
-    straddle train/val/test splits — the leakage check an eval pipeline
+    straddle 8:1:1 train/val/test splits — the leakage check an eval pipeline
     runs after splitting (Lee et al. 2022 showed dedup-unaware splits
     inflate eval scores; this reports exactly those pairs).
 
@@ -1064,26 +1013,24 @@ def split_leakage_report(
     shuffle stage upstream of the input under AQE."""
     from ndr_import_spark.operators.dedup import minhash_lsh_pairs
 
-    if weights is None:
-        weights = {"train": 8, "val": 1, "test": 1}
     # both pair endpoints join the SAME label frame; un-barriered, each
     # side replans the md5-bucket subtree and its corpus scan (r12:
     # split_leakage's initial plan carried 11 scans / 36 Exchanges).
     # Narrow (id, split) rows — materialise once.
     labels = (
-        hash_split(df, weights, id_col)
-        .select(id_col, "split")
+        hash_split(df, {"train": 8, "val": 1, "test": 1}, "doc_id")
+        .select("doc_id", "split")
         .localCheckpoint(eager=False)
     )
     pairs = minhash_lsh_pairs(
-        df, text_col, id_col, k=k, bands=bands,
-        verify_threshold=threshold, shingle_n=shingle_n,
+        df, "text", "doc_id", k=16, bands=4,
+        verify_threshold=0.5, shingle_n=5,
     )
     a = labels.select(
-        F.col(id_col).alias("id_a"), F.col("split").alias("_sa")
+        F.col("doc_id").alias("id_a"), F.col("split").alias("_sa")
     )
     b = labels.select(
-        F.col(id_col).alias("id_b"), F.col("split").alias("_sb")
+        F.col("doc_id").alias("id_b"), F.col("split").alias("_sb")
     )
     return (
         pairs.join(a, "id_a")
@@ -1301,21 +1248,13 @@ def c4_clean(
     )
 
 
-def dsir_resample(
-    raw: DataFrame,
-    target: DataFrame,
-    k: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    buckets: int = 1024,
-    salt: str = "dsir",
-) -> DataFrame:
+def dsir_resample(raw: DataFrame, target: DataFrame, k: int) -> DataFrame:
     """Data Selection with Importance Resampling (Xie et al. 2023,
     NeurIPS — DSIR): select `k` documents from the `raw` pool whose
     hashed-n-gram distribution looks like the `target` domain.
 
     1. featurize: unigrams + bigrams hash (60-bit md5 long) into
-       `buckets` buckets — the paper's hashed n-gram features;
+       1024 buckets — the paper's hashed n-gram features;
     2. importance weights: per-bucket log-likelihood ratio of the
        add-one-smoothed target vs raw bucket distributions,
        llr_b = ln( (cp_b+1)(Nq+m) / ((cq_b+1)(Np+m)) ), a per-doc
@@ -1323,7 +1262,7 @@ def dsir_resample(
     3. Gumbel top-k: sampling without replacement proportional to the
        importance weights via key = log_w + Gumbel(0,1), with the Gumbel
        drawn DETERMINISTICALLY from the canonical 16-bit md5 bucket of
-       (salt, doc id) — reproducible across engines and runs.
+       ("dsir", doc id) — reproducible across engines and runs.
 
     Float discipline (the surprisal/perplexity pattern): each llr and
     each Gumbel is ONE double division + one ln, rounded to 9 dp and
@@ -1335,7 +1274,7 @@ def dsir_resample(
     replica needs the single-division form).
 
     Plan shape at 100 TB: featurization is per-row codegen explode; both
-    distributions aggregate to `buckets` rows (a BOUNDED frame — the
+    distributions aggregate to 1024 rows (a BOUNDED frame — the
     llr table broadcasts by construction); the per-doc score is one
     combinable groupBy(doc); the top-k is TakeOrderedAndProject (limit
     pushes into the sort — no global materialised sort). Docs with no
@@ -1345,15 +1284,15 @@ def dsir_resample(
     from ndr_import_spark.operators.packing import md5_bucket16
 
     scores = dsir_log_weights(
-        raw, target, text_col=text_col, id_col=id_col, buckets=buckets
+        raw, target, text_col="text", id_col="doc_id", buckets=1024
     )
-    u = (md5_bucket16(F.col("_id"), salt) + F.lit(0.5)) / F.lit(65536.0)
+    u = (md5_bucket16(F.col("_id"), "dsir") + F.lit(0.5)) / F.lit(65536.0)
     key = (
         F.col("log_weight")
         + F.round(-F.log(-F.log(u)), 9).cast("decimal(20,9)")
     ).alias("gumbel_key")
     picked = (
-        scores.select(F.col(id_col).alias("_id"), "log_weight")
+        scores.select(F.col("doc_id").alias("_id"), "log_weight")
         .select("_id", "log_weight", key)
         .orderBy(F.col("gumbel_key").desc(), F.col("_id"))
         .limit(int(k))
@@ -1361,7 +1300,7 @@ def dsir_resample(
     w = Window.orderBy(F.col("gumbel_key").desc(), F.col("_id"))
     return picked.select(
         F.row_number().over(w).alias("rank"),
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         "log_weight",
         "gumbel_key",
     )
@@ -1523,8 +1462,6 @@ def c4_clean_stateless(
 
 def train_zstd_dictionary(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_len: int = 16,
     stride: int = 8,
     k: int = 64,
@@ -1555,13 +1492,13 @@ def train_zstd_dictionary(
     L, S = int(shingle_len), int(stride)
     if L < 1 or S < 1:
         raise ValueError("shingle_len and stride must be >= 1")
-    eligible = df.where(F.length(F.col(text_col)) >= L)
-    n_sh = F.floor((F.length(F.col(text_col)) - L) / S).cast("int")
+    eligible = df.where(F.length(F.col("text")) >= L)
+    n_sh = F.floor((F.length(F.col("text")) - L) / S).cast("int")
     shingles = eligible.select(
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), n_sh),
-                lambda i: F.col(text_col).substr(i * S + 1, F.lit(L)),
+                lambda i: F.col("text").substr(i * S + 1, F.lit(L)),
             )
         ).alias("s")
     )
@@ -1620,12 +1557,7 @@ def _drift_token_counts(
     return full, vocab, cnt
 
 
-def source_lexical_divergence(
-    df: DataFrame,
-    text_col: str = "text",
-    source_col: str = "source",
-    vocab_k: int = 200,
-) -> DataFrame:
+def source_lexical_divergence(df: DataFrame, vocab_k: int = 200) -> DataFrame:
     """Pairwise Jensen-Shannon divergence (bits) between per-source
     unigram distributions over the corpus-wide top-`vocab_k` vocabulary
     — the lexical drift map that flags sources crawling the same
@@ -1647,11 +1579,11 @@ def source_lexical_divergence(
     densify and pairwise join are sources² x V — bounded frames that
     never touch the corpus again."""
     V = int(vocab_k)
-    full, vocab, cnt = _drift_token_counts(df, text_col, source_col, V)
+    full, vocab, cnt = _drift_token_counts(df, "text", "source", V)
     # from the table, NOT from `full`: a source whose documents tokenise
     # to nothing must still appear in the drift map (oracle semantics);
     # this is a column-pruned one-column scan, not a tokenising pass
-    srcs = df.select(F.col(source_col).alias("_src")).distinct()
+    srcs = df.select(F.col("source").alias("_src")).distinct()
     dense = (
         srcs.crossJoin(F.broadcast(vocab))
         .join(cnt, ["_src", "_w"], "left")

@@ -124,16 +124,14 @@ def canonicalize_urls(
     )
 
 
-def url_dedup(
-    df: DataFrame, id_col: str = "doc_id", url_col: str = "url"
-) -> DataFrame:
+def url_dedup(df: DataFrame) -> DataFrame:
     """(url_canon, n_variants, kept_id) — exact dedup on the canonical
     URL, keeping the smallest id per group (deterministic keep-first).
     Combinable min/count aggregates; one shuffle on the canonical key."""
-    canon = canonicalize_urls(df, id_col, url_col)
+    canon = canonicalize_urls(df, "doc_id", "url")
     return canon.groupBy("url_canon").agg(
         F.count("*").alias("n_variants"),
-        F.min(id_col).alias("kept_id"),
+        F.min("doc_id").alias("kept_id"),
     )
 
 
@@ -222,9 +220,6 @@ def parse_robots_rules(
 def robots_filter(
     docs: DataFrame,
     robots: DataFrame,
-    uri_col: str = "target_uri",
-    host_col: str = "host",
-    body_col: str = "robots_txt",
     user_agent: str = "*",
 ) -> DataFrame:
     """Drop documents whose URL path the host's robots.txt disallows for
@@ -239,9 +234,9 @@ def robots_filter(
     (map-side combinable). The corpus itself is then filtered by a
     LEFT SEMI join on (host, path) — duplicate documents survive intact
     and no corpus-wide window or row-collapsing groupBy exists."""
-    rules = parse_robots_rules(robots, host_col, body_col, user_agent)
-    keyed = docs.withColumn("_host", url_host(F.col(uri_col))).withColumn(
-        "_path", url_path(F.col(uri_col))
+    rules = parse_robots_rules(robots, "host", "robots_txt", user_agent)
+    keyed = docs.withColumn("_host", url_host(F.col("target_uri"))).withColumn(
+        "_path", url_path(F.col("target_uri"))
     )
     pairs = keyed.select("_host", "_path").distinct()
     decided = (
@@ -273,17 +268,15 @@ def robots_filter(
     )
 
 
-def per_domain_stats(
-    docs: DataFrame, uri_col: str = "target_uri", text_col: str = "text"
-) -> DataFrame:
+def per_domain_stats(docs: DataFrame) -> DataFrame:
     """(host, n_docs, total_chars, avg_chars) — the crawl-balance profile
     run before per-source caps. One combinable aggregate on the host key
     (AQE handles the mega-domain skew; `per_source_cap` is the follow-up
     stage for actually capping)."""
     return (
         docs.select(
-            url_host(F.col(uri_col)).alias("host"),
-            F.length(F.col(text_col)).alias("_n"),
+            url_host(F.col("target_uri")).alias("host"),
+            F.length(F.col("text")).alias("_n"),
         )
         .groupBy("host")
         .agg(
@@ -302,12 +295,7 @@ def per_domain_stats(
 _A_TAG_RE = r"(?is)<a\s([^>]*)>(.*?)</a>"
 
 
-def extract_links(
-    df: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def extract_links(df: DataFrame) -> DataFrame:
     """Outlink extraction for crawled HTML → one row per <a href> with
     (src_host, href, anchor, nofollow, dst_url, dst_host).
 
@@ -326,16 +314,16 @@ def extract_links(
     map-side-combinable aggregate) and onward to pagerank/hits over
     hosts — the crawl story end-to-end: warc_extract → extract_links →
     host_link_graph → graph algorithms."""
-    html = F.col(html_col)
+    html = F.col("html")
     attrs = F.regexp_extract_all(html, F.lit(_A_TAG_RE), F.lit(1))
     texts = F.regexp_extract_all(html, F.lit(_A_TAG_RE), F.lit(2))
-    base = F.col(url_col)
+    base = F.col("url")
     scheme = F.lower(F.regexp_extract(base, r"^([a-zA-Z][a-zA-Z0-9+.-]*)://", 1))
     host = url_host(base)
     bdir = F.regexp_replace(url_path(base), r"[^/]*$", "")
 
     pairs = df.select(
-        F.col(id_col).alias("src_id"),
+        F.col("doc_id").alias("src_id"),
         scheme.alias("_scheme"),
         host.alias("src_host"),
         bdir.alias("_dir"),
@@ -507,11 +495,7 @@ def crawl_frontier(
     )
 
 
-def parse_sitemaps(
-    df: DataFrame,
-    xml_col: str = "sitemap_xml",
-    host_col: str = "host",
-) -> DataFrame:
+def parse_sitemaps(df: DataFrame) -> DataFrame:
     """Sitemap ingestion (sitemaps.org protocol) — the frontier-seeding
     companion to robots_filter: explode <urlset> bodies into (host,
     kind='url', loc, lastmod, priority) rows and <sitemapindex> bodies
@@ -526,7 +510,7 @@ def parse_sitemaps(
     sitemaps keep their locs and get NULLs rather than misaligned
     metadata. Per-row codegen throughout; no shuffle at all."""
     def xp(expr: str) -> Column:
-        return F.expr(f'xpath({xml_col}, "{expr}")')
+        return F.expr(f'xpath(sitemap_xml, "{expr}")')
 
     url_locs = xp("//*[local-name()='urlset']/*[local-name()='url']"
                   "/*[local-name()='loc']/text()")
@@ -545,7 +529,7 @@ def parse_sitemaps(
     )
     urls = (
         df.select(
-            F.col(host_col).alias("host"),
+            F.col("host"),
             F.explode(F.arrays_zip(
                 url_locs.alias("loc"),
                 lastmods.alias("lastmod"),
@@ -561,7 +545,7 @@ def parse_sitemaps(
         )
     )
     children = df.select(
-        F.col(host_col).alias("host"),
+        F.col("host"),
         F.lit("index").alias("kind"),
         F.explode(idx_locs).alias("loc"),
         F.lit(None).cast("string").alias("lastmod"),

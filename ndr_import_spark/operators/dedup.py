@@ -34,17 +34,15 @@ __all_reexports__ = ["md5_long"]  # canonical definition lives in textstats
 # exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_duplicate_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_duplicate_groups(df: DataFrame) -> DataFrame:
     """Hash-groupBy exact dedup over normalised text.
 
     Returns (content_hash, n_docs, canonical_id) for groups with n>1."""
-    h = F.md5(normalize_text(F.col(text_col))).alias("content_hash")
+    h = F.md5(normalize_text(F.col("text"))).alias("content_hash")
     return (
-        df.select(h, F.col(id_col))
+        df.select(h, F.col("doc_id"))
         .groupBy("content_hash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("canonical_id"))
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("canonical_id"))
         .filter(F.col("n_docs") > 1)
     )
 
@@ -553,8 +551,8 @@ def minhash_lsh_pairs(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash(text: Column, bits: int = 16) -> Column:
-    """`bits`-bit SimHash over word tokens (md5-derived bit planes).
+def simhash(text: Column) -> Column:
+    """16-bit SimHash over word tokens (md5-derived bit planes).
 
     bit j of the signature = sign of Σ_tokens (±1 by bit j of token hash).
     16 bits keeps the per-row cost at one hash per token (bit-tested 16×)
@@ -562,10 +560,10 @@ def simhash(text: Column, bits: int = 16) -> Column:
     """
     toks = F.filter(F.split(normalize_text(text), " "), lambda t: t != F.lit(""))
     th = F.transform(toks, lambda t: md5_long(t))
-    masks = F.array(*[F.lit(1 << j).cast("long") for j in range(bits)])
-    zeros = F.array(*[F.lit(0)] * bits)
+    masks = F.array(*[F.lit(1 << j).cast("long") for j in range(16)])
+    zeros = F.array(*[F.lit(0)] * 16)
     # ONE aggregate pass: per token, vote ±1 on every bit plane (separate
-    # per-bit aggregates would re-run the md5 token pass `bits` times)
+    # per-bit aggregates would re-run the md5 token pass 16 times)
     votes = F.aggregate(
         th,
         zeros,
@@ -635,12 +633,10 @@ def simhash_frame(
     )
 
 
-def simhash_duplicate_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16
-) -> DataFrame:
+def simhash_duplicate_groups(df: DataFrame, bits: int = 16) -> DataFrame:
     """Docs sharing an identical SimHash signature (coarse near-dup)."""
     return (
-        simhash_frame(df, text_col, id_col, bits)
+        simhash_frame(df, "text", "doc_id", bits)
         .select(F.col("_sig").alias("simhash"), F.col("_id"))
         .groupBy("simhash")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min("_id").alias("canonical_id"))
@@ -650,9 +646,6 @@ def simhash_duplicate_groups(
 
 def simhash_hamming_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 48,
     bands: int = 4,
     max_distance: int = 3,
 ) -> DataFrame:
@@ -660,7 +653,7 @@ def simhash_hamming_pairs(
     signature-space complement of MinHash (captures token-frequency
     similarity rather than set overlap).
 
-    The `bits`-bit signature splits into `bands` equal slices; candidate
+    The 48-bit signature splits into `bands` equal slices; candidate
     pairs share at least one exact slice (pigeonhole: any pair with
     Hamming distance < `bands` MUST agree on some slice, so recall is
     exact for ``max_distance <= bands - 1``; keep that inequality when
@@ -671,7 +664,7 @@ def simhash_hamming_pairs(
 
     SCALE — slice width is the load-bearing knob: random docs collide on
     a slice with p = 2^-width, so expected candidate volume is
-    ``bands * n² / 2^width / 2``. The 48/4 default (12-bit slices, 4096
+    ``bands * n² / 2^width / 2``. The 48/4 shape (12-bit slices, 4096
     keys) replaced 32/4 (8-bit, 256 keys) after an sf1 (50k-doc) run
     TIMED OUT: 256 buckets of ~200 docs went quadratic (~19M candidate
     pairs). Grow width ~log2(n) as the corpus grows (64/4 once int64
@@ -684,12 +677,12 @@ def simhash_hamming_pairs(
             f"banded recall is exact only for max_distance <= bands - 1 "
             f"(got distance {max_distance}, bands {bands})"
         )
-    width = bits // bands
+    width = 48 // bands
     mask = (1 << width) - 1
     scope = _CacheScope()
     # aggregate-backed signature frame: the groupBy is itself the barrier
     # that stops the per-band plan references recomputing the signature
-    base = scope.persist(simhash_frame(df, text_col, id_col, bits))
+    base = scope.persist(simhash_frame(df, "text", "doc_id", 48))
     band_structs = F.array(*[
         F.struct(
             F.lit(b).alias("band"),
@@ -898,6 +891,12 @@ def _star_components(
 # whatever the input size. Sized to a default driver's memory, not to the
 # data: it is not a parameter.
 LOCAL_CC_MAX_EDGES = 1_000_000
+
+# MinHash signature length and char-shingle width of the stored near-dup
+# index, its batch and stream probes, and the LSH quality report; the
+# index's params row records them so a probe can check them.
+INDEX_K = 16
+INDEX_SHINGLE_N = 5
 
 
 def _min_label_union_find(pairs) -> list[tuple]:
@@ -1124,9 +1123,6 @@ def _min_label_propagation(
 def embedding_neardup_drops(
     docs: DataFrame,
     embeddings: DataFrame,
-    doc_id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     planes: int = 8,
     threshold: float = 0.25,
@@ -1147,19 +1143,19 @@ def embedding_neardup_drops(
     """
     from ndr_import_spark.operators.similarity import lsh_bucket_candidates
 
-    vecs = docs.select(doc_id_col).join(
+    vecs = docs.select("doc_id").join(
         embeddings.select(
-            F.col(vec_id_col).alias(doc_id_col),
-            F.col(vec_col).cast("array<double>").alias("_v"),
+            F.col("vec_id").alias("doc_id"),
+            F.col("embedding").cast("array<double>").alias("_v"),
         ),
-        doc_id_col,
+        "doc_id",
     )
     pairs = lsh_bucket_candidates(
-        vecs, dim=dim, planes=planes, vec_col="_v", id_col=doc_id_col,
+        vecs, dim=dim, planes=planes, vec_col="_v", id_col="doc_id",
         threshold=threshold,
     )
     return (
-        pairs.groupBy(F.col("id_b").alias(doc_id_col))
+        pairs.groupBy(F.col("id_b").alias("doc_id"))
         .agg(
             F.min("id_a").alias("keep_id"),
             F.count(F.lit(1)).alias("n_dups"),
@@ -1263,12 +1259,7 @@ def incremental_neardup_pairs(
     )
 
 
-def drop_exact_duplicates_by_quality(
-    df: DataFrame,
-    score: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def drop_exact_duplicates_by_quality(df: DataFrame, score: Column) -> DataFrame:
     """Exact dedup keeping each content group's HIGHEST-`score` member
     (ties broken on ascending id) — the production election rule: when a
     crawl yields the same text from several sources, keep the copy whose
@@ -1280,31 +1271,23 @@ def drop_exact_duplicates_by_quality(
     window, no per-group sort, no skew funnel (a billion-copy boilerplate
     group still reduces via partial aggregates). The rounded score makes
     the election engine-deterministic."""
-    h = F.md5(normalize_text(F.col(text_col)))
+    h = F.md5(normalize_text(F.col("text")))
     w = df.select("*", h.alias("_h"), F.round(score, 9).alias("_q"))
     keep = (
         w.groupBy("_h")
         .agg(
             F.max(
                 F.struct(
-                    F.col("_q").alias("q"), (-F.col(id_col)).alias("neg_id")
+                    F.col("_q").alias("q"), (-F.col("doc_id")).alias("neg_id")
                 )
             ).alias("_top")
         )
-        .select("_h", (-F.col("_top.neg_id")).cast("long").alias(id_col))
+        .select("_h", (-F.col("_top.neg_id")).cast("long").alias("doc_id"))
     )
-    return w.join(keep, ["_h", id_col], "inner").drop("_h", "_q")
+    return w.join(keep, ["_h", "doc_id"], "inner").drop("_h", "_q")
 
 
-def write_neardup_index(
-    df: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-    bands: int = 4,
-    shingle_n: int = 5,
-) -> None:
+def write_neardup_index(df: DataFrame, path: str, bands: int = 4) -> None:
     """Materialise the near-dup probe index to parquet: `<path>/bands`
     holds the (band, key, _id) rows partitioned by band, `<path>/sets`
     the (_id, _hs) hashed shingle sets. This is the artifact that makes
@@ -1317,8 +1300,8 @@ def write_neardup_index(
     `_shingle_base`, whose partition-count probe executes every shuffle
     stage upstream of the input under AQE."""
     hashed = _hashed_sig_frame(
-        _char_shingle_rows(_shingle_base(df, text_col, id_col), shingle_n),
-        k,
+        _char_shingle_rows(_shingle_base(df, "text", "doc_id"), INDEX_SHINGLE_N),
+        INDEX_K,
         "mh",
     ).select("_id", "_hs")  # artifact schema: sets persist (_id, _hs) only
     # sets first: bands re-derives from the written sets so the shingle
@@ -1326,14 +1309,14 @@ def write_neardup_index(
     hashed.write.mode("overwrite").parquet(f"{path}/sets")
     spark = df.sparkSession
     stored = spark.read.parquet(f"{path}/sets")
-    _band_keys(stored, k, bands, "mh").write.mode("overwrite").partitionBy(
+    _band_keys(stored, INDEX_K, bands, "mh").write.mode("overwrite").partitionBy(
         "band"
     ).parquet(f"{path}/bands")
     # 1-row params artifact: probing with different constants would
     # silently match nothing — make the mismatch loud at probe time
     local_frame(
         spark,
-        [(k, bands, shingle_n, "mh")],
+        [(INDEX_K, bands, INDEX_SHINGLE_N, "mh")],
         "k int, bands int, shingle_n int, salt string",
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params")
 
@@ -1356,12 +1339,8 @@ def _check_index_params(spark, path: str, k: int, bands: int, shingle_n: int) ->
 def probe_neardup_index(
     new: DataFrame,
     index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
     bands: int = 4,
     verify_threshold: float | None = 0.5,
-    shingle_n: int = 5,
 ) -> DataFrame:
     """Probe a stored `write_neardup_index` artifact with a new batch:
     identical semantics to `incremental_neardup_pairs(old, new)` but the
@@ -1373,18 +1352,18 @@ def probe_neardup_index(
     `_shingle_base`, whose partition-count probe executes every shuffle
     stage upstream of the input under AQE."""
     spark = new.sparkSession
-    _check_index_params(spark, index_path, k, bands, shingle_n)
+    _check_index_params(spark, index_path, INDEX_K, bands, INDEX_SHINGLE_N)
     old_banded = spark.read.parquet(f"{index_path}/bands")
     old_sets = spark.read.parquet(f"{index_path}/sets")
     scope = _CacheScope()
     new_hashed = scope.persist(
         _hashed_sig_frame(
-            _char_shingle_rows(_shingle_base(new, text_col, id_col), shingle_n),
-            k,
+            _char_shingle_rows(_shingle_base(new, "text", "doc_id"), INDEX_SHINGLE_N),
+            INDEX_K,
             "mh",
         )
     )
-    new_banded = _band_keys(new_hashed, k, bands, "mh")
+    new_banded = _band_keys(new_hashed, INDEX_K, bands, "mh")
     pairs = (
         new_banded.alias("l")
         .join(old_banded.alias("r"), ["band", "key"])
@@ -1398,18 +1377,10 @@ def probe_neardup_index(
     )
 
 
-def lsh_quality_report(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sample_max_id: int = 300,
-    threshold: float = 0.5,
-    k: int = 16,
-    bands: int = 4,
-    shingle_n: int = 5,
-) -> DataFrame:
+def lsh_quality_report(df: DataFrame, sample_max_id: int = 300) -> DataFrame:
     """(metric, value): recall/precision of the banded MinHash candidate
-    generator against exact-Jaccard ground truth on a BOUNDED sample —
+    generator (k = INDEX_K, 4 bands, Jaccard threshold 0.5) against
+    exact-Jaccard ground truth on a BOUNDED sample —
     the parameter-validation step you run before trusting (k, bands) on
     the full corpus (Leskovec et al. MMDS ch. 3 S-curve, public).
 
@@ -1427,11 +1398,11 @@ def lsh_quality_report(
     Runs Spark jobs while the DataFrame is built: it goes through
     `_shingle_base`, whose partition-count probe executes every shuffle
     stage upstream of the input under AQE."""
-    sample = df.filter(F.col(id_col) < sample_max_id)
-    base = _shingle_base(sample, text_col, id_col)
+    sample = df.filter(F.col("doc_id") < sample_max_id)
+    base = _shingle_base(sample, "text", "doc_id")
     scope = _CacheScope()
     hashed = scope.persist(
-        _hashed_sig_frame(_char_shingle_rows(base, shingle_n), k, "mh")
+        _hashed_sig_frame(_char_shingle_rows(base, INDEX_SHINGLE_N), INDEX_K, "mh")
     )
     ids = hashed.select("_id")
     allp = (
@@ -1445,9 +1416,9 @@ def lsh_quality_report(
     # steady run). Both frames are pair-id-sized; one lazy checkpoint
     # each runs the expensive verify exactly once.
     truth = _verify_jaccard(
-        allp, hashed, hashed, "id_a", "id_b", threshold
+        allp, hashed, hashed, "id_a", "id_b", 0.5
     ).localCheckpoint(eager=False)
-    banded = _band_keys(hashed, k, bands, "mh")
+    banded = _band_keys(hashed, INDEX_K, 4, "mh")
     cand = (
         banded.alias("l")
         .join(banded.alias("r"), ["band", "key"])

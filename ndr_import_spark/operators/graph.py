@@ -8,7 +8,7 @@ papers). The reference repo (`lib/ndr_import`) has no graph operators.
 Design notes for 100 TB:
 
 * **Integer fixed-point arithmetic.** Scores are BIGINTs scaled by
-  ``scale`` (default 10^12); every step is integer multiply / integer
+  ``PAGERANK_SCALE`` (10^12); every step is integer multiply / integer
   division on non-negative values, so the result is bit-identical across
   engines, partitionings, and re-runs — no floating-point reduction-order
   drift, which matters when a re-run of a 1000-executor job must
@@ -19,8 +19,7 @@ Design notes for 100 TB:
   aggregation) → left join back onto the node set. The ``edges``
   subplan is identical across iterations, so Catalyst's
   ``ReusedExchange`` dedupes the edge shuffle; scores shuffle once per
-  iteration on a (id, int64) pair — 16 bytes/row. For very deep
-  iteration counts, pass ``checkpoint_every`` to truncate lineage.
+  iteration on a (id, int64) pair — 16 bytes/row.
 * **Dangling mass.** Nodes without out-links simply contribute nothing
   (their rank leaks to the teleport term); nodes without in-links get
   the teleport floor via the left join + ``coalesce(0)``.
@@ -34,44 +33,37 @@ from pyspark.sql import functions as F
 PAGERANK_SCALE = 10**12
 PAGERANK_DAMPING_PCT = 85  # d = 0.85 as an integer percentage
 LINK_STRIDE = 7919  # 1000th prime; arbitrary fixed stride
+OUT_DEGREE = 3  # links per synthetic node, shared with the oracles
 
 
-def synthetic_link_graph(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    out_degree: int = 3,
-    stride: int = LINK_STRIDE,
-) -> DataFrame:
-    """(src, dst) edge frame derived deterministically from a document set:
-    doc ``i`` links to ``(i + j*stride) mod n`` for ``j = 1..out_degree``,
-    self-loops dropped. ``n`` rides along via a broadcast scalar — no
-    driver-side collect, the whole graph stays a lazy plan."""
+def synthetic_link_graph(docs: DataFrame, out_degree: int = OUT_DEGREE) -> DataFrame:
+    """(src, dst) edge frame derived deterministically from a document set
+    (ids in ``doc_id``): doc ``i`` links to ``(i + j*LINK_STRIDE) mod n``
+    for ``j = 1..out_degree``, self-loops dropped. ``n`` rides along via
+    a broadcast scalar — no driver-side collect, the whole graph stays a
+    lazy plan."""
     n = docs.agg(F.count("*").alias("_n"))
     jays = F.array(*[F.lit(j) for j in range(1, out_degree + 1)])
     return (
-        docs.select(F.col(id_col).alias("src"))
+        docs.select(F.col("doc_id").alias("src"))
         .crossJoin(F.broadcast(n))
         .select("src", "_n", F.explode(jays).alias("_j"))
         .select(
             "src",
-            ((F.col("src") + F.col("_j") * stride) % F.col("_n")).alias("dst"),
+            ((F.col("src") + F.col("_j") * LINK_STRIDE) % F.col("_n")).alias(
+                "dst"
+            ),
         )
         .where(F.col("dst") != F.col("src"))
     )
 
 
-def pagerank_fixed_point(
-    edges: DataFrame,
-    iterations: int = 5,
-    scale: int = PAGERANK_SCALE,
-    damping_pct: int = PAGERANK_DAMPING_PCT,
-    checkpoint_every: int | None = None,
-) -> DataFrame:
+def pagerank_fixed_point(edges: DataFrame, iterations: int = 5) -> DataFrame:
     """(id, score) after ``iterations`` synchronous PageRank rounds in
     scaled integer arithmetic:
 
-        score_0(v)   = scale div n
-        score_k+1(v) = (scale*(100-d) div 100) div n
+        score_0(v)   = PAGERANK_SCALE div n
+        score_k+1(v) = (PAGERANK_SCALE*(100-d) div 100) div n
                        + (d * Σ_{u→v} (score_k(u) div outdeg(u))) div 100
 
     All quantities are non-negative BIGINTs, every ``div`` is integral,
@@ -85,7 +77,8 @@ def pagerank_fixed_point(
         .distinct()
     )
     outd = edges.groupBy("src").agg(F.count("*").alias("od"))
-    teleport_num = scale * (100 - damping_pct) // 100  # exact python int
+    # exact python int
+    teleport_num = PAGERANK_SCALE * (100 - PAGERANK_DAMPING_PCT) // 100
 
     # r11 loop shape (guide §2.4 "remove shuffles outright"): scores stay
     # SPARSE inside the loop — only nodes with in-links carry a row;
@@ -110,7 +103,7 @@ def pagerank_fixed_point(
     nn = nodes.agg(F.count("*").alias("_n"))
     scores = None
     for it in range(iterations):
-        base = scale if it == 0 else teleport_num
+        base = PAGERANK_SCALE if it == 0 else teleport_num
         default = f"CAST({base} AS BIGINT) div _n"
         if scores is None:  # round 0: every src holds the init constant
             joined = ce.crossJoin(F.broadcast(nn))
@@ -129,14 +122,13 @@ def pagerank_fixed_point(
             "id",
             (
                 F.expr(f"CAST({teleport_num} AS BIGINT) div _n")
-                + F.expr(f"({damping_pct} * _m) div 100")
+                + F.expr(f"({PAGERANK_DAMPING_PCT} * _m) div 100")
             ).alias("score"),
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            scores = scores.localCheckpoint(eager=False)
     if scores is None:  # iterations == 0: every node sits at the init value
         return nodes.crossJoin(F.broadcast(nn)).select(
-            "id", F.expr(f"CAST({scale} AS BIGINT) div _n").alias("score")
+            "id",
+            F.expr(f"CAST({PAGERANK_SCALE} AS BIGINT) div _n").alias("score"),
         )
     # one zero-fill at the end: nodes with no in-links hold exactly the
     # teleport term of the final round
@@ -186,40 +178,33 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     return corners.groupBy("node").agg(F.count("*").alias("triangles"))
 
 
-def pagerank_oracle_sql(
-    iterations: int = 5,
-    out_degree: int = 3,
-    stride: int = LINK_STRIDE,
-    scale: int = PAGERANK_SCALE,
-    damping_pct: int = PAGERANK_DAMPING_PCT,
-    top_k: int = 30,
-) -> str:
+def pagerank_oracle_sql() -> str:
     """DuckDB transcription of synthetic_link_graph + pagerank_fixed_point:
-    the same integer recurrence unrolled into CTEs r0..r{iterations}.
+    the same integer recurrence unrolled into CTEs r0..r5 (5 rounds), top 30.
     DuckDB sum(BIGINT) widens to HUGEINT, hence the CAST back."""
-    teleport_num = scale * (100 - damping_pct) // 100
-    jays = ", ".join(str(j) for j in range(1, out_degree + 1))
+    teleport_num = PAGERANK_SCALE * (100 - PAGERANK_DAMPING_PCT) // 100
+    jays = ", ".join(str(j) for j in range(1, OUT_DEGREE + 1))
     parts = [
         f"""
 WITH dn AS (SELECT count(*) AS n FROM documents),
 edges AS (
-  SELECT d.doc_id AS src, (d.doc_id + j * {stride}) % dn.n AS dst
+  SELECT d.doc_id AS src, (d.doc_id + j * {LINK_STRIDE}) % dn.n AS dst
   FROM documents d, dn, unnest([{jays}]) AS tj(j)
-  WHERE (d.doc_id + j * {stride}) % dn.n <> d.doc_id
+  WHERE (d.doc_id + j * {LINK_STRIDE}) % dn.n <> d.doc_id
 ),
 nodes AS (SELECT DISTINCT src AS id FROM edges
           UNION SELECT DISTINCT dst FROM edges),
 nn AS (SELECT count(*) AS n FROM nodes),
 outd AS (SELECT src, count(*) AS od FROM edges GROUP BY src),
-r0 AS (SELECT id, {scale} // nn.n AS score FROM nodes, nn)"""
+r0 AS (SELECT id, {PAGERANK_SCALE} // nn.n AS score FROM nodes, nn)"""
     ]
-    for k in range(1, iterations + 1):
+    for k in range(1, 6):
         parts.append(
             f""",
 r{k} AS (
   SELECT nd.id,
          {teleport_num} // nn.n
-         + ({damping_pct} * coalesce(s.m, 0)) // 100 AS score
+         + ({PAGERANK_DAMPING_PCT} * coalesce(s.m, 0)) // 100 AS score
   FROM nodes nd CROSS JOIN nn
   LEFT JOIN (
     SELECT e.dst AS id, CAST(sum(p.score // o.od) AS BIGINT) AS m
@@ -232,8 +217,8 @@ r{k} AS (
         )
     parts.append(
         f"""
-SELECT id, score FROM r{iterations}
-ORDER BY score DESC, id LIMIT {top_k}"""
+SELECT id, score FROM r5
+ORDER BY score DESC, id LIMIT 30"""
     )
     return "".join(parts)
 
@@ -241,11 +226,7 @@ ORDER BY score DESC, id LIMIT {top_k}"""
 HITS_SCALE = 10**6
 
 
-def hits_fixed_point(
-    edges: DataFrame,
-    iterations: int = 4,
-    scale: int = HITS_SCALE,
-) -> DataFrame:
+def hits_fixed_point(edges: DataFrame, iterations: int = 4) -> DataFrame:
     """(id, hub, authority): Kleinberg's HITS (1999, public) as an exact
     integer recurrence — the coupled twin of `pagerank_fixed_point`:
 
@@ -253,8 +234,8 @@ def hits_fixed_point(
         h' = A a'   (hub = sum of pointed authorities)
 
     with each vector rescaled after its matvec by truncating division
-    with ``max(1, max(v) div scale)`` — values stay non-negative (init
-    `scale`, sums of non-negatives), so Spark `div` == DuckDB `//` and
+    with ``max(1, max(v) div HITS_SCALE)`` — values stay non-negative
+    (init `HITS_SCALE`, sums of non-negatives), so Spark `div` == DuckDB `//` and
     the whole trajectory is engine- and partitioning-exact. Per round:
     two keyed join+agg jobs on the edge frame (map-side combined); state
     between rounds is a node-sized frame, localCheckpoint-truncated like
@@ -278,16 +259,16 @@ def hits_fixed_point(
     # happen once after the loop now. Every src has an out-edge and
     # every dst an in-edge by construction, so the matvec join finds a
     # row for every edge endpoint that could carry mass — the
-    # trajectory is bit-identical. Round 1's a' = Σ h_0(src) = scale ×
+    # trajectory is bit-identical. Round 1's a' = Σ h_0(src) = HITS_SCALE ×
     # indegree folds the constant init vector into the aggregate, which
     # also removes h_0's node-set materialisation.
     h = None
     a = None
     for it in range(iterations):
         # a' = sum over in-edges of h(src)
-        if h is None:  # h_0 ≡ scale for every node
+        if h is None:  # h_0 ≡ HITS_SCALE for every node
             a_raw = edges.groupBy(F.col("dst").alias("id")).agg(
-                (F.count(F.lit(1)) * F.lit(scale)).cast("long").alias("v")
+                (F.count(F.lit(1)) * F.lit(HITS_SCALE)).cast("long").alias("v")
             )
         else:
             a_raw = (
@@ -300,7 +281,7 @@ def hits_fixed_point(
             a_raw.crossJoin(F.broadcast(amax))
             .select(
                 "id",
-                F.expr(f"v div greatest(1, m div {scale})").alias("a"),
+                F.expr(f"v div greatest(1, m div {HITS_SCALE})").alias("a"),
             )
         )
         # h' = sum over out-edges of a(dst)
@@ -314,7 +295,7 @@ def hits_fixed_point(
             h_raw.crossJoin(F.broadcast(hmax))
             .select(
                 "id",
-                F.expr(f"v div greatest(1, m div {scale})").alias("h"),
+                F.expr(f"v div greatest(1, m div {HITS_SCALE})").alias("h"),
             )
         ).localCheckpoint(eager=False)
     # one zero-fill at the end restores the dense output contract
@@ -331,26 +312,21 @@ def hits_fixed_point(
     )
 
 
-def hits_oracle_sql(
-    iterations: int = 4,
-    out_degree: int = 3,
-    stride: int = LINK_STRIDE,
-    scale: int = HITS_SCALE,
-    top_k: int = 30,
-) -> str:
+def hits_oracle_sql(iterations: int = 4) -> str:
     """DuckDB transcription of synthetic_link_graph + hits_fixed_point,
-    unrolled (MATERIALIZED per round — each state is referenced twice)."""
-    jays = ", ".join(str(j) for j in range(1, out_degree + 1))
+    unrolled (MATERIALIZED per round — each state is referenced twice),
+    top 30 hubs."""
+    jays = ", ".join(str(j) for j in range(1, OUT_DEGREE + 1))
     parts = [f"""
 WITH dn AS (SELECT count(*) AS n FROM documents),
 edges AS MATERIALIZED (
-  SELECT d.doc_id AS src, (d.doc_id + j * {stride}) % dn.n AS dst
+  SELECT d.doc_id AS src, (d.doc_id + j * {LINK_STRIDE}) % dn.n AS dst
   FROM documents d, dn, unnest([{jays}]) AS tj(j)
-  WHERE (d.doc_id + j * {stride}) % dn.n <> d.doc_id
+  WHERE (d.doc_id + j * {LINK_STRIDE}) % dn.n <> d.doc_id
 ),
 nodes AS MATERIALIZED (SELECT DISTINCT src AS id FROM edges
           UNION SELECT DISTINCT dst FROM edges),
-h0 AS (SELECT id, CAST({scale} AS BIGINT) AS h FROM nodes)"""]
+h0 AS (SELECT id, CAST({HITS_SCALE} AS BIGINT) AS h FROM nodes)"""]
     for k in range(1, iterations + 1):
         parts.append(f""",
 ar{k} AS MATERIALIZED (
@@ -358,38 +334,41 @@ ar{k} AS MATERIALIZED (
   FROM nodes n LEFT JOIN edges e ON e.dst = n.id
   LEFT JOIN h{k - 1} p ON p.id = e.src
   GROUP BY n.id
-), am{k} AS (SELECT greatest(1, CAST(max(v) AS BIGINT) // {scale}) AS m FROM ar{k}),
+), am{k} AS (
+  SELECT greatest(1, CAST(max(v) AS BIGINT) // {HITS_SCALE}) AS m FROM ar{k}
+),
 a{k} AS MATERIALIZED (SELECT id, v // m AS a FROM ar{k}, am{k}),
 hr{k} AS MATERIALIZED (
   SELECT n.id, CAST(COALESCE(sum(p.a), 0) AS BIGINT) AS v
   FROM nodes n LEFT JOIN edges e ON e.src = n.id
   LEFT JOIN a{k} p ON p.id = e.dst
   GROUP BY n.id
-), hm{k} AS (SELECT greatest(1, CAST(max(v) AS BIGINT) // {scale}) AS m FROM hr{k}),
+), hm{k} AS (
+  SELECT greatest(1, CAST(max(v) AS BIGINT) // {HITS_SCALE}) AS m FROM hr{k}
+),
 h{k} AS MATERIALIZED (SELECT id, v // m AS h FROM hr{k}, hm{k})""")
     parts.append(f"""
 SELECT h.id, h.h AS hub, a.a AS authority
 FROM h{iterations} h JOIN a{iterations} a USING (id)
-ORDER BY hub DESC, id LIMIT {top_k}""")
+ORDER BY hub DESC, id LIMIT 30""")
     return "".join(parts)
 
 
 def synthetic_block_graph(
     docs: DataFrame,
-    id_col: str = "doc_id",
     block: int = 32,
-    out_degree: int = 3,
     stride: int = 5,
 ) -> DataFrame:
     """(src, dst) edges with PLANTED community structure: node ``i``
     links only inside its ``block``-sized id block, to
-    ``block_start + ((i % block + j*stride) % block)`` for j = 1..k —
+    ``block_start + ((i % block + j*stride) % block)`` for
+    j = 1..OUT_DEGREE —
     the deterministic fixture for community detection (stride coprime to
     block keeps each block connected). Pure per-row arithmetic; no
     shuffle, no collect."""
-    i = F.col(id_col)
+    i = F.col("doc_id")
     start = i - (i % block)
-    jays = F.array(*[F.lit(j) for j in range(1, out_degree + 1)])
+    jays = F.array(*[F.lit(j) for j in range(1, OUT_DEGREE + 1)])
     return (
         docs.select(i.alias("src"))
         .select("src", F.explode(jays).alias("_j"))
@@ -404,11 +383,7 @@ def synthetic_block_graph(
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    iterations: int = 4,
-    checkpoint_every: int | None = None,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
     """(id, label) after `iterations` SYNCHRONOUS label-propagation
     rounds (Raghavan et al. 2007, "Near linear time algorithm to detect
     community structures") over the undirected closure of `edges`,
@@ -428,8 +403,7 @@ def label_propagation(
     max-of-struct aggregate per node (cnt, -label) so the argmax needs
     NO window over the corpus. The undirected edge frame is built once
     and reused (ReusedExchange across rounds); labels shuffle as
-    (id, int64) pairs. `checkpoint_every` truncates lineage on deep
-    runs."""
+    (id, int64) pairs."""
     und = (
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -438,7 +412,7 @@ def label_propagation(
     )
     nodes = und.select(F.col("src").alias("id")).distinct()
     labels = nodes.select("id", F.col("id").alias("label"))
-    for it in range(iterations):
+    for _ in range(iterations):
         neigh = und.join(
             labels.select(
                 F.col("id").alias("dst"), F.col("label").alias("_nl")
@@ -453,17 +427,10 @@ def label_propagation(
                 "label"
             )
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            labels = labels.localCheckpoint(eager=False)
     return labels
 
 
-def bfs_hops(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_hops: int,
-    checkpoint_every: int = 2,
-) -> DataFrame:
+def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
     """(id, hops) for every node reachable from `seeds` within
     `max_hops` directed hops — minimum hop count, frontier-expansion
     BFS (the crawl-reachability / contamination-blast-radius pass).
@@ -477,7 +444,7 @@ def bfs_hops(
     visited node every round. The frontier dedups (distinct on id)
     before the anti-join against the visited set, so edge fan-in never
     amplifies; `edges` is re-used across rounds (ReusedExchange) and
-    the visited set localCheckpoints every `checkpoint_every` rounds to
+    the visited set localCheckpoints every 2 rounds to
     truncate the union lineage. All-integer — bit-identical across
     engines and re-runs.
     """
@@ -495,26 +462,25 @@ def bfs_hops(
             "id", F.lit(k).cast("int").alias("hops")
         )
         visited = visited.union(new)
-        if k % checkpoint_every == 0:
+        if k % 2 == 0:
             visited = visited.localCheckpoint(eager=False)
         frontier = new.select("id")
     return visited
 
 
-def bfs_oracle_sql(max_hops: int, seed_mod: int, out_degree: int = 3,
-                   stride: int = LINK_STRIDE) -> str:
+def bfs_oracle_sql(max_hops: int, seed_mod: int) -> str:
     """DuckDB transcription of synthetic_link_graph + bfs_hops, unrolled:
     the oracle uses the simpler (and per-round heavier) relaxation form
     d_k = min(d_{k-1}, 1 + d_{k-1} of any in-neighbour) — same results
     by induction on hop count, deliberately NOT the same plan."""
-    jays = ", ".join(str(j) for j in range(1, out_degree + 1))
+    jays = ", ".join(str(j) for j in range(1, OUT_DEGREE + 1))
     parts = [
         f"""
 WITH n AS (SELECT count(*) AS n FROM documents),
 e AS (
-  SELECT doc_id AS src, (doc_id + j * {stride}) % (SELECT n FROM n) AS dst
+  SELECT doc_id AS src, (doc_id + j * {LINK_STRIDE}) % (SELECT n FROM n) AS dst
   FROM documents, unnest([{jays}]) AS tj(j)
-  WHERE (doc_id + j * {stride}) % (SELECT n FROM n) <> doc_id
+  WHERE (doc_id + j * {LINK_STRIDE}) % (SELECT n FROM n) <> doc_id
 ),
 d0 AS (
   SELECT doc_id AS id, 0 AS hops FROM documents WHERE doc_id % {seed_mod} = 0
@@ -544,13 +510,12 @@ FROM d{max_hops} GROUP BY hops ORDER BY hops"""
 def label_propagation_oracle_sql(
     iterations: int = 4,
     block: int = 32,
-    out_degree: int = 3,
     stride: int = 5,
 ) -> str:
     """DuckDB transcription of synthetic_block_graph + label_propagation:
     the same deterministic recurrence unrolled into CTEs l0..l{k}, the
     argmax expressed as row_number over (cnt DESC, label ASC)."""
-    jays = ", ".join(str(j) for j in range(1, out_degree + 1))
+    jays = ", ".join(str(j) for j in range(1, OUT_DEGREE + 1))
     parts = [
         f"""
 WITH raw_e AS (

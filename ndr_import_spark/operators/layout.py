@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 ZORDER_BITS = 16
+ZORDER_BUCKET_BITS = 8  # report buckets keep the top 8 Morton bits
 
 
 def quantise_dim(col: Column, lo: Column, hi: Column, bits: int) -> Column:
@@ -59,7 +60,7 @@ def zorder_locality_report(
     x_col: str,
     y_col: str,
     bits: int = ZORDER_BITS,
-    bucket_bits: int = 8,
+    bucket_bits: int = ZORDER_BUCKET_BITS,
 ) -> DataFrame:
     """(bucket, n, x_span, y_span): bucket rows by the Morton key's top
     `bucket_bits` bits (a stand-in for the files a sorted writer would
@@ -92,26 +93,18 @@ def zorder_locality_report(
     )
 
 
-def zorder_oracle_sql(
-    table: str,
-    x_col: str,
-    y_col: str,
-    bits: int = ZORDER_BITS,
-    bucket_bits: int = 8,
-    where: str = "",
-) -> str:
+def zorder_oracle_sql(table: str, x_col: str, y_col: str) -> str:
     """DuckDB transcription of `zorder_locality_report` (same quantise /
     interleave arithmetic; `//` on non-negative operands == Spark div)."""
-    mask = (1 << bits) - 1
+    mask = (1 << ZORDER_BITS) - 1
     interleave = " + ".join(
         f"((((xq >> {b}) & 1) << {2 * b + 1}) + (((yq >> {b}) & 1) << {2 * b}))"
-        for b in range(bits)
+        for b in range(ZORDER_BITS)
     )
-    w = f"WHERE {where}" if where else ""
     return f"""WITH scal AS (
   SELECT CAST(min({x_col}) AS BIGINT) AS xlo, CAST(max({x_col}) AS BIGINT) AS xhi,
          CAST(min({y_col}) AS BIGINT) AS ylo, CAST(max({y_col}) AS BIGINT) AS yhi
-  FROM {table} {w}
+  FROM {table}
 ), q AS (
   SELECT CAST({x_col} AS BIGINT) AS x, CAST({y_col} AS BIGINT) AS y,
          CASE WHEN xhi > xlo
@@ -120,9 +113,10 @@ def zorder_oracle_sql(
          CASE WHEN yhi > ylo
               THEN (CAST({y_col} AS BIGINT) - ylo) * {mask} // (yhi - ylo)
               ELSE 0 END AS yq
-  FROM {table}, scal {w}
+  FROM {table}, scal
 ), z AS (
-  SELECT x, y, ({interleave}) >> {2 * bits - bucket_bits} AS bucket FROM q
+  SELECT x, y, ({interleave}) >> {2 * ZORDER_BITS - ZORDER_BUCKET_BITS} AS bucket
+  FROM q
 )
 SELECT bucket, CAST(count(*) AS BIGINT) AS n,
        max(x) - min(x) AS x_span, max(y) - min(y) AS y_span
@@ -130,13 +124,7 @@ FROM z GROUP BY bucket ORDER BY bucket
 """
 
 
-def compaction_plan(
-    files: DataFrame,
-    target_bytes: int,
-    partition_col: str = "partition",
-    path_col: str = "path",
-    bytes_col: str = "bytes",
-) -> DataFrame:
+def compaction_plan(files: DataFrame, target_bytes: int) -> DataFrame:
     """Small-files compaction plan — the standard lake-maintenance pass
     that groups a partition's files into ~`target_bytes` rewrite bins.
 
@@ -158,16 +146,13 @@ def compaction_plan(
     chunked prefix-sum machinery in operators/prefix.py (the
     purchase_id_islands pattern), noted as the upgrade path."""
     w = (
-        Window.partitionBy(partition_col)
-        .orderBy(path_col)
+        Window.partitionBy("partition")
+        .orderBy("path")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cum = F.sum(F.col(bytes_col)).over(w)
+    cum = F.sum(F.col("bytes")).over(w)
     offs = files.select(
-        F.col(partition_col).alias("partition"),
-        F.col(path_col).alias("path"),
-        F.col(bytes_col).alias("bytes"),
-        (cum - F.col(bytes_col)).alias("_off"),
+        "partition", "path", "bytes", (cum - F.col("bytes")).alias("_off")
     )
     # integer division, not float '/': byte offsets near 2^53 would
     # round in a double and disagree with any exact replica

@@ -60,16 +60,14 @@ def _token_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def train_bigram_counts(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def train_bigram_counts(df: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(unigram counts, bigram counts, total-token scalar) from a corpus.
     Unigrams come from the full token stream (not just pair members), so
     T = Σ c(w) is the corpus token count."""
-    toks = df.select(F.explode(tokens(F.col(text_col))).alias("w"))
+    toks = df.select(F.explode(tokens(F.col("text"))).alias("w"))
     uni = toks.groupBy("w").agg(F.count("*").alias("c1"))
     bi = (
-        _token_pairs(df, id_col, text_col)
+        _token_pairs(df, "doc_id", "text")
         .groupBy("w1", "w2")
         .agg(F.count("*").alias("c2"))
     )
@@ -84,7 +82,6 @@ def score_stupid_backoff(
     total: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    alpha: float = LM_ALPHA,
 ) -> DataFrame:
     """(id, n_pairs, backoff_pairs, avg_logprob) per scored document.
 
@@ -99,10 +96,10 @@ def score_stupid_backoff(
     )
     uni_s = F.when(
         F.col("_c1w2").isNotNull(), F.col("_c1w2") / F.col("_t")
-    ).otherwise(F.lit(alpha) / F.col("_t"))
+    ).otherwise(F.lit(LM_ALPHA) / F.col("_t"))
     s = F.when(
         F.col("c2").isNotNull(), F.col("c2") / F.col("_c1w1")
-    ).otherwise(F.lit(alpha) * uni_s)
+    ).otherwise(F.lit(LM_ALPHA) * uni_s)
     lp = F.round(F.log10(s), 6).cast("decimal(12,6)")
     hit = F.when(F.col("c2").isNull(), F.lit(1)).otherwise(F.lit(0))
     return (
@@ -124,14 +121,10 @@ def perplexity_buckets(
     uni: DataFrame,
     bi: DataFrame,
     total: DataFrame,
-    n_buckets: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str = "lang",
 ) -> DataFrame:
     """CCNet-style quality partitioning (Wenzek et al. 2020, public): rank
     each scored document by LM log-probability within its language and
-    split into `n_buckets` ntile buckets (1 = head/most-fluent … tail);
+    split into 3 ntile buckets (1 = head/most-fluent … tail);
     per (lang, bucket) report size, mean log-prob and backoff rate.
 
     Determinism: the per-doc score is the 6dp-quantised DECIMAL the LM
@@ -140,15 +133,15 @@ def perplexity_buckets(
     per-language sort — the CCNet paper itself thresholds on percentiles
     estimated from a sample, which is the drop-in replacement once a
     single language outgrows a sort (the bucket columns stay identical)."""
-    scored = score_stupid_backoff(df, uni, bi, total, id_col, text_col)
-    j = scored.join(df.select(id_col, group_col), id_col)
+    scored = score_stupid_backoff(df, uni, bi, total, "doc_id", "text")
+    j = scored.join(df.select("doc_id", "lang"), "doc_id")
     j = j.withColumn("_lp", F.col("avg_logprob").cast("decimal(12,6)"))
-    w = Window.partitionBy(group_col).orderBy(
-        F.col("_lp").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("lang").orderBy(
+        F.col("_lp").desc(), F.col("doc_id").asc()
     )
     return (
-        j.withColumn("bucket", F.ntile(n_buckets).over(w))
-        .groupBy(group_col, "bucket")
+        j.withColumn("bucket", F.ntile(3).over(w))
+        .groupBy("lang", "bucket")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.round(

@@ -11,8 +11,8 @@ II/MM strips, none/PackBits) and, when the system libheif is present,
 AVIF/HEIC (functions/heif.py) payloads, dispatched by magic bytes
 through one table (`_decode_raw`); audio decode is REAL for WAV/PCM
 (functions/wav.py — RIFF walk, PCM and IEEE-float frames). Other
-formats need an injected decoder (`set_image_decoder`/
-`set_audio_decoder`; deterministic fake available for tests).
+formats need a decoder passed per call (``decoder=``; deterministic
+fakes available for tests).
 Everything Spark-side is real either way: schema, Arrow-batched
 `mapInPandas` plumbing (one adapter, `payload_map`, for every
 per-payload operator), batch shapes, partition sizing.
@@ -48,40 +48,17 @@ MEDIA_SCHEMA = T.StructType([
     T.StructField("payload", T.BinaryType()),
 ])
 
-_image_decoder = None
-_audio_decoder = None
-_video_decoder = None
-
-
-def set_image_decoder(fn) -> None:
-    """bytes → (width, height, pixel-feature list[float])."""
-    global _image_decoder
-    _image_decoder = fn
-
-
-def set_audio_decoder(fn) -> None:
-    global _audio_decoder
-    _audio_decoder = fn
-
-
-def set_video_decoder(fn) -> None:
-    """bytes → (n_frames, width, height, duration_ms, feature list)."""
-    global _video_decoder
-    _video_decoder = fn
-
-
 def payload_map(
     df: DataFrame,
     fn: Callable[[object, bytes | None], Iterable[tuple]],
     schema: str,
     id_col: str = "media_id",
-    payload_col: str = "payload",
 ) -> DataFrame:
     """Run ``fn(mid, payload)`` on every (id, payload) pair of `df` in
     Arrow record batches and return the rows it gives as a frame of
     `schema` — the one ``mapInPandas`` behind every per-payload operator.
 
-    Only `id_col` and `payload_col` cross into Python. ``payload`` is
+    Only `id_col` and the ``payload`` column cross into Python; a payload is
     ``bytes``, or ``None`` for a null payload. ``fn`` returns the row
     tuples for that payload in `schema` column order: one row, none to
     drop the payload, or several to fan out. What ``fn`` raises fails
@@ -94,14 +71,14 @@ def payload_map(
         for pdf in batches:
             rows = [
                 row
-                for mid, payload in zip(pdf[id_col], pdf[payload_col])
+                for mid, payload in zip(pdf[id_col], pdf["payload"])
                 for row in fn(mid, payload)
             ]
             if rows:
                 # unnamed columns: Spark assigns them to `schema` by position
                 yield pd.DataFrame(rows)
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    return df.select(id_col, "payload").mapInPandas(run, schema)
 
 
 def deterministic_fake_decoder(data: bytes) -> tuple[int, int, list[float]]:
@@ -122,10 +99,7 @@ FEATURE_SCHEMA = (
 )
 
 
-_UNSET = object()  # "caller didn't say": fall back to the module global
-
-
-def extract_features(df: DataFrame, decoder=_UNSET) -> DataFrame:
+def extract_features(df: DataFrame, decoder=None) -> DataFrame:
     """Decode + feature-extract via mapInPandas (Arrow record batches).
 
     PNG, WebP, JPEG, GIF, BMP, TIFF and (with the system libheif)
@@ -136,20 +110,11 @@ def extract_features(df: DataFrame, decoder=_UNSET) -> DataFrame:
     failing the task. A null payload yields a row of NULL width, height
     and feature.
 
-    Decoder injection (r8 verdict): prefer the per-call ``decoder=``
-    parameter — passing ``decoder=None`` explicitly forces stdlib
-    magic-byte dispatch. The module-global ``set_image_decoder``
-    registration remains for library users configuring a session-wide
-    decoder once, and applies only when the parameter is left unset;
-    per-call injection never mutates (or is clobbered by) the global.
+    Decoder injection (r8 verdict): ``decoder`` (bytes → (width, height,
+    feature list[float])) replaces the stdlib dispatch for this call; it
+    rides in the task closure, so executors see it too.
     """
     from ndr_import_spark.functions.png import grid_features
-
-    # capture the decoder at PLAN time: executors re-import this module in a
-    # fresh interpreter, so reading the global inside the UDF would always
-    # see None there
-    if decoder is _UNSET:
-        decoder = _image_decoder
 
     def one(key, payload):
         mid, kind = key["media_id"], key["kind"]
@@ -183,7 +148,7 @@ def deterministic_fake_audio_decoder(data: bytes) -> tuple[int, int, list[float]
     return n, 16000, [x / 255.0 for x in b[:8]]
 
 
-def extract_audio_features(df: DataFrame, decoder=_UNSET) -> DataFrame:
+def extract_audio_features(df: DataFrame, decoder=None) -> DataFrame:
     """Audio twin of `extract_features`: decode + feature-extract via
     Arrow-batched mapInPandas. WAV/PCM payloads (RIFF magic) decode with
     the stdlib codec (functions/wav.py — PCM 8/16/24/32-bit, IEEE float,
@@ -192,15 +157,12 @@ def extract_audio_features(df: DataFrame, decoder=_UNSET) -> DataFrame:
     Non-WAV payloads with no injected decoder raise NotImplementedError —
     the same honest env-gate contract as the image path.
 
-    Decoder injection follows extract_features: per-call ``decoder=``
-    preferred (``None`` forces stdlib dispatch); the module-global
-    ``set_audio_decoder`` applies only when the parameter is unset."""
+    Decoder injection follows extract_features: ``decoder`` (bytes →
+    (n_samples, sample_rate, feature list)) replaces the stdlib dispatch
+    for this call."""
     from ndr_import_spark.functions.flac import flac_audio_decoder, is_flac
     from ndr_import_spark.functions.mp3 import decode_mp3, is_mp3
     from ndr_import_spark.functions.wav import is_wav, wav_audio_decoder
-
-    if decoder is _UNSET:
-        decoder = _audio_decoder
 
     def one(mid, payload):
         if payload is None:
@@ -221,9 +183,8 @@ def extract_audio_features(df: DataFrame, decoder=_UNSET) -> DataFrame:
             feat = [float(abs(int(v))) / 32768.0 for v in pcm[:16]]
             return [(mid, len(pcm) // max(nch, 1), sr, feat)]
         raise NotImplementedError(
-            "Non-WAV/FLAC audio needs an injected decoder; use "
-            "multimodal.set_audio_decoder "
-            "(deterministic_fake_audio_decoder available for tests)"
+            "Non-WAV/FLAC audio needs an injected decoder; pass "
+            "decoder= (deterministic_fake_audio_decoder available for tests)"
         )
 
     return payload_map(df, one, AUDIO_FEATURE_SCHEMA)
@@ -339,10 +300,8 @@ def extract_image_metadata(df: DataFrame) -> DataFrame:
     return payload_map(df, one, IMAGE_META_SCHEMA)
 
 
-def scrub_image_metadata(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
-) -> DataFrame:
-    """(id, payload) with metadata stripped: JPEG loses APP1 (EXIF/XMP
+def scrub_image_metadata(df: DataFrame) -> DataFrame:
+    """(media_id, payload) with metadata stripped: JPEG loses APP1 (EXIF/XMP
     incl. GPS) and APP2 (ICC) via exif.strip_jpeg_metadata; WebP (r8)
     loses its EXIF/XMP/ICCP chunks with the VP8X feature flags cleared
     via webp.scrub_webp_metadata — GPS rides in the WebP EXIF chunk's
@@ -375,9 +334,7 @@ def scrub_image_metadata(
         except (WebpError, HeifError, ExifError, struct.error):
             return [(mid, raw)]
 
-    return payload_map(
-        df, one, f"{id_col} long, {payload_col} binary", id_col, payload_col
-    )
+    return payload_map(df, one, "media_id long, payload binary")
 
 
 VIDEO_FEATURE_SCHEMA = (
@@ -386,35 +343,18 @@ VIDEO_FEATURE_SCHEMA = (
 )
 
 
-def extract_video_features(
-    df: DataFrame,
-    frame_stride: int = 1,
-    decoder=_UNSET,
-) -> DataFrame:
+def extract_video_features(df: DataFrame, decoder=None) -> DataFrame:
     """Video twin of `extract_features`: decode + per-frame feature
     extraction via Arrow-batched mapInPandas. MJPEG-in-AVI payloads (RIFF
     magic) decode with the stdlib container walk + JPEG codec
     (functions/avi.py — Annex K table injection for table-less MJPEG
-    frames) by default; an injected decoder (`set_video_decoder`) takes
-    precedence for other formats. `frame_stride` samples every n-th frame
-    — the decode cost knob (feature = mean pixel per sampled frame).
-    Non-AVI payloads with no injected decoder raise NotImplementedError —
-    the same honest env-gate contract as the image and audio paths.
-
-    `decoder` threads an explicit choice through without touching the
-    module-global registration: omit it to use the `set_video_decoder`
-    global, pass `None` to force stdlib container dispatch, or pass a
-    callable to use it for this plan only (r7 ADVICE — callers used to
-    clobber the global to get the stdlib path)."""
+    frames) by default, every frame sampled (feature = mean pixel per
+    frame); a `decoder` (bytes → (n_frames, width, height, duration_ms,
+    feature list)) replaces that dispatch for this call.
+    Non-AVI payloads with no decoder raise NotImplementedError —
+    the same honest env-gate contract as the image and audio paths."""
     from ndr_import_spark.functions.avi import avi_video_decoder, is_avi
     from ndr_import_spark.functions.gif import gif_video_decoder, is_gif
-
-    if frame_stride < 1:
-        raise ValueError(
-            f"frame_stride must be >= 1, got {frame_stride}"
-        )
-    if decoder is _UNSET:
-        decoder = _video_decoder
 
     def one(mid, payload):
         if payload is None:
@@ -422,14 +362,13 @@ def extract_video_features(
         if decoder is not None:
             return [(mid, *decoder(payload))]
         if is_avi(payload):
-            return [(mid, *avi_video_decoder(payload, frame_stride=frame_stride))]
+            return [(mid, *avi_video_decoder(payload))]
         if is_gif(payload):
             # animated GIF is a video-like container (frames + delays):
             # the second real stdlib container on this path
-            return [(mid, *gif_video_decoder(payload, frame_stride=frame_stride))]
+            return [(mid, *gif_video_decoder(payload))]
         raise NotImplementedError(
-            "Non-AVI/GIF video needs an injected decoder; use "
-            "multimodal.set_video_decoder"
+            "Non-AVI/GIF video needs an injected decoder; pass decoder="
         )
 
     return payload_map(df, one, VIDEO_FEATURE_SCHEMA)
@@ -607,9 +546,8 @@ def _decode_raw(data: bytes):
     if fmt is None:
         raise NotImplementedError(
             "no stdlib image codec for this payload (PNG, WebP, JPEG, GIF, "
-            "BMP, TIFF, AVIF/HEIC); inject a decoder with "
-            "multimodal.set_image_decoder (deterministic_fake_decoder "
-            "available for tests)"
+            "BMP, TIFF, AVIF/HEIC); pass decoder= to extract_features "
+            "(deterministic_fake_decoder available for tests)"
         )
     return _image_codecs()[fmt][1](data)
 
@@ -632,7 +570,7 @@ def perceptual_hash_images(df: DataFrame, grid: int = 8) -> DataFrame:
     return payload_map(df, one, PHASH_SCHEMA)
 
 
-def image_dedup_groups(df: DataFrame, grid: int = 8) -> DataFrame:
+def image_dedup_groups(df: DataFrame) -> DataFrame:
     """(kept_id, n_copies): cross-format exact perceptual-duplicate
     groups — ONE combinable aggregate on the 64-bit hash (keep the lowest
     media_id, the dedup family's election rule). Near-duplicate pairs at
@@ -642,7 +580,7 @@ def image_dedup_groups(df: DataFrame, grid: int = 8) -> DataFrame:
     therefore hashes — are identical. A null payload has a NULL hash and
     is in no group."""
     return (
-        perceptual_hash_images(df, grid)
+        perceptual_hash_images(df)
         .where(F.col("phash").isNotNull())
         .groupBy("phash")
         .agg(
@@ -660,8 +598,7 @@ AUDIO_TAG_SCHEMA = (
 )
 
 
-def audio_tag_table(df: DataFrame, payload_col: str = "payload",
-                    id_col: str = "media_id") -> DataFrame:
+def audio_tag_table(df: DataFrame) -> DataFrame:
     """Audio tag extraction across every container a crawl sees (r10):
     one row per payload with the common text fields from a leading
     ID3v2.2/2.3/2.4 tag (functions/mp3.parse_id3v2 — syncsafe/plain
@@ -759,7 +696,7 @@ def audio_tag_table(df: DataFrame, payload_col: str = "payload",
             n_frames,
         )]
 
-    return payload_map(df, one, AUDIO_TAG_SCHEMA, id_col, payload_col)
+    return payload_map(df, one, AUDIO_TAG_SCHEMA)
 
 
 AUDIO_FP_SCHEMA = (
@@ -768,8 +705,7 @@ AUDIO_FP_SCHEMA = (
 )
 
 
-def audio_fingerprint_table(df: DataFrame, payload_col: str = "payload",
-                            id_col: str = "media_id") -> DataFrame:
+def audio_fingerprint_table(df: DataFrame) -> DataFrame:
     """Cross-codec audio dedup keys (r11, the audio twin of
     perceptual_hash_images): each payload decodes to mono PCM through
     the clean-room codec stack (WAV PCM16/float32, G.711 µ/A-law, IMA/
@@ -802,7 +738,7 @@ def audio_fingerprint_table(df: DataFrame, payload_col: str = "payload",
             # plain ValueErrors are all ValueError subclasses
             return [(mid, "error", None, None, None, None)]
 
-    return payload_map(df, one, AUDIO_FP_SCHEMA, id_col, payload_col)
+    return payload_map(df, one, AUDIO_FP_SCHEMA)
 
 
 AUDIO_QUALITY_SCHEMA = (
@@ -813,8 +749,7 @@ AUDIO_QUALITY_SCHEMA = (
 )
 
 
-def audio_quality_table(df: DataFrame, payload_col: str = "payload",
-                        id_col: str = "media_id") -> DataFrame:
+def audio_quality_table(df: DataFrame) -> DataFrame:
     """Audio quality scoring for training-data curation (r11) — the
     audio twin of the Gopher text-quality gate: per payload, decode to
     mono PCM (same dispatch as audio_fingerprint_table) and emit peak /
@@ -847,12 +782,10 @@ def audio_quality_table(df: DataFrame, payload_col: str = "payload",
         except (ValueError, IndexError, struct.error):
             return [(mid, "error", *[None] * 8, "error")]
 
-    return payload_map(df, one, AUDIO_QUALITY_SCHEMA, id_col, payload_col)
+    return payload_map(df, one, AUDIO_QUALITY_SCHEMA)
 
 
-def resample_audio(df: DataFrame, target_sr: int,
-                   payload_col: str = "payload",
-                   id_col: str = "media_id") -> DataFrame:
+def resample_audio(df: DataFrame, target_sr: int) -> DataFrame:
     """(media_id, payload, sample_rate, n_samples) with every payload
     decoded (any supported container/codec), linearly resampled to
     `target_sr` (functions/audiofp.resample_audio_linear) and
@@ -879,10 +812,7 @@ def resample_audio(df: DataFrame, target_sr: int,
             return []
 
     return payload_map(
-        df, one,
-        f"{id_col} long, {payload_col} binary, sample_rate int, "
-        "n_samples long",
-        id_col, payload_col,
+        df, one, "media_id long, payload binary, sample_rate int, n_samples long"
     )
 
 
@@ -892,9 +822,7 @@ AUDIO_SEG_SCHEMA = (
 )
 
 
-def segment_audio_table(df: DataFrame, min_gap_ms: float = 100.0,
-                        payload_col: str = "payload",
-                        id_col: str = "media_id") -> DataFrame:
+def segment_audio_table(df: DataFrame, min_gap_ms: float = 100.0) -> DataFrame:
     """Silence-boundary audio segmentation (r11) — the audio twin of
     document chunking for ASR-style corpus prep: one row per voiced
     segment (functions/audiofp.silence_segments; two voiced runs merge
@@ -926,7 +854,7 @@ def segment_audio_table(df: DataFrame, min_gap_ms: float = 100.0,
             for ix, (a, b) in enumerate(segs)
         ]
 
-    return payload_map(df, one, AUDIO_SEG_SCHEMA, id_col, payload_col)
+    return payload_map(df, one, AUDIO_SEG_SCHEMA)
 
 
 MEDIA_ROUTE_SCHEMA = (
@@ -934,8 +862,7 @@ MEDIA_ROUTE_SCHEMA = (
 )
 
 
-def route_media_payloads(df: DataFrame, payload_col: str = "payload",
-                         id_col: str = "media_id") -> DataFrame:
+def route_media_payloads(df: DataFrame) -> DataFrame:
     """Front-door routing for a mixed media corpus (r11): one row per
     payload with its (family, container) from magic bytes alone
     (sources/mediameta.sniff_media) — image/audio/video/document/
@@ -950,7 +877,7 @@ def route_media_payloads(df: DataFrame, payload_col: str = "payload",
         raw = payload or b""
         return [(mid, *sniff_media(raw), len(raw))]
 
-    return payload_map(df, one, MEDIA_ROUTE_SCHEMA, id_col, payload_col)
+    return payload_map(df, one, MEDIA_ROUTE_SCHEMA)
 
 
 ALBUM_ART_SCHEMA = (
@@ -959,8 +886,7 @@ ALBUM_ART_SCHEMA = (
 )
 
 
-def extract_album_art(df: DataFrame, payload_col: str = "payload",
-                      id_col: str = "media_id") -> DataFrame:
+def extract_album_art(df: DataFrame) -> DataFrame:
     """One row per embedded artwork in an audio payload (r11): ID3v2
     APIC/PIC frames (functions/mp3.id3_pictures), FLAC PICTURE blocks
     (functions/audiotags.flac_pictures) and MP4/M4A covr atoms
@@ -996,7 +922,7 @@ def extract_album_art(df: DataFrame, payload_col: str = "payload",
             for ix, (cont, mime, art) in enumerate(arts)
         ]
 
-    return payload_map(df, one, ALBUM_ART_SCHEMA, id_col, payload_col)
+    return payload_map(df, one, ALBUM_ART_SCHEMA)
 
 
 WEBP_CANVAS_SCHEMA = (
@@ -1005,8 +931,7 @@ WEBP_CANVAS_SCHEMA = (
 )
 
 
-def webp_canvas_table(df: DataFrame, payload_col: str = "payload",
-                      id_col: str = "media_id") -> DataFrame:
+def webp_canvas_table(df: DataFrame) -> DataFrame:
     """Composited-canvas frame table (r10, the compositing twin of
     webp_frame_table): one row per ANIMATION FRAME with the digest and
     per-channel sums of the canvas AS A VIEWER SEES IT — VP8X
@@ -1038,7 +963,7 @@ def webp_canvas_table(df: DataFrame, payload_col: str = "payload",
             rows.append((mid, -1, None, None, None, None, None, None))
         return rows
 
-    return payload_map(df, one, WEBP_CANVAS_SCHEMA, id_col, payload_col)
+    return payload_map(df, one, WEBP_CANVAS_SCHEMA)
 
 
 MP3_STRUCT_SCHEMA = (
@@ -1049,8 +974,7 @@ MP3_STRUCT_SCHEMA = (
 )
 
 
-def mp3_structure_table(df: DataFrame, payload_col: str = "payload",
-                        id_col: str = "media_id") -> DataFrame:
+def mp3_structure_table(df: DataFrame) -> DataFrame:
     """Structural MP3 triage (r10): one row per payload with the frame
     walk, bit-reservoir accounting, scalefactor budgets and an integrity
     verdict (functions/mp3.mp3_structure) — the crawl-scale questions
@@ -1076,7 +1000,7 @@ def mp3_structure_table(df: DataFrame, payload_col: str = "payload",
                      0, 0, 0, 0, 0, 0)]
         return [(mid, *[s[c] for c in cols])]
 
-    return payload_map(df, one, MP3_STRUCT_SCHEMA, id_col, payload_col)
+    return payload_map(df, one, MP3_STRUCT_SCHEMA)
 
 
 WEBP_FRAME_SCHEMA = (
@@ -1085,8 +1009,7 @@ WEBP_FRAME_SCHEMA = (
 )
 
 
-def webp_frame_table(df: DataFrame, payload_col: str = "payload",
-                     id_col: str = "media_id") -> DataFrame:
+def webp_frame_table(df: DataFrame) -> DataFrame:
     """Animated-WebP frame extraction + per-frame pixel decode (r9): one
     row per ANMF frame (or per still image), with the frame geometry and
     duration from the 16-byte ANMF header and `pixel_md5` the digest of
@@ -1133,4 +1056,4 @@ def webp_frame_table(df: DataFrame, payload_col: str = "payload",
             rows.append((mid, -1, "error", None, None, None, None))
         return rows
 
-    return payload_map(df, one, WEBP_FRAME_SCHEMA, id_col, payload_col)
+    return payload_map(df, one, WEBP_FRAME_SCHEMA)

@@ -109,18 +109,11 @@ def _power_iteration(
     return x
 
 
-def pca_first_component(
-    df: DataFrame,
-    dim: int,
-    vec_col: str = "embedding",
-    scale: int = PCA_QSCALE,
-    rounds: int = PCA_ROUNDS,
-    vscale: int = PCA_VSCALE,
-) -> DataFrame:
+def pca_first_component(df: DataFrame, dim: int) -> DataFrame:
     """(d, mean_q, pc1_q): integer-lattice mean and first principal
     direction of the embedding column. One corpus pass (augmented gram),
     then exact-integer centering + power iteration on the d×d state."""
-    rows = augmented_gram(df, dim, vec_col, scale).collect()
+    rows = augmented_gram(df, dim, "embedding", PCA_QSCALE).collect()
     g = [[0] * (dim + 1) for _ in range(dim + 1)]
     for r in rows:
         g[r["di"]][r["dj"]] = r["g"]
@@ -133,7 +126,7 @@ def pca_first_component(
         [g[i][j] - int(math.floor(s[i] * s[j] / n)) for j in range(dim)]
         for i in range(dim)
     ]
-    pc1 = _power_iteration(cov, rounds, vscale)
+    pc1 = _power_iteration(cov, PCA_ROUNDS, PCA_VSCALE)
     spark = df.sparkSession
     return local_frame(
         spark,
@@ -142,27 +135,19 @@ def pca_first_component(
     )
 
 
-def pca_oracle_sql(
-    dim: int = 64,
-    table: str = "embeddings",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    scale: int = PCA_QSCALE,
-    rounds: int = PCA_ROUNDS,
-    vscale: int = PCA_VSCALE,
-) -> str:
+def pca_oracle_sql(dim: int = 64) -> str:
     """DuckDB transcription of `pca_first_component`, unrolled: the same
     augmented gram (lateral unnest pair join — fine at oracle scale),
-    floored centering, and `rounds` matvec/rescale CTE pairs. MATERIALIZED
+    floored centering, and PCA_ROUNDS matvec/rescale CTE pairs. MATERIALIZED
     throughout: each state is referenced more than once per round and
     DuckDB's default CTE inlining would re-evaluate the chain
     exponentially."""
     parts = [f"""WITH dims AS MATERIALIZED (
-  SELECT {id_col} AS rid, i - 1 AS d,
+  SELECT vec_id AS rid, i - 1 AS d,
          CASE WHEN i <= {dim}
-              THEN CAST(round(CAST({vec_col}[i] AS DOUBLE) * {scale}) AS BIGINT)
+              THEN CAST(round(CAST(embedding[i] AS DOUBLE) * {PCA_QSCALE}) AS BIGINT)
               ELSE 1 END AS q
-  FROM {table}, unnest(generate_series(1, {dim} + 1)) AS t(i)
+  FROM embeddings, unnest(generate_series(1, {dim} + 1)) AS t(i)
 ), gram AS MATERIALIZED (
   SELECT a.d AS di, b.d AS dj, CAST(sum(a.q * b.q) AS BIGINT) AS g
   FROM dims a JOIN dims b USING (rid) GROUP BY a.d, b.d
@@ -175,14 +160,14 @@ sums AS MATERIALIZED (
   FROM gram g JOIN sums sa ON sa.d = g.di JOIN sums sb ON sb.d = g.dj, nn
   WHERE g.di < {dim} AND g.dj < {dim}
 ), v0 AS MATERIALIZED (
-  SELECT d, CAST({vscale} AS BIGINT) AS x FROM sums
+  SELECT d, CAST({PCA_VSCALE} AS BIGINT) AS x FROM sums
 )"""]
-    for k in range(rounds):
+    for k in range(PCA_ROUNDS):
         parts.append(f""", y{k} AS MATERIALIZED (
   SELECT cov.di AS d, CAST(sum(cov.c * v.x) AS BIGINT) AS y
   FROM cov JOIN v{k} v ON cov.dj = v.d GROUP BY cov.di
 ), dv{k} AS MATERIALIZED (
-  SELECT greatest(1, CAST(max(abs(y)) AS BIGINT) // {vscale}) AS dd FROM y{k}
+  SELECT greatest(1, CAST(max(abs(y)) AS BIGINT) // {PCA_VSCALE}) AS dd FROM y{k}
 ), v{k + 1} AS MATERIALIZED (
   SELECT d, CASE WHEN y < 0 THEN -(abs(y) // dd) ELSE abs(y) // dd END AS x
   FROM y{k}, dv{k}
@@ -190,6 +175,6 @@ sums AS MATERIALIZED (
     parts.append(f"""
 SELECT s.d, CAST(floor(CAST(s.s AS DOUBLE) / nn.n) AS BIGINT) AS mean_q,
        v.x AS pc1_q
-FROM sums s JOIN v{rounds} v ON v.d = s.d, nn
+FROM sums s JOIN v{PCA_ROUNDS} v ON v.d = s.d, nn
 ORDER BY s.d""")
     return "".join(parts)

@@ -134,11 +134,7 @@ FROM pv GROUP BY c ORDER BY c
 """
 
 
-def fd_discovery(
-    df: DataFrame,
-    pairs: list[tuple[str, str]],
-    kinds: dict[str, str] | None = None,
-) -> DataFrame:
+def fd_discovery(df: DataFrame, pairs: list[tuple[str, str]]) -> DataFrame:
     """(det, dep, n_groups, n_violations, holds): does det -> dep hold
     functionally? A violation is a det-value whose rows carry more than
     one distinct dep-value — n_violations == 0 means the dependency (and

@@ -27,17 +27,13 @@ from pyspark.sql import functions as F
 
 from ndr_import_spark.operators.textstats import token_count, tokens
 
+# BM25 term-frequency saturation and length normalisation, shared by the
+# single-query and batch scorers.
+BM25_K1 = 1.2
+BM25_B = 0.75
 
-def bm25_topk(
-    docs: DataFrame,
-    terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-    k: int = 10,
-    salt_buckets: int = 16,
-) -> DataFrame:
+
+def bm25_topk(docs: DataFrame, terms: list[str], k: int = 10) -> DataFrame:
     """Top-k documents by BM25 score for the query `terms`.
 
     Returns (id, n_terms_hit, score) with score rounded to 6dp; ranking
@@ -55,19 +51,19 @@ def bm25_topk(
     # other corpus touch is a count-only scan for N (column-pruned, no
     # tokenisation) so empty documents still count toward N and avgdl.
     exploded = docs.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("_t")
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("_t")
     )
     # per_doc is consumed twice (corpus stats + scoring); the lazy
     # localCheckpoint materialises it once on first action and reuses the
     # stored partitions — same multi-consumer pattern as training_mix
-    per_doc = exploded.groupBy(id_col).agg(
+    per_doc = exploded.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("_dl"),
         *[
             F.sum(F.when(F.col("_t") == t, 1).otherwise(0)).alias(f"_tf{i}")
             for i, t in enumerate(lterms)
         ],
     ).localCheckpoint(eager=False)
-    n_total = docs.select(F.col(id_col)).agg(F.count(F.lit(1)).alias("_n"))
+    n_total = docs.select(F.col("doc_id")).agg(F.count(F.lit(1)).alias("_n"))
     # ONE auxiliary aggregate yields the token total (== sum of per-doc
     # dl; empty docs add 0) AND every term's document frequency
     aux = (
@@ -95,11 +91,11 @@ def bm25_topk(
         s = (
             idf
             * tf
-            * F.lit(k1 + 1.0)
+            * F.lit(BM25_K1 + 1.0)
             / (
                 tf
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("_dl") / F.col("_avgdl"))
+                + F.lit(BM25_K1)
+                * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("_dl") / F.col("_avgdl"))
             )
         )
         return F.when(F.col(f"_tf{i}") > 0, s).otherwise(F.lit(0.0))
@@ -113,23 +109,23 @@ def bm25_topk(
         joined.withColumn("n_terms_hit", hits.cast("int"))
         .filter(F.col("n_terms_hit") > 0)
         .select(
-            id_col, "n_terms_hit", F.round(total, 6).alias("score")
+            "doc_id", "n_terms_hit", F.round(total, 6).alias("score")
         )
     )
     # bounded two-phase top-k: per-salt partial rank, then rank the
-    # <= salt_buckets * k survivors (same shape as corpus.per_source_cap)
+    # <= 16 * k survivors (same shape as corpus.per_source_cap)
     salted = scored.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
+        "_salt", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(16))
     )
     w1 = Window.partitionBy("_salt").orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
+        F.col("score").desc(), F.col("doc_id").asc()
     )
     survivors = (
         salted.withColumn("_rn", F.row_number().over(w1))
         .filter(F.col("_rn") <= k)
         .drop("_rn", "_salt")
     )
-    w2 = Window.partitionBy().orderBy(F.col("score").desc(), F.col(id_col).asc())
+    w2 = Window.partitionBy().orderBy(F.col("score").desc(), F.col("doc_id").asc())
     return (
         survivors.withColumn("_rn", F.row_number().over(w2))
         .filter(F.col("_rn") <= k)
@@ -157,12 +153,7 @@ def positional_postings(
     return out
 
 
-def phrase_search(
-    df: DataFrame,
-    phrases: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def phrase_search(df: DataFrame, phrases: list[str]) -> DataFrame:
     """(phrase, n_docs, n_hits): exact-phrase occurrence counts via the
     classic positional-index join — term_i postings equijoined on
     (doc, first-term position) with `pos - i` realignment (Manning et al.
@@ -192,23 +183,23 @@ def phrase_search(
     # relative to the corpus): every per-phrase join chain re-reads this
     # frame, and without the checkpoint each branch would re-scan the
     # corpus — ~2 scans per phrase instead of 1 total.
-    post = positional_postings(df, sorted(vocab), id_col, text_col)
+    post = positional_postings(df, sorted(vocab), "doc_id", "text")
     post = post.localCheckpoint(eager=True)
     per_phrase = []
     for phrase, ts in parsed:
         cur = (
             post.filter(F.col("term") == ts[0])
-            .select(id_col, F.col("pos").alias("p0"))
+            .select("doc_id", F.col("pos").alias("p0"))
         )
         for i, t in enumerate(ts[1:], start=1):
             nxt = post.filter(F.col("term") == t).select(
-                id_col, (F.col("pos") - i).alias("p0")
+                "doc_id", (F.col("pos") - i).alias("p0")
             )
-            cur = cur.join(nxt, [id_col, "p0"])
+            cur = cur.join(nxt, ["doc_id", "p0"])
         per_phrase.append(
             cur.agg(
                 F.lit(phrase).alias("phrase"),
-                F.count_distinct(F.col(id_col)).alias("n_docs"),
+                F.count_distinct(F.col("doc_id")).alias("n_docs"),
                 F.count(F.lit(1)).alias("n_hits"),
             ).filter(F.col("n_hits") > 0)
         )
@@ -218,17 +209,15 @@ def phrase_search(
     return out
 
 
-def phrase_search_oracle_sql(
-    phrases: list[str], table: str = "documents"
-) -> str:
+def phrase_search_oracle_sql(phrases: list[str]) -> str:
     """DuckDB positional-join transcription of `phrase_search`."""
     import json
 
-    post = rf"""WITH w AS MATERIALIZED (
+    post = r"""WITH w AS MATERIALIZED (
   SELECT doc_id,
          list_filter(string_split_regex(trim(lower(text)), '\s+'),
                      x -> x <> '') AS wds
-  FROM {table}
+  FROM documents
 ), post AS MATERIALIZED (
   SELECT doc_id, i AS pos, wds[i] AS term
   FROM w, unnest(generate_series(1, len(wds))) AS t(i)
@@ -260,8 +249,6 @@ def bm25_batch_scores(
     queries: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """(query_id, doc_id, score): BM25 for a BATCH of queries at once —
     the realistic retrieval-eval shape. `queries` is a (query_id, term)
@@ -307,8 +294,12 @@ def bm25_batch_scores(
         + (F.col("_n") - F.col("_df") + F.lit(0.5)) / (F.col("_df") + F.lit(0.5))
     )
     s = (
-        idf * tfd * F.lit(k1 + 1.0)
-        / (tfd + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("_dl") / F.col("_avgdl")))
+        idf * tfd * F.lit(BM25_K1 + 1.0)
+        / (
+            tfd
+            + F.lit(BM25_K1)
+            * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("_dl") / F.col("_avgdl"))
+        )
     )
     return (
         scored.groupBy("query_id", id_col)
@@ -320,8 +311,6 @@ def bm25_self_retrieval(
     docs: DataFrame,
     n_queries: int = 8,
     n_terms: int = 6,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(query_id, self_rank, rr): known-item retrieval sanity — each query
     is a document's own first `n_terms` tokens; the metric is the rank of
@@ -330,21 +319,21 @@ def bm25_self_retrieval(
     self_rank at or near 1; drift flags tokenisation or scoring bugs the
     absolute scores would hide."""
     q = (
-        docs.filter(F.col(id_col) < n_queries)
+        docs.filter(F.col("doc_id") < n_queries)
         .select(
-            F.col(id_col).alias("query_id"),
+            F.col("doc_id").alias("query_id"),
             F.explode(
-                F.slice(tokens(F.col(text_col)), 1, n_terms)
+                F.slice(tokens(F.col("text")), 1, n_terms)
             ).alias("term"),
         )
     )
-    scored = bm25_batch_scores(docs, q, id_col, text_col)
+    scored = bm25_batch_scores(docs, q, "doc_id", "text")
     w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
+        F.col("score").desc(), F.col("doc_id").asc()
     )
     return (
         scored.withColumn("self_rank", F.row_number().over(w))
-        .filter(F.col(id_col) == F.col("query_id"))
+        .filter(F.col("doc_id") == F.col("query_id"))
         .select(
             "query_id",
             "self_rank",
@@ -357,15 +346,13 @@ def rrf_fuse(
     a: DataFrame,
     b: DataFrame,
     id_col: str = "doc_id",
-    rank_a_col: str = "rank",
-    rank_b_col: str = "rank",
-    k_const: int = 60,
     topk: int = 10,
 ) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009) of two ranked lists —
     the standard hybrid-search combiner (BM25 lexical + embedding
     cosine): score(d) = Σ 1/(k + rank_i(d)) over the lists that ranked
-    d, k=60 per the paper. Full-outer join on the item id (an item found
+    d, k=60 per the paper; both lists rank in a ``rank`` column.
+    Full-outer join on the item id (an item found
     by only one ranker still scores), sum with missing-list terms as 0,
     deterministic (score 9dp DESC, id) cut to `topk`.
 
@@ -374,12 +361,12 @@ def rrf_fuse(
     O(k), never O(corpus).
 
     Returns (id, rank_a, rank_b, rrf_score, fused_rank)."""
-    fa = a.select(F.col(id_col).alias("_id"), F.col(rank_a_col).alias("rank_a"))
-    fb = b.select(F.col(id_col).alias("_id"), F.col(rank_b_col).alias("rank_b"))
+    fa = a.select(F.col(id_col).alias("_id"), F.col("rank").alias("rank_a"))
+    fb = b.select(F.col(id_col).alias("_id"), F.col("rank").alias("rank_b"))
     fused = fa.join(fb, "_id", "full_outer")
     score = F.round(
-        F.coalesce(F.lit(1.0) / (F.lit(k_const) + F.col("rank_a")), F.lit(0.0))
-        + F.coalesce(F.lit(1.0) / (F.lit(k_const) + F.col("rank_b")), F.lit(0.0)),
+        F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("rank_a")), F.lit(0.0))
+        + F.coalesce(F.lit(1.0) / (F.lit(60) + F.col("rank_b")), F.lit(0.0)),
         9,
     )
     w = Window.orderBy(F.col("rrf_score").desc(), F.col("_id"))

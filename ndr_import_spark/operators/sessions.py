@@ -53,21 +53,15 @@ def sessionize(
     ).drop("_new")
 
 
-def session_stats(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_col: str = "event_id",
-    gap_seconds: int = 1800,
-) -> DataFrame:
+def session_stats(df: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     """Per-session aggregates: event count, span, value sum.
 
     Returns (user, session_no, n_events, start_ts, end_ts, duration_s)."""
-    s = sessionize(df, user_col, ts_col, order_col, gap_seconds)
-    es = epoch_seconds(F.col(ts_col))
-    return s.groupBy(user_col, "session_no").agg(
+    s = sessionize(df, "user_id", "ts", "event_id", gap_seconds)
+    es = epoch_seconds(F.col("ts"))
+    return s.groupBy("user_id", "session_no").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.min(ts_col).alias("start_ts"),
-        F.max(ts_col).alias("end_ts"),
+        F.min("ts").alias("start_ts"),
+        F.max("ts").alias("end_ts"),
         (F.max(es) - F.min(es)).alias("duration_s"),
     )

@@ -51,41 +51,25 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
+def cosine_topk(df: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Brute-force cosine top-k: broadcast the (small) query set against the
     corpus, window top-k per query. Deterministic tie-break on corpus id.
 
     Returns (query_id, vec_id, cos, rank)."""
     joined = df.crossJoin(F.broadcast(queries))
     scored = joined.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 5).alias("cos"),
-    ).filter(F.col(query_id_col) != F.col(id_col))
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
+        F.col("query_id"),
+        F.col("vec_id"),
+        F.round(cosine(F.col("embedding"), F.col("query_vec")), 5).alias("cos"),
+    ).filter(F.col("query_id") != F.col("vec_id"))
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
 
 
-def quantized_ip_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    qvec_col: str = "qvec",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_qvec_col: str = "query_qvec",
-) -> DataFrame:
+def quantized_ip_topk(df: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Inner-product top-k in the INT8-QUANTIZED domain: the search path
     that makes `quantize_embeddings` pay off — integer dot products over
     4× smaller vectors, exact integer arithmetic (no float accumulation
@@ -98,18 +82,18 @@ def quantized_ip_topk(
     joined = df.crossJoin(F.broadcast(queries))
     dot = F.aggregate(
         F.zip_with(
-            F.col(qvec_col),
-            F.col(query_qvec_col),
+            F.col("qvec"),
+            F.col("query_qvec"),
             lambda a, b: (a * b).cast("long"),
         ),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
     scored = joined.select(
-        F.col(query_id_col), F.col(id_col), dot.alias("int_dot")
-    ).filter(F.col(query_id_col) != F.col(id_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("int_dot").desc(), F.col(id_col)
+        F.col("query_id"), F.col("vec_id"), dot.alias("int_dot")
+    ).filter(F.col("query_id") != F.col("vec_id"))
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("int_dot").desc(), F.col("vec_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -192,12 +176,7 @@ def lsh_bucket_candidates(
 # IVF-style coarse quantisation
 # ---------------------------------------------------------------------------
 
-def ivf_assign(
-    df: DataFrame,
-    n_cells: int = 16,
-    dim: int = 64,
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_assign(df: DataFrame, n_cells: int = 16, dim: int = 64) -> DataFrame:
     """Assign each vector to its nearest deterministic pseudo-centroid.
 
     Centroid c's components are md5-derived values in [-1,1] — a stand-in
@@ -208,7 +187,7 @@ def ivf_assign(
     Compiled as a scores array + array_position argmax (ties → lowest cell
     id); a when-chain fold would nest every prior score into the next
     comparison (exponential expression growth)."""
-    return _assign_to_centroids(df, seed_centroids(n_cells, dim), vec_col)
+    return _assign_to_centroids(df, seed_centroids(n_cells, dim), "embedding")
 
 
 def _md5_unit(s: str) -> float:
@@ -249,8 +228,6 @@ def ivf_train_centroids(
     n_cells: int = 16,
     dim: int = 64,
     iters: int = 1,
-    vec_col: str = "embedding",
-    round_dp: int = 6,
 ) -> list[list[float]]:
     """Deterministic Lloyd iterations as a Spark job → centroid literals.
 
@@ -258,17 +235,19 @@ def ivf_train_centroids(
     each centroid as the per-dimension mean of its members (posexplode →
     (cell, dim) partial-aggregated mean: ONE narrow explode + one
     map-side-combined shuffle per round; only n_cells×dim tiny rows ever
-    reach the driver). Means are rounded to `round_dp` decimals so the
+    reach the driver). Means are rounded to 6 decimals so the
     trained literals are bit-reproducible across engines (a raw float avg
     varies in the last ulp with partition order); empty cells keep their
     previous centroid. Seeds are the md5-derived pseudo-centroids."""
     centroids = seed_centroids(n_cells, dim)
     for _ in range(iters):
-        assigned = _assign_to_centroids(df, centroids, vec_col)
+        assigned = _assign_to_centroids(df, centroids, "embedding")
         rows = (
-            assigned.select("ivf_cell", F.posexplode(F.col(vec_col)).alias("i", "x"))
+            assigned.select(
+                "ivf_cell", F.posexplode(F.col("embedding")).alias("i", "x")
+            )
             .groupBy("ivf_cell", "i")
-            .agg(F.round(F.avg("x"), round_dp).alias("w"))
+            .agg(F.round(F.avg("x"), 6).alias("w"))
             .collect()
         )
         new = [list(c) for c in centroids]
@@ -278,11 +257,7 @@ def ivf_train_centroids(
     return centroids
 
 
-def quantize_embeddings(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def quantize_embeddings(df: DataFrame) -> DataFrame:
     """Per-vector symmetric int8 scalar quantization: ``q = round(127 *
     v / max|v|)`` plus the per-row scale — the standard 4x storage/IO cut
     for an ANN corpus (at 100 TB the float32 -> int8 squeeze is usually
@@ -299,10 +274,10 @@ def quantize_embeddings(
     recon_err 0.0 — the divide uses a guarded divisor of 1.0 so no NULL
     ever propagates into downstream ANN stages (dequantization q*scale/127
     is exact either way)."""
-    amax = F.array_max(F.transform(F.col(vec_col), F.abs))
+    amax = F.array_max(F.transform(F.col("embedding"), F.abs))
     base = df.select(
-        id_col,
-        F.col(vec_col).alias("_v"),
+        "vec_id",
+        F.col("embedding").alias("_v"),
         F.explode(F.array(F.coalesce(amax, F.lit(0.0)))).alias("_scale"),
     )
     safe = F.when(F.col("_scale") > 0, F.col("_scale")).otherwise(F.lit(1.0))
@@ -310,7 +285,7 @@ def quantize_embeddings(
         F.col("_v"), lambda x: F.round(x * 127.0 / safe).cast("int")
     )
     base = base.select(
-        id_col, "_v", "_scale", F.explode(F.array(q)).alias("_q")
+        "vec_id", "_v", "_scale", F.explode(F.array(q)).alias("_q")
     )
     err2 = F.aggregate(
         F.zip_with(
@@ -323,7 +298,7 @@ def quantize_embeddings(
         lambda acc, e: acc + e,
     )
     return base.select(
-        id_col,
+        "vec_id",
         F.col("_q").alias("qvec"),
         F.col("_scale").alias("scale"),
         F.sqrt(err2).alias("recon_err"),
@@ -335,10 +310,6 @@ def ivf_probe_topk(
     queries: DataFrame,
     centroids: list[list[float]],
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """IVF probe path: top-k cosine neighbours searching ONLY the query's
     cell (nprobe=1) — the 100 TB ANN mechanism, where the cell equi-join
@@ -348,33 +319,29 @@ def ivf_probe_topk(
 
     Returns (query_id, vec_id, cos, rank) with the same ranking contract
     as cosine_topk (desc cosine, id tie-break)."""
-    corpus = _assign_to_centroids(df, centroids, vec_col)
+    corpus = _assign_to_centroids(df, centroids, "embedding")
     probes = _assign_to_centroids(
-        queries.withColumnRenamed(query_vec_col, "_qv"), centroids, "_qv"
+        queries.withColumnRenamed("query_vec", "_qv"), centroids, "_qv"
     )
     joined = corpus.join(
-        F.broadcast(probes.select(query_id_col, "_qv", "ivf_cell")), "ivf_cell"
-    ).filter(F.col(query_id_col) != F.col(id_col))
+        F.broadcast(probes.select("query_id", "_qv", "ivf_cell")), "ivf_cell"
+    ).filter(F.col("query_id") != F.col("vec_id"))
     # rank on the ROUNDED cosine (like cosine_topk): near-ties then break
     # deterministically on id in any engine, instead of on last-ulp noise
     scored = joined.select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col("_qv")), 5).alias("cos"),
+        F.col("query_id"),
+        F.col("vec_id"),
+        F.round(cosine(F.col("embedding"), F.col("_qv")), 5).alias("cos"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cos").desc(), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cos", "rank")
+        .select("query_id", "vec_id", "cos", "rank")
     )
 
 
-def embedding_dim_stats(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    round_dp: int = 7,
-) -> DataFrame:
+def embedding_dim_stats(df: DataFrame) -> DataFrame:
     """Per-dimension profile of an embedding column — n, mean, sample std,
     min, max for every coordinate — the normalisation/whitening-design
     pass run before index build or quantisation.
@@ -383,7 +350,7 @@ def embedding_dim_stats(
     aggregate keyed by dimension (dim cardinality = vector width, so the
     shuffle is width-sized regardless of corpus size; no skew possible —
     every key holds exactly n rows). Mean/std come from EXACT decimal
-    power sums of values rounded to `round_dp` (float32 inputs carry <7
+    power sums of values rounded to 7 decimals (float32 inputs carry <7
     significant decimal digits, so the rounding is below input noise) and
     collapse to doubles only at the end — the same order-independent
     arithmetic as the moment aggregates, bit-stable across engines and
@@ -399,7 +366,7 @@ def embedding_dim_stats(
     # group and the job fails loudly (assert_true) instead of letting
     # nulled values drop out of the sums while still counting toward n,
     # which would silently bias the moments.
-    rounded = F.round(v, round_dp).cast("decimal(15,7)")
+    rounded = F.round(v, 7).cast("decimal(15,7)")
     overflow_guard = F.assert_true(
         F.col("_n_overflow") == 0,
         F.lit(
@@ -409,14 +376,14 @@ def embedding_dim_stats(
         ),
     )
     return (
-        df.select(F.posexplode(F.col(vec_col)).alias("dim", "_v"))
+        df.select(F.posexplode(F.col("embedding")).alias("dim", "_v"))
         .groupBy("dim")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(rounded).alias("_s1"),
             F.sum((rounded * rounded).cast("decimal(38,14)")).alias("_s2"),
-            F.round(F.min(v), round_dp).alias("min_v"),
-            F.round(F.max(v), round_dp).alias("max_v"),
+            F.round(F.min(v), 7).alias("min_v"),
+            F.round(F.max(v), 7).alias("max_v"),
             F.sum(
                 F.when(v.isNotNull() & rounded.isNull(), 1).otherwise(0)
             ).alias("_n_overflow"),

@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 
 # 2^60: hashes are 15 md5 nibbles = 60 uniform bits
 _HASH_SPACE = float(1 << 60)
+HLL_P = 12  # HyperLogLog index bits: 2^12 registers
+LOG2_HIST_SCALE = 100  # log2_histogram value units per 1.0 (batch and stream)
 
 
 def kmv_distinct(
@@ -37,7 +39,6 @@ def kmv_distinct(
     group_cols: list[str],
     k: int = 32,
     salt_buckets: int = 16,
-    prefix: str = "kmv:",
 ) -> DataFrame:
     """Per group: exact distinct count alongside the KMV estimate, its
     k-th minimum hash and the sketch size actually used (min(k, distinct)).
@@ -50,7 +51,7 @@ def kmv_distinct(
     """
     if k < 2:
         raise ValueError("kmv_distinct requires k >= 2")
-    hash60 = F.conv(F.substring(F.md5(F.concat(F.lit(prefix), F.col(key_col).cast("string"))), 1, 15), 16, 10).cast("long")
+    hash60 = F.conv(F.substring(F.md5(F.concat(F.lit("kmv:"), F.col(key_col).cast("string"))), 1, 15), 16, 10).cast("long")
     pairs = (
         df.select(*group_cols, F.col(key_col))
         .distinct()
@@ -113,7 +114,6 @@ def cms_build(
     key_col: str,
     depth: int = 4,
     width: int = 256,
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Count-Min sketch (Cormode & Muthukrishnan 2005) over a key stream:
     (row, col, cnt) cell frame, depth×width cells total.
@@ -127,7 +127,7 @@ def cms_build(
     partition regardless of corpus size)."""
     rows = df.select(
         F.col(key_col).alias("_k"),
-        (F.col(weight_col) if weight_col else F.lit(1)).alias("_w"),
+        F.lit(1).alias("_w"),
         F.explode(F.array(*[F.lit(r) for r in range(depth)])).alias("r"),
     )
     col = _cms_cell(F.col("r"), F.col("_k"), width)
@@ -160,14 +160,7 @@ def cms_estimate(
     )
 
 
-def kmv_jaccard(
-    df: DataFrame,
-    key_col: str,
-    split_col: str,
-    k: int = 256,
-    salt_buckets: int = 16,
-    prefix: str = "kmv:",
-) -> DataFrame:
+def kmv_jaccard(df: DataFrame, key_col: str, split_col: str, k: int = 256) -> DataFrame:
     """Pairwise Jaccard similarity between the key-sets of every pair of
     splits, estimated from portable KMV sketches — the corpus-overlap
     probe a training pipeline runs between crawl snapshots / data splits
@@ -183,7 +176,7 @@ def kmv_jaccard(
 
     Plan shape at 100 TB: one dedup shuffle of (split, hash) pairs, the
     bounded two-phase per-split k-min (no reducer ranks more than
-    ~1/salt_buckets of a split), then all pair arithmetic happens on
+    ~1/16 of a split), then all pair arithmetic happens on
     sketches of <= k rows per split — tiny, broadcast-joinable.
 
     Returns one row per unordered split pair:
@@ -193,7 +186,7 @@ def kmv_jaccard(
         raise ValueError("kmv_jaccard requires k >= 2")
     hash60 = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(prefix), F.col(key_col).cast("string"))), 1, 15
+            F.md5(F.concat(F.lit("kmv:"), F.col(key_col).cast("string"))), 1, 15
         ),
         16,
         10,
@@ -219,7 +212,7 @@ def kmv_jaccard(
         .localCheckpoint(eager=False)
     )
     # bounded two-phase k-min per split (same shape as kmv_distinct)
-    salted = pairs.withColumn("_salt", F.pmod(F.col("_h"), F.lit(salt_buckets)))
+    salted = pairs.withColumn("_salt", F.pmod(F.col("_h"), F.lit(16)))
     w1 = Window.partitionBy("_split", "_salt").orderBy("_h")
     w2 = Window.partitionBy("_split").orderBy("_h")
     sketch = (
@@ -312,14 +305,9 @@ def kmv_jaccard(
     )
 
 
-def hll_registers(
-    df: DataFrame,
-    key,
-    group_cols: list[str] | None = None,
-    p: int = 12,
-) -> DataFrame:
+def hll_registers(df: DataFrame, key, group_cols: list[str] | None = None) -> DataFrame:
     """Portable HyperLogLog registers (Flajolet et al. 2007) over the
-    60-bit md5 hash: index = top `p` hash bits, rho = leading-zero count
+    60-bit md5 hash: index = top p = HLL_P hash bits, rho = leading-zero count
     of the remaining 60-p bits plus one, register = max(rho).
 
     Same portability argument as KMV above: Spark's built-in HLL++ is
@@ -338,7 +326,7 @@ def hll_registers(
     df = df.where(key.isNotNull())  # a null key would register a null
     # index row that hll_estimate counts as occupied
     h = md5_long(key)
-    w_bits = 60 - p
+    w_bits = 60 - HLL_P
     idx = F.shiftright(h, w_bits).alias("_idx")
     w = h.bitwiseAND(F.lit((1 << w_bits) - 1))
     rho = (
@@ -356,7 +344,7 @@ def hll_registers(
 def hll_estimate(
     registers: DataFrame,
     group_cols: list[str] | None = None,
-    p: int = 12,
+    p: int = HLL_P,
 ) -> DataFrame:
     """Cardinality estimate from `hll_registers` output, with the
     standard small-range correction (linear counting when E <= 2.5m and
@@ -392,15 +380,9 @@ def hll_estimate(
     )
 
 
-def bloom_build(
-    df: DataFrame,
-    key,
-    m_bits: int = 16384,
-    k: int = 4,
-    salt: str = "bloom",
-) -> DataFrame:
+def bloom_build(df: DataFrame, key, m_bits: int = 16384, k: int = 4) -> DataFrame:
     """Portable Bloom filter (Bloom 1970) over the md5 hash family:
-    each key sets `k` bit positions pos_j = md5('<salt><j>:'||key) mod m;
+    each key sets `k` bit positions pos_j = md5('bloom<j>:'||key) mod m;
     the filter materialises as (word_idx, word) BIGINT rows of 63 bits
     each (bit 63 avoided so the words stay positive on engines whose
     ``<<`` overflows signed at 63).
@@ -412,13 +394,13 @@ def bloom_build(
     Plan shape: one map-side-combinable ``bit_or`` groupBy over
     ceil(m/63) word rows — the filter frame is BOUNDED by m, broadcasts
     by construction, and merges with any other filter of the same
-    (m, k, salt) by a further bit_or (union = OR is the Bloom law)."""
+    (m, k) by a further bit_or (union = OR is the Bloom law)."""
     from ndr_import_spark.operators.dedup import md5_long
 
     m = int(m_bits)
     positions = F.array(
         *[
-            (md5_long(F.concat(F.lit(f"{salt}{j}:"), key)) % m).alias(
+            (md5_long(F.concat(F.lit(f"bloom{j}:"), key)) % m).alias(
                 f"_p{j}"
             )
             for j in range(int(k))
@@ -440,10 +422,8 @@ def bloom_probe(
     df: DataFrame,
     bloom: DataFrame,
     key,
-    id_col: str = "k",
     m_bits: int = 16384,
     k: int = 4,
-    salt: str = "bloom",
 ) -> DataFrame:
     """(id, maybe_member) — the standard one-sided Bloom test: True may
     be a false positive (rate ~(1-e^{-kn/m})^k), False is certain.
@@ -457,19 +437,19 @@ def bloom_probe(
     m = int(m_bits)
     positions = F.array(
         *[
-            (md5_long(F.concat(F.lit(f"{salt}{j}:"), key)) % m)
+            (md5_long(F.concat(F.lit(f"bloom{j}:"), key)) % m)
             for j in range(int(k))
         ]
     )
-    pos = df.select(key.alias(id_col), F.explode(positions).alias("_pos"))
+    pos = df.select(key.alias("k"), F.explode(positions).alias("_pos"))
     probe = pos.select(
-        id_col,
+        "k",
         F.expr("_pos div 63").alias("word_idx"),
         F.expr("shiftleft(CAST(1 AS BIGINT), CAST(_pos % 63 AS INT))")
         .alias("_b"),
     )
     joined = probe.join(F.broadcast(bloom), "word_idx", "left").select(
-        id_col,
+        "k",
         (
             F.coalesce(F.col("word"), F.lit(0)).bitwiseAND(F.col("_b")) != 0
         ).cast("int").alias("_hit"),
@@ -478,16 +458,15 @@ def bloom_probe(
     # count (sum 2k != k -> FALSE NEGATIVE, violating the one-sided
     # contract) and two j-hashes colliding onto one bit would likewise
     # miscount; 'every row hit' is duplication- and collision-proof
-    return joined.groupBy(id_col).agg(
+    return joined.groupBy("k").agg(
         (F.min("_hit") == 1).alias("maybe_member")
     )
 
 
-def log2_histogram(
-    df: DataFrame, value_col: str, scale: int = 100
-) -> DataFrame:
+def log2_histogram(df: DataFrame, value_col: str) -> DataFrame:
     """Mergeable power-of-two histogram sketch over a positive numeric
-    column (r8): values quantise to integer units (floor(value*scale) —
+    column (r8): values quantise to integer units
+    (floor(value*LOG2_HIST_SCALE) —
     floor of the identical IEEE double, so every engine bins
     identically; no float log anywhere), the bin is the unit count's
     BIT LENGTH (the length_bucket trick: conv to base-2 + string
@@ -504,7 +483,7 @@ def log2_histogram(
     64-bit two's complement -> bin 64) and other engines' bin()
     ('-101' -> length 4), breaking the documented bin-for-bin
     mergeability across engines."""
-    units = F.floor(F.col(value_col) * scale).cast("long")
+    units = F.floor(F.col(value_col) * LOG2_HIST_SCALE).cast("long")
     bins = df.select(units.alias("_u")).where(F.col("_u") >= 1).select(
         F.length(F.conv(F.col("_u").cast("string"), 10, 2)).alias("bin")
     )
@@ -523,8 +502,7 @@ def log2_histogram(
 
 
 def histogram_quantiles(
-    hist: DataFrame, qs: tuple[float, ...] = (0.5, 0.9, 0.99),
-    scale: int = 100,
+    hist: DataFrame, qs: tuple[float, ...] = (0.5, 0.9, 0.99)
 ) -> DataFrame:
     """Quantile estimates from a log2_histogram sketch: for each q the
     smallest bin whose cumulative count reaches ceil(q*N); the estimate
@@ -554,7 +532,7 @@ def histogram_quantiles(
             .select(
                 F.lit(q).alias("q"),
                 F.col("_n").alias("n"),
-                (F.col("hi_unit") / scale).alias("est_value"),
+                (F.col("hi_unit") / LOG2_HIST_SCALE).alias("est_value"),
             )
         )
     out = parts[0]

@@ -48,7 +48,6 @@ def salted_agg(
     keys: Sequence[str],
     aggs: dict[str, tuple[str, str]],
     salt_buckets: int = 32,
-    salt_col: str = "_salt",
     salt: Column | None = None,
 ) -> DataFrame:
     """Two-phase aggregation for skewed group keys.
@@ -71,8 +70,8 @@ def salted_agg(
     if salt is None:
         salt = _default_salt(df, salt_buckets)
     phase1 = (
-        df.withColumn(salt_col, salt)
-        .groupBy(*keys, salt_col)
+        df.withColumn("_salt", salt)
+        .groupBy(*keys, "_salt")
         .agg(*[firsts[fn](src).alias(name) for name, (src, fn) in aggs.items()])
     )
     return phase1.groupBy(*keys).agg(
@@ -86,7 +85,6 @@ def salted_join(
     on: Sequence[str],
     salt_buckets: int = 16,
     how: str = "inner",
-    salt: Column | None = None,
 ) -> DataFrame:
     """Equi-join resilient to hot keys on the (large) `left` side.
 
@@ -98,14 +96,12 @@ def salted_join(
 
     Use when the right side is too large to broadcast but small enough to
     replicate n-fold; `how` supports inner/left joins (semantics preserved
-    because every left row matches exactly one replica salt). `salt`
-    overrides the default whole-row hash (see `_default_salt` for its
-    duplicate-row limitation)."""
+    because every left row matches exactly one replica salt). The salt
+    is a whole-row hash (see `_default_salt` for its duplicate-row
+    limitation)."""
     if how not in ("inner", "left", "left_outer"):
         raise ValueError(f"salted_join supports inner/left joins, got {how!r}")
-    if salt is None:
-        salt = _default_salt(left, salt_buckets)
-    lsalted = left.withColumn("_salt", salt)
+    lsalted = left.withColumn("_salt", _default_salt(left, salt_buckets))
     rsalted = right.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
     )

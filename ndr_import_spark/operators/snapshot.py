@@ -19,25 +19,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Per-document change status between two corpus snapshots:
     'added' (only in new), 'removed' (only in old), 'changed' (both, but
     content hash differs), 'unchanged'. Returns (id, status)."""
     # presence comes from explicit side markers, NOT hash nullability —
     # a present row whose text is NULL must not masquerade as added/removed
     o = old.select(
-        F.col(id_col).alias("_id"),
-        F.md5(F.col(text_col)).alias("_ho"),
+        F.col("doc_id").alias("_id"),
+        F.md5(F.col("text")).alias("_ho"),
         F.lit(1).alias("_po"),
     )
     n = new.select(
-        F.col(id_col).alias("_id"),
-        F.md5(F.col(text_col)).alias("_hn"),
+        F.col("doc_id").alias("_id"),
+        F.md5(F.col("text")).alias("_hn"),
         F.lit(1).alias("_pn"),
     )
     joined = o.join(n, "_id", "full")
@@ -49,13 +44,12 @@ def snapshot_diff(
         .when(~F.col("_ho").eqNullSafe(F.col("_hn")), F.lit("changed"))
         .otherwise(F.lit("unchanged"))
     )
-    return joined.select(F.col("_id").alias(id_col), status.alias("status"))
+    return joined.select(F.col("_id").alias("doc_id"), status.alias("status"))
 
 
 def delete_cascade(
     deletes: DataFrame,
     artifacts: list[tuple[str, DataFrame, str]],
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Right-to-erasure impact report: for every derived artifact, how
     many rows reference a deleted source document and must go.
@@ -75,7 +69,7 @@ def delete_cascade(
     if not artifacts:
         raise ValueError("delete_cascade requires at least one artifact")
     d = (
-        deletes.select(F.col(id_col).alias("_del"))
+        deletes.select(F.col("doc_id").alias("_del"))
         .distinct()
         .withColumn("_hit", F.lit(1))
         # one artifact join per entry re-plans the delete list's whole

@@ -188,18 +188,22 @@ def md5_long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def rolling_fingerprint(text: Column, window: int = 16) -> Column:
+FINGERPRINT_WINDOW = 16  # chars per winnowing chunk, Column and frame forms
+
+
+def rolling_fingerprint(text: Column) -> Column:
     """Winnowing-style fingerprint: 60-bit md5 hash over every
-    `window`-char chunk of the normalised text, keep the minimum — robust
-    to local edits.
+    FINGERPRINT_WINDOW-char chunk (half-window stride) of the normalised
+    text, keep the minimum — robust to local edits.
 
     Column form (HOF ``transform``, interpreted) — fine for narrow one-off
     use; batch pipelines should call :func:`rolling_fingerprint_frame`,
     which computes identical values through codegen + a combinable MIN."""
     norm = normalize_text(text)
     n = F.length(norm)
-    starts = F.sequence(F.lit(1), F.greatest(n - window + 1, F.lit(1)), F.lit(window // 2))
-    chunk_hashes = F.transform(starts, lambda i: md5_long(F.substring(norm, i, window)))
+    w = FINGERPRINT_WINDOW
+    starts = F.sequence(F.lit(1), F.greatest(n - w + 1, F.lit(1)), F.lit(w // 2))
+    chunk_hashes = F.transform(starts, lambda i: md5_long(F.substring(norm, i, w)))
     return F.array_min(chunk_hashes)
 
 
@@ -207,8 +211,7 @@ def rolling_fingerprint_frame(
     df: DataFrame,
     id_cols: list[str],
     text_col: str = "text",
-    window: int = 16,
-    fp_col: str = "fp",
+    window: int = FINGERPRINT_WINDOW,
 ) -> DataFrame:
     """(id_cols…, fp) frame of winnowing fingerprints — the scale path.
 
@@ -238,12 +241,12 @@ def rolling_fingerprint_frame(
             F.substring(F.col("_norm"), F.col("_i"), window)
         ).alias("_ch"),
     )
-    return hashed.groupBy(*id_cols).agg(F.min("_ch").alias(fp_col))
+    return hashed.groupBy(*id_cols).agg(F.min("_ch").alias("fp"))
 
 
-def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
+def text_profile(df: DataFrame) -> DataFrame:
     """One-pass profile: all stats as columns."""
-    t = F.col(text_col)
+    t = F.col("text")
     return df.select(
         "*",
         token_count(t).alias("n_tokens"),
@@ -284,9 +287,7 @@ def alpha_word_frac(text: Column) -> Column:
     return F.when(n_tok > 0, hits / n_tok).otherwise(F.lit(0.0))
 
 
-def gopher_stats_frame(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def gopher_stats_frame(df: DataFrame) -> DataFrame:
     """Gopher-style repetition/quality signal bundle, one row per document:
 
     ``n_words``, ``mean_word_len``, ``alpha_word_frac`` (per-row codegen
@@ -309,14 +310,14 @@ def gopher_stats_frame(
     Runs Spark jobs while the DataFrame is built: it goes through
     `spread_rows`, whose partition-count probe executes every shuffle stage
     upstream of the input under AQE."""
-    t = F.col(text_col)
+    t = F.col("text")
     wds = tokens(t)
     # spread the scan ahead of tokenisation + the gram explode (the
     # pipeline's CPU hot spot — measured as a 1.4 s single task on a
     # one-row-group input); no-op when the source is already parallel
-    df = spread_rows(df.select(id_col, text_col))
+    df = spread_rows(df.select("doc_id", "text"))
     base = df.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         wds.alias("_wds"),
         token_count(t).alias("n_words"),
         F.round(mean_word_length(t), 5).alias("mean_word_len"),
@@ -415,7 +416,7 @@ def gopher_stats_frame(
     for n, mx in GOPHER_DUP_NGRAM_MAX_FRAC.items():
         passed = passed & (F.col(f"dup_{n}gram_frac") <= mx)
     return joined.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         "n_words",
         "mean_word_len",
         "alpha_word_frac",
@@ -425,9 +426,7 @@ def gopher_stats_frame(
     )
 
 
-def zipf_fit_frame(
-    df: DataFrame, group_col: str = "lang", text_col: str = "text"
-) -> DataFrame:
+def zipf_fit_frame(df: DataFrame) -> DataFrame:
     """Per-group Zipf rank-frequency fit: OLS slope/intercept of
     ln(freq) on ln(rank) over the token frequency table (Zipf 1949;
     slope ≈ -1 for natural language — a corpus whose slope is far off is
@@ -446,8 +445,8 @@ def zipf_fit_frame(
     from pyspark.sql import Window
 
     toks = df.select(
-        F.col(group_col).alias("_g"),
-        F.explode(tokens(F.col(text_col))).alias("_w"),
+        F.col("lang").alias("_g"),
+        F.explode(tokens(F.col("text"))).alias("_w"),
     )
     freqs = toks.groupBy("_g", "_w").agg(F.count("*").alias("_f"))
     w = Window.partitionBy("_g").orderBy(F.desc("_f"), F.asc("_w"))
@@ -477,7 +476,7 @@ def zipf_fit_frame(
     slope = (n * F.col("_sxy") - F.col("_sx") * F.col("_sy")) / denom
     intercept = (F.col("_sy") - slope * F.col("_sx")) / n
     return agg.select(
-        F.col("_g").alias(group_col),
+        F.col("_g").alias("lang"),
         F.col("_n").alias("vocab"),
         "total_tokens",
         F.when(denom != 0, F.round(slope, 6)).alias("zipf_slope"),
@@ -497,11 +496,12 @@ def type_token_ratio(text: Column) -> Column:
     ).otherwise(F.lit(1.0))
 
 
-def spread_rows(df: DataFrame, parallelism: int | None = None) -> DataFrame:
+def spread_rows(df: DataFrame) -> DataFrame:
     """Adaptive scan-spread for CPU-heavy per-row pipelines (the
     `_shingle_base` rule, factored out): if the frame currently has
     fewer partitions than the cluster has cores, round-robin
-    repartition it to `parallelism`; otherwise return it UNCHANGED.
+    repartition it to the default parallelism; otherwise return it
+    UNCHANGED.
 
     Why: a small parquet file is one row group, one row group is one
     scan task, and every regex/explode/gram stage stacked on that scan
@@ -518,8 +518,7 @@ def spread_rows(df: DataFrame, parallelism: int | None = None) -> DataFrame:
     `df.rdd.getNumPartitions()` has to plan the input, and under AQE
     planning executes every shuffle stage upstream of it, each as its own
     job."""
-    if parallelism is None:
-        parallelism = df.sparkSession.sparkContext.defaultParallelism
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= parallelism:
         return df
     # The repartition alone is NOT enough: the optimizer pushes filters

@@ -45,12 +45,12 @@ def _marker_count(s: str) -> int:
     return sum(s.count(m) for m in _MARKERS)
 
 
-def fix_mojibake(s: str, max_passes: int = 2) -> tuple[str, int]:
-    """(repaired, n_passes_applied). Each pass re-encodes cp1252
+def fix_mojibake(s: str) -> tuple[str, int]:
+    """(repaired, n_passes_applied), at most two passes. Each pass re-encodes cp1252
     (latin-1 fallback) and re-decodes UTF-8, accepted only when it
     strictly reduces the mojibake marker count."""
     applied = 0
-    for _ in range(max_passes):
+    for _ in range(2):
         before = _marker_count(s)
         if before == 0:
             break

@@ -199,14 +199,11 @@ def compute_max_counts(df: DataFrame, mapping: TableMapping) -> dict[tuple[str, 
     return out
 
 
-def augmented_columns(
-    df: DataFrame, mapping: TableMapping, max_counts: dict | None = None
-) -> list[AugmentedColumn]:
+def augmented_columns(df: DataFrame, mapping: TableMapping) -> list[AugmentedColumn]:
     """The static augmented column set: base columns plus one column per
     index assignment with at least one real index."""
     record, schema = _record_struct(df)
-    if max_counts is None:
-        max_counts = compute_max_counts(df, mapping)
+    max_counts = compute_max_counts(df, mapping)
 
     out: list[AugmentedColumn] = []
     for cm in mapping.columns:

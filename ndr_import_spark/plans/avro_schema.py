@@ -39,7 +39,7 @@ def columns_from_avsc(schema: dict) -> list[dict]:
     return columns
 
 
-def table_from_avsc(avsc_path: str, klass: str = "ExampleKlass") -> TableMapping:
+def table_from_avsc(avsc_path: str) -> TableMapping:
     """Scaffold an avro TableMapping from an .avsc schema file."""
     with open(avsc_path) as fh:
         schema = json.load(fh)
@@ -51,7 +51,7 @@ def table_from_avsc(avsc_path: str, klass: str = "ExampleKlass") -> TableMapping
             # reference builds the Ruby literal "/#{name}\z/"; the parsed
             # pattern form is the escaped name anchored at end-of-string
             "filename_pattern": RubyRegexp(re.escape(file_name) + "\\z"),
-            "klass": klass,
+            "klass": "ExampleKlass",
             "format": "avro",
             "header_lines": 1,
             "footer_lines": 0,

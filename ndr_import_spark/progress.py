@@ -43,12 +43,10 @@ class ProgressNotifier:
             self.on_finished()
 
 
-def observe_records(
-    df: DataFrame, name: str = "records"
-) -> tuple[DataFrame, Observation]:
+def observe_records(df: DataFrame) -> tuple[DataFrame, Observation]:
     """Attach a record/error count observation — collected as a side effect
     of the caller's own action, NO extra job."""
-    obs = Observation(name)
+    obs = Observation("records")
     observed = df.observe(
         obs,
         F.count(F.lit(1)).alias("n_records"),

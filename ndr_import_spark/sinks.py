@@ -45,25 +45,21 @@ def iter_records(
 def write_records(
     records: DataFrame,
     path: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
     partition_by: tuple[str, ...] = ("klass",),
 ) -> None:
     """Partitioned columnar sink — klass partitioning gives downstream
     per-entity consumers partition pruning for free."""
-    writer = records.write.mode(mode).format(fmt)
+    writer = records.write.mode("overwrite").format("parquet")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(path)
 
 
-def write_errors(
-    records: DataFrame, path: str, fmt: str = "parquet", mode: str = "overwrite"
-) -> None:
+def write_errors(records: DataFrame, path: str) -> None:
     """Quarantine sink: rows whose `_errors` channel is non-empty (the
     at-scale alternative to strict raise-on-first-error)."""
     errs = records.filter(F.size(F.col("_errors")) > 0)
-    errs.write.mode(mode).format(fmt).save(path)
+    errs.write.mode("overwrite").format("parquet").save(path)
 
 
 def write_bucketed(
@@ -72,8 +68,6 @@ def write_bucketed(
     bucket_by: tuple[str, ...],
     n_buckets: int = 32,
     sort_by: tuple[str, ...] = (),
-    fmt: str = "parquet",
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed managed-table sink: co-locates rows by ``bucket_by`` so
     later equi-joins/aggregations on those keys run EXCHANGE-FREE (both
@@ -82,7 +76,9 @@ def write_bucketed(
     standard layout for a 100 TB fact table joined repeatedly on its
     key). Spark bucketing requires saveAsTable (bucket metadata lives in
     the catalog, not the files)."""
-    writer = df.write.mode(mode).format(fmt).bucketBy(n_buckets, *bucket_by)
+    writer = (
+        df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, *bucket_by)
+    )
     if sort_by:
         writer = writer.sortBy(*sort_by)
     writer.saveAsTable(table)
@@ -93,8 +89,6 @@ def write_sorted(
     path: str,
     sort_by: tuple[str, ...],
     n_files: int | None = None,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
 ) -> None:
     """Data-skipping layout sink: range-partition + sort rows by
     ``sort_by`` before writing, so each parquet row group covers a
@@ -117,4 +111,4 @@ def write_sorted(
         if n_files
         else df.repartitionByRange(*cols)
     )
-    ranged.sortWithinPartitions(*cols).write.mode(mode).format(fmt).save(path)
+    ranged.sortWithinPartitions(*cols).write.mode("overwrite").parquet(path)

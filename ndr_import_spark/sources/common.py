@@ -92,7 +92,7 @@ def attach_row_index(df: DataFrame) -> DataFrame:
     )
 
 
-def probe_encoding(path: str, default: str = "UTF-8") -> str:
+def probe_encoding(path: str) -> str:
     """Bounded-prefix encoding probe (vs the reference's full extra parse pass,
     helpers/file/delimited.rb:65-88 — unaffordable at 100 TB).
 
@@ -103,7 +103,7 @@ def probe_encoding(path: str, default: str = "UTF-8") -> str:
         with open(path, "rb") as fh:
             prefix = fh.read(1 << 20)
     except OSError:
-        return default
+        return "UTF-8"
     if prefix.startswith(b"\xff\xfe"):
         return "UTF-16LE"
     if prefix.startswith(b"\xfe\xff"):

@@ -240,13 +240,10 @@ def decrypt_workbook_stream(stream: bytes, password: str) -> bytes:
     return bytes(out)
 
 
-def encrypt_workbook_stream(
-    stream: bytes,
-    password: str,
-    scheme: str = "std",
-    salt: bytes = b"\x01" * 16,
-    key_bits: int = 128,
-) -> bytes:
+_FIXTURE_SALT = b"\x01" * 16
+
+
+def encrypt_workbook_stream(stream: bytes, password: str, scheme: str = "std") -> bytes:
     """Inverse of `decrypt_workbook_stream` for fixture generation: insert
     a FilePass record after the first BOF and encrypt the stream per the
     same spec rules. RC4 is symmetric, so this exercises the exact
@@ -255,21 +252,21 @@ def encrypt_workbook_stream(
     if bof_id != 0x0809:
         raise XlsCryptoError("stream must start with BOF")
     if scheme == "std":
-        block_key = _std_block_key(password, salt)
+        block_key = _std_block_key(password, _FIXTURE_SALT)
         rc4 = RC4(block_key(0))
         verifier = bytes(range(16))
         enc_verifier = rc4.crypt(verifier)
         enc_hash = rc4.crypt(hashlib.md5(verifier).digest())
-        body = struct.pack("<HHH", 1, 1, 1) + salt + enc_verifier + enc_hash
+        body = struct.pack("<HHH", 1, 1, 1) + _FIXTURE_SALT + enc_verifier + enc_hash
     elif scheme == "capi":
-        block_key = _capi_block_key(password, salt, key_bits)
+        block_key = _capi_block_key(password, _FIXTURE_SALT, 128)
         rc4 = RC4(block_key(0))
         verifier = bytes(range(16))
         enc_verifier = rc4.crypt(verifier)
         enc_hash = rc4.crypt(hashlib.sha1(verifier).digest())
         csp = "Microsoft Base Cryptographic Provider v1.0\x00".encode("utf-16-le")
         header = (
-            struct.pack("<IIIIII", 0, 0, 0x6801, 0x8004, key_bits, 1)
+            struct.pack("<IIIIII", 0, 0, 0x6801, 0x8004, 128, 1)
             + b"\x00" * 8
             + csp
         )
@@ -278,8 +275,8 @@ def encrypt_workbook_stream(
             + struct.pack("<HH", 2, 2)  # vMajor=2 vMinor=2 (CryptoAPI)
             + struct.pack("<I", len(header))
             + header
-            + struct.pack("<I", len(salt))
-            + salt
+            + struct.pack("<I", len(_FIXTURE_SALT))
+            + _FIXTURE_SALT
             + enc_verifier
             + struct.pack("<I", 20)
             + enc_hash

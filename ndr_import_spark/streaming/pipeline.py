@@ -35,11 +35,7 @@ def _cells_schema(n_cols: int) -> T.StructType:
 
 
 def stream_tables(
-    spark: SparkSession,
-    path: str,
-    fmt: str,
-    mapping: TableMapping,
-    options: dict | None = None,
+    spark: SparkSession, path: str, fmt: str, mapping: TableMapping
 ) -> DataFrame:
     """readStream wrapper → the compiler's cells contract
     (source_file, row_index, cells array<string>).
@@ -48,14 +44,15 @@ def stream_tables(
     dependent mapping features are rejected in `stream_records`). The
     declared mapping supplies the schema — no inference job on a stream.
     """
-    options = dict(options or {})
     n = len(mapping.columns)
     reader = spark.readStream
     if fmt in ("csv", "delimited"):
-        sep = options.pop("col_sep", mapping.delimiter or ",")
         df = (
             reader.schema(_cells_schema(n))
-            .options(sep=sep, header=str(bool(mapping.header_lines)).lower(), **options)
+            .options(
+                sep=mapping.delimiter or ",",
+                header=str(bool(mapping.header_lines)).lower(),
+            )
             .csv(path)
         )
         cells = F.array(*[F.col(f"c{i}").cast("string") for i in range(n)])
@@ -63,10 +60,10 @@ def stream_tables(
         names = [c.column if isinstance(c.column, str) else f"c{i}"
                  for i, c in enumerate(mapping.columns)]
         schema = T.StructType([T.StructField(nm, T.StringType()) for nm in names])
-        df = reader.schema(schema).options(**options).json(path)
+        df = reader.schema(schema).json(path)
         cells = F.array(*[F.col(nm).cast("string") for nm in names])
     elif fmt in ("txt", "text"):
-        df = reader.options(**options).text(path)
+        df = reader.text(path)
         cells = F.array(F.col("value"))
     else:
         raise MappingError(f"Streaming not supported for format: {fmt}")
@@ -78,9 +75,7 @@ def stream_tables(
     )
 
 
-def stream_records(
-    mapping: TableMapping, cells_stream: DataFrame, strict: bool = False
-) -> DataFrame:
+def stream_records(mapping: TableMapping, cells_stream: DataFrame) -> DataFrame:
     """Compiled record pipeline over a streaming cells DataFrame.
 
     Rejects order-dependent mapping features (no stable order on a stream):
@@ -95,45 +90,34 @@ def stream_records(
         raise MappingError("footer_lines is order-dependent; batch only")
     if mapping.row_identifier == "index":
         raise MappingError("row_identifier: index is order-dependent; use uuid")
-    return compiler.compile_records(mapping, cells_stream, strict=strict)
+    return compiler.compile_records(mapping, cells_stream, strict=False)
 
 
-def windowed_stats(
-    events: DataFrame,
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-    window_duration: str = "1 hour",
-    group_cols: tuple[str, ...] = ("event_type",),
-    value_col: str = "value",
-) -> DataFrame:
-    """Watermarked tumbling-window aggregation — late rows beyond the
+def windowed_stats(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+    """Watermarked 1-hour tumbling-window count and ``value`` sum per
+    ``event_type``, windowed on ``ts`` — late rows beyond the
     watermark are dropped and window state is reclaimed (bounded state at
     100 TB/day stream rates)."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration), *group_cols)
+        events.withWatermark("ts", watermark)
+        .groupBy(F.window(F.col("ts"), "1 hour"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col(value_col).cast("double")).alias("sum_value"),
+            F.sum(F.col("value").cast("double")).alias("sum_value"),
         )
         .select(
             F.col("window.start").alias("window_start"),
             F.col("window.end").alias("window_end"),
-            *group_cols,
+            "event_type",
             "n",
             "sum_value",
         )
     )
 
 
-def stateful_stream_dedup(
-    df: DataFrame,
-    key_col: str = "fingerprint",
-    id_col: str = "doc_id",
-    state_timeout_ms: int | None = None,
-) -> DataFrame:
-    """Streaming exact-dedup with keyed state: the first document seen per
-    `key_col` (content fingerprint) is emitted, every later duplicate —
+def stateful_stream_dedup(df: DataFrame) -> DataFrame:
+    """Streaming exact-dedup with keyed state: the first document (min
+    ``doc_id``) seen per ``fingerprint`` is emitted, every later duplicate —
     within or across micro-batches — is dropped. The custom-stateful
     counterpart of the batch `operators.dedup.exact_duplicates` for a
     continuously arriving corpus.
@@ -142,18 +126,15 @@ def stateful_stream_dedup(
     keyed state): one hash shuffle on the fingerprint, then per-key state
     is a single boolean. Within a micro-batch the winner is the min id
     (arrival order inside a batch is not deterministic; min is). At
-    stream scale the state store grows one entry per distinct document —
-    set `state_timeout_ms` (processing-time timeout) to reclaim entries
-    for keys idle longer than the window in which re-crawls realistically
-    arrive; a re-seen key after reclaim re-emits, which for dedup is the
-    standard bounded-state trade.
+    stream scale the state store grows one entry per distinct document:
+    there is no state timeout, so a key is never re-emitted.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     out_schema = T.StructType(
         [
-            T.StructField(key_col, T.StringType()),
-            T.StructField(id_col, T.LongType()),
+            T.StructField("fingerprint", T.StringType()),
+            T.StructField("doc_id", T.LongType()),
         ]
     )
     state_schema = T.StructType([T.StructField("seen", T.BooleanType())])
@@ -165,25 +146,20 @@ def stateful_stream_dedup(
         best = None
         for pdf in pdfs:
             if len(pdf):
-                m = pdf[id_col].min()
+                m = pdf["doc_id"].min()
                 best = m if best is None else min(best, m)
-        if state_timeout_ms is not None:
-            state.setTimeoutDuration(state_timeout_ms)
         if not state.exists and best is not None:
             state.update((True,))
             import pandas as pd
 
-            yield pd.DataFrame({key_col: [key[0]], id_col: [int(best)]})
+            yield pd.DataFrame({"fingerprint": [key[0]], "doc_id": [int(best)]})
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
     return (
-        df.select(key_col, F.col(id_col).cast("long").alias(id_col))
-        .groupBy(key_col)
-        .applyInPandasWithState(dedup_fn, out_schema, state_schema, "append", timeout)
+        df.select("fingerprint", F.col("doc_id").cast("long").alias("doc_id"))
+        .groupBy("fingerprint")
+        .applyInPandasWithState(
+            dedup_fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        )
     )
 
 
@@ -194,12 +170,7 @@ def stateful_stream_dedup(
 _EVAL_SET_MAX_ROWS = 1_000_000
 
 
-def stream_decontaminate(
-    doc_stream: DataFrame,
-    eval_set,
-    n: int = 5,
-    text_col: str = "text",
-) -> DataFrame:
+def stream_decontaminate(doc_stream: DataFrame, eval_set, n: int = 5) -> DataFrame:
     """Drop streaming documents sharing any word `n`-gram with a STATIC
     evaluation set — the continuous-ingestion twin of
     `operators.corpus.ngram_decontaminate`.
@@ -213,7 +184,7 @@ def stream_decontaminate(
     nested loops). Same over-flag-only md5 collision semantics as the
     batch operator.
 
-    `eval_set` may be a static DataFrame with `text_col` or an iterable
+    `eval_set` may be a static DataFrame with a ``text`` column or an iterable
     of strings. The eval frame is collected to the driver, so its size is
     GUARDED: more than `_EVAL_SET_MAX_ROWS` rows raises ValueError up
     front (a caller passing a corpus-sized frame as the "eval set" would
@@ -235,7 +206,7 @@ def stream_decontaminate(
         # separate count-then-collect would pay an expensive upstream
         # computation twice), and never a full count of an unbounded input
         rows = (
-            eval_set.select(text_col).limit(_EVAL_SET_MAX_ROWS + 1).collect()
+            eval_set.select("text").limit(_EVAL_SET_MAX_ROWS + 1).collect()
         )
         if len(rows) > _EVAL_SET_MAX_ROWS:
             raise ValueError(
@@ -256,35 +227,29 @@ def stream_decontaminate(
     def clean(batches: _It) -> _It:
         for pdf in batches:
             mask = [
-                not (grams_of(t) & eval_grams) for t in pdf[text_col]
+                not (grams_of(t) & eval_grams) for t in pdf["text"]
             ]
             yield pdf[mask]
 
     return doc_stream.mapInPandas(clean, schema)
 
 
-def session_window_stats(
-    events: DataFrame,
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "10 minutes",
-    key_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
+def session_window_stats(events: DataFrame) -> DataFrame:
     """Native session-window gap sessionization — the streaming twin of the
-    batch prefix-sum sessionizer. State per open session, closed `gap`
-    after the last event (plus watermark slack)."""
+    batch prefix-sum sessionizer over (user_id, ts, value). State per open
+    session, closed 30 minutes after the last event (plus 10 minutes of
+    watermark slack)."""
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap), F.col(key_col))
+        events.withWatermark("ts", "10 minutes")
+        .groupBy(F.session_window(F.col("ts"), "30 minutes"), F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col(value_col).cast("double")).alias("total_value"),
+            F.sum(F.col("value").cast("double")).alias("total_value"),
         )
         .select(
             F.col("session_window.start").alias("session_start"),
             F.col("session_window.end").alias("session_end"),
-            key_col,
+            "user_id",
             "n_events",
             "total_value",
         )
@@ -294,12 +259,7 @@ def session_window_stats(
 def stream_neardup_probe(
     doc_stream: DataFrame,
     index_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 16,
-    bands: int = 4,
     verify_threshold: float = 0.5,
-    shingle_n: int = 5,
 ) -> DataFrame:
     """Continuously probe a stored `dedup.write_neardup_index` artifact
     with a document STREAM: each arriving document's band keys
@@ -308,11 +268,13 @@ def stream_neardup_probe(
     state store), append-mode compatible.
 
     A pair that matches in several bands emits once PER MATCHING BAND
-    (bounded duplication <= `bands`): collapsing it in-stream would need
+    (bounded duplication <= 4 bands): collapsing it in-stream would need
     aggregation state, so the consumer dedups downstream (or runs the
     batch `probe_neardup_index` inside foreachBatch when exact-once
     pairs matter). Same over-flag-only md5 semantics as the batch path."""
     from ndr_import_spark.operators.dedup import (
+        INDEX_K,
+        INDEX_SHINGLE_N,
         _band_keys,
         _check_index_params,
         _shingles_from_norm,
@@ -322,7 +284,7 @@ def stream_neardup_probe(
     from ndr_import_spark.operators.textstats import normalize_text
 
     spark = doc_stream.sparkSession
-    _check_index_params(spark, index_path, k, bands, shingle_n)
+    _check_index_params(spark, index_path, INDEX_K, 4, INDEX_SHINGLE_N)
     old_banded = spark.read.parquet(f"{index_path}/bands")
     old_sets = spark.read.parquet(f"{index_path}/sets").select(
         F.col("_id").alias("old_id"), F.col("_hs").alias("_shb")
@@ -332,16 +294,16 @@ def stream_neardup_probe(
     # captured inside the shingling lambda and re-run once per shingle
     # (expression-tree duplication is execution-mode-independent)
     normed = doc_stream.select(
-        F.col(id_col).alias("_id"),
-        F.explode(F.array(normalize_text(F.col(text_col)))).alias("_norm"),
+        F.col("doc_id").alias("_id"),
+        F.explode(F.array(normalize_text(F.col("text")))).alias("_norm"),
     )
     hashed = normed.select(
         "_id",
         F.array_distinct(
-            shingle_hashes(_shingles_from_norm(F.col("_norm"), shingle_n))
+            shingle_hashes(_shingles_from_norm(F.col("_norm"), INDEX_SHINGLE_N))
         ).alias("_hs"),
     )
-    banded = _band_keys(hashed, k, bands, "mh", carry=["_hs"])
+    banded = _band_keys(hashed, INDEX_K, 4, "mh", carry=["_hs"])
     candidates = banded.alias("l").join(
         old_banded.alias("r"), ["band", "key"]
     ).select(
@@ -395,13 +357,7 @@ def stream_warc_ingest(
     )
 
 
-def stream_cluster_assign(
-    vec_stream: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 127,
-) -> DataFrame:
+def stream_cluster_assign(vec_stream: DataFrame, centroids: DataFrame) -> DataFrame:
     """Continuously assign arriving embeddings to a STANDING centroid
     table — the (cid, d, c) frame `clustering.kmeans_centroids` trains
     and a batch job persists — e.g. routing fresh documents into
@@ -420,7 +376,7 @@ def stream_cluster_assign(
     assign, bit-for-bit."""
     from pyspark.sql import functions as F
 
-    from ndr_import_spark.operators.clustering import argmin_chain
+    from ndr_import_spark.operators.clustering import KMEANS_SCALE, argmin_chain
 
     cent: dict[int, dict[int, int]] = {}
     for r in centroids.collect():
@@ -432,10 +388,10 @@ def stream_cluster_assign(
             "(got zero (cid, d, c) rows — did the training write fail?)"
         )
     qvec = F.transform(
-        F.col(vec_col),
-        lambda x: F.round(x.cast("double") * F.lit(float(scale))).cast("long"),
+        F.col("embedding"),
+        lambda x: F.round(x.cast("double") * F.lit(float(KMEANS_SCALE))).cast("long"),
     )
-    base = vec_stream.select(F.col(id_col), qvec.alias("_q"))
+    base = vec_stream.select(F.col("vec_id"), qvec.alias("_q"))
     dist_cols = []
     for cid in cids:
         cvec = [cent[cid][d] for d in sorted(cent[cid])]
@@ -445,19 +401,14 @@ def stream_cluster_assign(
             diff2, F.lit(0).cast("long"), lambda acc, x: acc + x
         )
         dist_cols.append(dist.alias(f"d{cid}"))
-    scored = base.select(id_col, *dist_cols)
+    scored = base.select("vec_id", *dist_cols)
     best, chain = argmin_chain(cids)
     return scored.select(
-        id_col, chain.cast("int").alias("cid"), best.alias("dist")
+        "vec_id", chain.cast("int").alias("cid"), best.alias("dist")
     )
 
 
-def stream_phrase_flags(
-    doc_stream: DataFrame,
-    phrases: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def stream_phrase_flags(doc_stream: DataFrame, phrases: list[str]) -> DataFrame:
     """Flag arriving documents that contain any of a standing banned /
     boilerplate phrase list — the streaming admission-control twin of
     `retrieval.phrase_search`.
@@ -482,13 +433,13 @@ def stream_phrase_flags(
     if not parsed:
         raise ValueError("stream_phrase_flags needs at least one phrase")
     stream = F.concat(
-        F.lit(" "), F.concat_ws(" ", tokens(F.col(text_col))), F.lit(" ")
+        F.lit(" "), F.concat_ws(" ", tokens(F.col("text"))), F.lit(" ")
     )
     flags = [
         F.contains(stream, F.lit(f" {canon} ")).alias(f"hit_{i}")
         for i, (_p, canon) in enumerate(parsed)
     ]
-    base = doc_stream.select(F.col(id_col), *flags)
+    base = doc_stream.select(F.col("doc_id"), *flags)
     any_hit = None
     for i in range(len(parsed)):
         c = F.col(f"hit_{i}")
@@ -500,7 +451,7 @@ def stream_phrase_flags(
         ])
     )
     return base.select(
-        id_col,
+        "doc_id",
         any_hit.alias("flagged"),
         matched.alias("matched_phrases"),
     )
@@ -511,7 +462,6 @@ def stream_cms_cells(
     key_col: str,
     depth: int = 4,
     width: int = 256,
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Maintain a Count-Min sketch CONTINUOUSLY over a key stream — the
     stateful-streaming twin of `sketches.cms_build`.
@@ -531,7 +481,7 @@ def stream_cms_cells(
 
     rows = key_stream.select(
         F.col(key_col).alias("_k"),
-        (F.col(weight_col) if weight_col else F.lit(1)).alias("_w"),
+        F.lit(1).alias("_w"),
         F.explode(F.array(*[F.lit(r) for r in range(depth)])).alias("r"),
     )
     col = _cms_cell(F.col("r"), F.col("_k"), width)
@@ -542,11 +492,7 @@ def stream_cms_cells(
     )
 
 
-def stream_media_metadata(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int = 64,
-) -> DataFrame:
+def stream_media_metadata(spark: SparkSession, path: str) -> DataFrame:
     """Continuous media-ingest metadata: a STREAMING twin of
     `multimodal.extract_media_metadata` — media files landing in `path`
     are probed (MP3 frame walk, Ogg pages, MP4 boxes) as micro-batches.
@@ -570,7 +516,7 @@ def stream_media_metadata(
     files = (
         spark.readStream.format("binaryFile")
         .schema(binary_schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .option("maxFilesPerTrigger", "64")
         .load(path)
     )
     # media_id: stable 60-bit hash of the file path (streaming sources
@@ -584,11 +530,7 @@ def stream_media_metadata(
     return extract_media_metadata(payloads)
 
 
-def stream_audio_tags(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int = 64,
-) -> DataFrame:
+def stream_audio_tags(spark: SparkSession, path: str) -> DataFrame:
     """Continuous audio-tag ingest (r11): the streaming twin of
     `multimodal.audio_tag_table` over the binaryFile micro-batch
     source, so tag triage (title/artist routing, has_picture album-art
@@ -611,7 +553,7 @@ def stream_audio_tags(
     files = (
         spark.readStream.format("binaryFile")
         .schema(binary_schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .option("maxFilesPerTrigger", "64")
         .load(path)
     )
     from ndr_import_spark.operators.textstats import md5_long
@@ -623,11 +565,7 @@ def stream_audio_tags(
     return audio_tag_table(payloads)
 
 
-def stream_audio_fingerprints(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int = 64,
-) -> DataFrame:
+def stream_audio_fingerprints(spark: SparkSession, path: str) -> DataFrame:
     """Continuous cross-codec audio dedup keys (r11): the streaming
     twin of `multimodal.audio_fingerprint_table` over the binaryFile
     micro-batch source. Audio landing in `path` yields its two-tier
@@ -651,7 +589,7 @@ def stream_audio_fingerprints(
     files = (
         spark.readStream.format("binaryFile")
         .schema(binary_schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .option("maxFilesPerTrigger", "64")
         .load(path)
     )
     from ndr_import_spark.operators.textstats import md5_long
@@ -663,11 +601,7 @@ def stream_audio_fingerprints(
     return audio_fingerprint_table(payloads)
 
 
-def stream_audio_quality(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int = 64,
-) -> DataFrame:
+def stream_audio_quality(spark: SparkSession, path: str) -> DataFrame:
     """Continuous audio quality triage (r11): the streaming twin of
     `multimodal.audio_quality_table` over the binaryFile micro-batch
     source — clipped / silent / DC-offset files get their routing
@@ -688,7 +622,7 @@ def stream_audio_quality(
     files = (
         spark.readStream.format("binaryFile")
         .schema(binary_schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .option("maxFilesPerTrigger", "64")
         .load(path)
     )
     from ndr_import_spark.operators.textstats import md5_long
@@ -761,11 +695,7 @@ def stream_unicode_clean(
     return clean_unicode(docs_stream, text_col=text_col, id_col=id_col)
 
 
-def stream_scrub_images(
-    media_stream: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-) -> DataFrame:
+def stream_scrub_images(media_stream: DataFrame) -> DataFrame:
     """Streaming image-side PII scrub: strip EXIF/GPS/ICC from JPEG
     payloads — and (r8) EXIF/XMP/ICCP chunks from WebP containers,
     lossy VP8 included — as they arrive (multimodal.scrub_image_metadata
@@ -773,16 +703,10 @@ def stream_scrub_images(
     unchanged)."""
     from ndr_import_spark.operators.multimodal import scrub_image_metadata
 
-    return scrub_image_metadata(
-        media_stream, payload_col=payload_col, id_col=id_col
-    )
+    return scrub_image_metadata(media_stream)
 
 
-def stream_log2_histogram(
-    value_stream: DataFrame,
-    value_col: str,
-    scale: int = 100,
-) -> DataFrame:
+def stream_log2_histogram(value_stream: DataFrame, value_col: str) -> DataFrame:
     """Maintain the power-of-two histogram sketch CONTINUOUSLY — the
     stateful-streaming twin of `sketches.log2_histogram` (r8). Same
     shape as stream_cms_cells: the sketch is a combinable aggregate, so
@@ -799,7 +723,9 @@ def stream_log2_histogram(
     stream and batch sketches diverge bin-for-bin."""
     from pyspark.sql import functions as F
 
-    units = F.floor(F.col(value_col) * scale).cast("long")
+    from ndr_import_spark.operators.sketches import LOG2_HIST_SCALE
+
+    units = F.floor(F.col(value_col) * LOG2_HIST_SCALE).cast("long")
     return (
         value_stream.select(units.alias("_u"))
         .where(F.col("_u") >= 1)
@@ -811,11 +737,7 @@ def stream_log2_histogram(
     )
 
 
-def stream_audio_triage(
-    media_stream: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-) -> DataFrame:
+def stream_audio_triage(media_stream: DataFrame) -> DataFrame:
     """Streaming audio triage (r10): route arriving audio payloads by
     structural integrity + tags WITHOUT decoding PCM — the streaming
     twin of mp3_structure_table + audio_tag_table, fused into ONE
@@ -852,5 +774,4 @@ def stream_audio_triage(
         media_stream, one,
         "media_id long, verdict string, duration_ms double, "
         "title string, route string",
-        id_col, payload_col,
     )

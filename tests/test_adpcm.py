@@ -231,7 +231,6 @@ class TestWavContainer:
     def test_multimodal_audio_features_dispatch(self, spark):
         from ndr_import_spark.operators import multimodal as MM
 
-        MM.set_audio_decoder(None)
         blocks = adpcm.ima_block(0, 0, [1] * 16)
         wav = adpcm.encode_wav_ima(11025, blocks, 1, 12)
         df = spark.createDataFrame(

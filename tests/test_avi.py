@@ -97,7 +97,6 @@ class TestSparkIntegration:
     def test_extract_video_features_stdlib_default(self, spark):
         from ndr_import_spark.operators import multimodal as MM
 
-        MM.set_video_decoder(None)
         rows = []
         for i in range(6):
             frames = [_gray_frame((i * 40 + j * 10) % 256) for j in range(3)]
@@ -116,16 +115,14 @@ class TestSparkIntegration:
     def test_injected_video_decoder_wins(self, spark):
         from ndr_import_spark.operators import multimodal as MM
 
-        try:
-            MM.set_video_decoder(lambda b: (1, 2, 3, 4, [0.5]))
-            media = spark.createDataFrame(
-                [(0, "video", "video/fake", None, None, None, bytearray(b"xx"))],
-                MM.MEDIA_SCHEMA,
-            )
-            row = MM.extract_video_features(media).collect()[0]
-            assert (row["n_frames"], row["width"], row["height"]) == (1, 2, 3)
-        finally:
-            MM.set_video_decoder(None)
+        media = spark.createDataFrame(
+            [(0, "video", "video/fake", None, None, None, bytearray(b"xx"))],
+            MM.MEDIA_SCHEMA,
+        )
+        row = MM.extract_video_features(
+            media, decoder=lambda b: (1, 2, 3, 4, [0.5])
+        ).collect()[0]
+        assert (row["n_frames"], row["width"], row["height"]) == (1, 2, 3)
 
 
 class TestReviewRegressions:

@@ -28,10 +28,14 @@ import sys
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession
 import __spark_entry__ as e
-spark = (SparkSession.builder.master("local[4]")
-         .config("spark.sql.shuffle.partitions", "4")
-         .config("spark.ui.enabled", "false")
-         .config("spark.ui.showConsoleProgress", "false").getOrCreate())
+from ndr_import_spark import recommended_session_conf
+builder = (SparkSession.builder.master("local[4]")
+           .config("spark.sql.shuffle.partitions", "4")
+           .config("spark.ui.enabled", "false")
+           .config("spark.ui.showConsoleProgress", "false"))
+for key, value in recommended_session_conf().items():
+    builder = builder.config(key, value)
+spark = builder.getOrCreate()
 qs = e.queries()
 for name in ("c4_clean", "crawl_pipeline", "training_pipeline"):
     qs[name](spark, "/root/testdata/sf0.001").collect()

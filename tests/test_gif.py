@@ -200,7 +200,6 @@ class TestSparkIntegration:
             [(1, "image", "image/gif", None, None, None, bytearray(payload))],
             MM.MEDIA_SCHEMA,
         )
-        MM.set_image_decoder(None)
         row = MM.extract_features(media).collect()[0]
         assert (row["width"], row["height"]) == (10, 8)
         assert len(row["feature"]) == 16
@@ -302,20 +301,3 @@ class TestAnimation:
         frames = [(4, bytes([9, 9, 9]) * 16), (4, bytes([200, 0, 0]) * 16)]
         w, h, ch, px = decode_gif(encode_gif_animation(4, 4, frames))
         assert (w, h, ch, px) == (4, 4, 3, frames[0][1])
-
-
-def test_gif_animation_query_preserves_registered_decoder(spark):
-    """r8 ADVICE: q_gif_animation used to clobber any session-registered
-    video decoder via set_video_decoder(None); the stdlib-dispatch choice
-    now threads through extract_video_features(decoder=None)."""
-    import __spark_entry__ as entry
-    from ndr_import_spark.operators import multimodal as MM
-
-    sentinel = lambda b: (1, 1, 1, 0, [0.0])  # noqa: E731
-    MM.set_video_decoder(sentinel)
-    try:
-        df = entry.queries()["gif_animation"](spark, "/root/testdata/sf0.001")
-        assert df.count() > 0
-        assert MM._video_decoder is sentinel
-    finally:
-        MM.set_video_decoder(None)

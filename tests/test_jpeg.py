@@ -214,7 +214,6 @@ class TestSparkIntegration:
     def test_extract_features_mixed_png_jpeg(self, spark):
         from ndr_import_spark.operators import multimodal as MM
 
-        MM.set_image_decoder(None)  # stdlib codecs must dispatch by magic
         out = MM.extract_features(self._media(spark)).collect()
         assert len(out) == 12
         by_id = {r["media_id"]: r for r in out}

@@ -136,7 +136,6 @@ class TestSparkPngDecode:
     def test_extract_features_real_png_no_injection(self, spark):
         from ndr_import_spark.operators import multimodal as MM
 
-        MM.set_image_decoder(None)  # ensure the default (PNG) path runs
         rows = []
         for i in range(12):
             w, h = 4 + i % 3, 3 + i % 4
@@ -156,7 +155,6 @@ class TestSparkPngDecode:
     def test_non_png_without_decoder_raises(self, spark):
         from ndr_import_spark.operators import multimodal as MM
 
-        MM.set_image_decoder(None)
         df = spark.createDataFrame(
             [(1, "image", "image/jpeg", 2, 2, 0, bytearray(b"\xff\xd8notpng"))],
             MM.MEDIA_SCHEMA,
@@ -170,11 +168,9 @@ class TestAudioAndFramePlan:
         from ndr_import_spark.operators import multimodal as mm
 
         df = mm.synth_media_df(spark, n=9).filter("kind = 'audio'")
-        mm.set_audio_decoder(mm.deterministic_fake_audio_decoder)
-        try:
-            rows = mm.extract_audio_features(df).collect()
-        finally:
-            mm.set_audio_decoder(None)
+        rows = mm.extract_audio_features(
+            df, decoder=mm.deterministic_fake_audio_decoder
+        ).collect()
         assert len(rows) == 3
         for r in rows:
             assert r["sample_rate"] == 16000
@@ -186,8 +182,7 @@ class TestAudioAndFramePlan:
         from ndr_import_spark.operators import multimodal as mm
 
         df = mm.synth_media_df(spark, n=3).filter("kind = 'audio'")
-        mm.set_audio_decoder(None)
-        with pytest.raises(Exception, match="set_audio_decoder"):
+        with pytest.raises(Exception, match="needs an injected decoder"):
             mm.extract_audio_features(df).collect()
 
     def test_frame_sample_plan_fanout(self, spark):
@@ -254,7 +249,6 @@ class TestNullPayload:
             ],
             mm.MEDIA_SCHEMA,
         )
-        mm.set_image_decoder(None)
         rows = {r["media_id"]: r for r in mm.extract_features(df).collect()}
         assert rows[1]["width"] == 2 and rows[1]["feature"] is not None
         assert rows[2]["width"] is None and rows[2]["feature"] is None

@@ -150,7 +150,6 @@ def test_grid_features_ramp():
 def test_spark_dispatch_and_resize_roundtrip(spark):
     from ndr_import_spark.operators import multimodal as MM
 
-    MM.set_image_decoder(None)
     rgb = bytes(v for i in range(16) for v in (i, i, i))
     rows = [(0, "image", "image/tiff", None, None, None,
              bytearray(encode_tiff(4, 4, rgb)))]

@@ -218,7 +218,6 @@ class TestSparkIntegration:
     def test_extract_audio_features_stdlib_default(self, spark):
         from ndr_import_spark.operators import multimodal as MM
 
-        MM.set_audio_decoder(None)  # force stdlib WAV dispatch
         rows = []
         for i in range(12):
             amp = (i - 6) / 8.0
@@ -240,19 +239,17 @@ class TestSparkIntegration:
     def test_injected_decoder_still_wins(self, spark):
         from ndr_import_spark.operators import multimodal as MM
 
-        try:
-            MM.set_audio_decoder(MM.deterministic_fake_audio_decoder)
-            payload = encode_wav(8000, np.zeros(16), bits=16)
-            media = spark.createDataFrame(
-                [(0, "audio", "audio/wav", None, None, None, bytearray(payload))],
-                MM.MEDIA_SCHEMA,
-            )
-            row = MM.extract_audio_features(media).collect()[0]
-            # fake decoder: n_samples == byte length, rate pinned to 16 kHz
-            assert row["sample_rate"] == 16000
-            assert row["n_samples"] == len(payload)
-        finally:
-            MM.set_audio_decoder(None)
+        payload = encode_wav(8000, np.zeros(16), bits=16)
+        media = spark.createDataFrame(
+            [(0, "audio", "audio/wav", None, None, None, bytearray(payload))],
+            MM.MEDIA_SCHEMA,
+        )
+        row = MM.extract_audio_features(
+            media, decoder=MM.deterministic_fake_audio_decoder
+        ).collect()[0]
+        # fake decoder: n_samples == byte length, rate pinned to 16 kHz
+        assert row["sample_rate"] == 16000
+        assert row["n_samples"] == len(payload)
 
     def test_non_wav_without_decoder_raises(self, spark):
         from py4j.protocol import Py4JJavaError
@@ -260,7 +257,6 @@ class TestSparkIntegration:
 
         from ndr_import_spark.operators import multimodal as MM
 
-        MM.set_audio_decoder(None)
         media = spark.createDataFrame(
             [(0, "audio", "audio/mp3", None, None, None, bytearray(b"ID3 junk"))],
             MM.MEDIA_SCHEMA,

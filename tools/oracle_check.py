@@ -71,14 +71,17 @@ def main():
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
+    from ndr_import_spark import recommended_session_conf
 
-    spark = (
+    builder = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
     )
+    for key, value in recommended_session_conf().items():
+        builder = builder.config(key, value)
+    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
